@@ -1,10 +1,5 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated}
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -71,66 +66,9 @@ object Bench {
     line
   }
 
-  /** Infrastructure-cost breakout for the FULL-PRECISION file output:
-    * with ~190 queries the one-shot cold total is dominated by
-    * streaming-checkpoint I/O and stage-store builds, not query cost.
-    * These lists classify the queries billing each infrastructure
-    * class so a reader can subtract that cost without re-running
-    * anything; the stdout contract line is unchanged. Membership is by
-    * construction — a query bills the stream class iff its SparkEntry
-    * registration calls `EventStream.` directly (q275 routes through
-    * TextOps and bills staged) — and an EngineSpec test re-derives the
-    * set from the SparkEntry.scala registration source and asserts
-    * EQUALITY, so a new EventStream-backed query that is not added
-    * here fails the suite instead of silently misclassifying cost. */
-  private[graft] val streamQueries: Set[String] = Set(
-    "q33_stream_tumbling", "q131_stream_sessions", "q150_stream_enrich",
-    "q158_stream_interval_join", "q159_stream_upsert", "q165_stream_dedup",
-    "q172_stream_sliding", "q174_stream_stateful", "q176_session_window",
-    "q187_stream_ohlc",
-    // q260 also reads the staged q50 clusters, but a query bills ONE
-    // class — the stream checkpoint/drain is its dominant overhead
-    "q260_stream_dedup_lookup",
-    // round 15 (round-14 verdict): the four newest streaming surfaces
-    // were missing from this breakout, understating stream_s ~8-10 s
-    "q264_stream_heavy_hitters", "q287_stream_sprt",
-    "q288_stream_hh_scaled", "q289_stream_cms_hh")
-  private[graft] val stagedQueries: Set[String] = Set(
-    "q23_minhash", "q24_lsh_pairs", "q46_lsh_audit", "q50_dedup_clusters",
-    "q52_select_corpus", "q78_containment", "q86_edit_distance",
-    "q124_incremental_dedup", "q146_canonical_pick",
-    "q154_delete_propagation", "q160_crossmodal_dedup",
-    // round 11: the graph family reads the staged co-purchase edge list
-    "q189_triangles", "q194_triangle_sample", "q197_kcore",
-    "q225_bfs_hops", "q228_conn_comp", "q238_clustering_coeff",
-    "q239_link_predict", "q250_assortativity",
-    // round 12: the incremental-maintenance path reads its own staged
-    // old-corpus band/pair index
-    "q275_incremental_lsh",
-    // round 15: the calibration and the dedup eval read the staged
-    // verified pairs
-    "q257_minhash_calib", "q245_dedup_eval")
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_SHUFFLE overrides the shuffle width (default = cpus,
-    // the driver-contract setting). Exists for weak-scaling diagnosis:
-    // at 100x-replicated corpora a 32-partition shuffle puts ~100x the
-    // rows in each partition's working set, and separating that
-    // harness artifact from genuine operator growth needs a
-    // measured-at-wider-width data point (a cluster deployment sizes
-    // this to data, not to one host's cores; AQE then coalesces small
-    // stages back down)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
 
     // reproducible totals: point this run at a RUN-PRIVATE stage store
     // so it is reproducibly COLD (a stage surviving from a prior
@@ -184,21 +122,10 @@ object Bench {
     //      pressure (no cross-query DataFrame ever references another
     //      query's blocks — each fn builds its own plan);
     //  (b) a per-query stderr attribution line: GC-time delta (exact,
-    //      MX beans) and cached-block high-water (listener-fed like
-    //      graft.Probe — the listener bus is async, so a block update
-    //      can land one line late; attribution aid, not a contract).
-    val blockHw = TrieMap.empty[String, (Long, Long)]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
-        val u = e.blockUpdatedInfo
-        val id = u.blockId.name
-        if (id.startsWith("rdd_")) {
-          val prev = blockHw.getOrElse(id, (0L, 0L))
-          blockHw(id) =
-            (math.max(prev._1, u.memSize), math.max(prev._2, u.diskSize))
-        }
-      }
-    })
+    //      MX beans) and cached-block high-water (the Harness recorder,
+    //      read after draining the listener bus; attribution aid, not
+    //      a contract).
+    val rec = Harness.record(spark)
     def gcMs(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -206,7 +133,7 @@ object Bench {
     }
     val results = selected.map { case (name, fn) =>
       val gc0 = gcMs()
-      blockHw.clear()
+      rec.clear()
       var released = 0
       val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
       val times = (1 to reps).map { _ =>
@@ -238,8 +165,9 @@ object Bench {
           rdd.unpersist(blocking = false); released += 1
         }
       }
-      val hwMem = blockHw.values.map(_._1).sum / 1e6
-      val hwDisk = blockHw.values.map(_._2).sum / 1e6
+      Harness.drain(spark.sparkContext)
+      val hwMem = rec.blockHw.values.map(_._1).sum / 1e6
+      val hwDisk = rec.blockHw.values.map(_._2).sum / 1e6
       System.err.println(
         f"[bench] $name%-28s med=${times.sorted.apply((times.size - 1) / 2)}%7.2fs " +
           f"gc_ms=${gcMs() - gc0}%-6d released=$released%-3d " +
@@ -260,6 +188,8 @@ object Bench {
     // the scheme)
     def sumFor(names: Set[String]): Double =
       results.filter(r => names(r._1) && r._2 >= 0).map(_._2).sum
+    val streamQueries = SparkEntry.streamQueries.keySet
+    val stagedQueries = SparkEntry.stagedQueries.keySet
     val streamS = sumFor(streamQueries)
     val stagedS = sumFor(stagedQueries)
     def nameArr(names: Set[String]): String =

@@ -10,9 +10,8 @@ import graft.functions.{Hamming64, SimHash64, SubstrGramHashes, ZOrder2}
   * native expressions into any session at build time —
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)         // or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
+  * builder.withExtensions(new GraftExtensions)   // or
+  * builder.config("spark.sql.extensions", "graft.GraftExtensions")
   * }}}
   *
   * This is the deployment-grade registration path (cluster-wide via

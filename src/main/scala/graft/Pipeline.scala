@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 import graft.mart.Extracts
@@ -27,13 +27,7 @@ import graft.stg.Staging
 object Pipeline {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft_pipeline")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     import spark.implicits._
     val t0 = System.currentTimeMillis()
 
@@ -44,36 +38,10 @@ object Pipeline {
     val staged = ohlcv.filter($"Close".isNotNull)
     // upsert into the staging store (empty target on first run)
     val stgPath = s"$outDir/stg_ohlcv"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(stgPath)
-    val fresh = new org.apache.hadoop.fs.Path(s"$stgPath.new")
-    val bak = new org.apache.hadoop.fs.Path(s"$stgPath.bak")
-    // crash recovery: a previous run that died between its two swap
-    // renames leaves the live store missing and the .bak holding the
-    // only copy — restore it before reading, or the upsert history is
-    // silently lost (and the .bak deleted below)
-    if (!fs.exists(live) && fs.exists(bak))
-      fs.rename(bak, live)
-    val target = scala.util.Try(spark.read.parquet(stgPath))
+    val target = Staging.readStore(spark, stgPath, "staging store")
       .getOrElse(staged.limit(0))
-    Staging.upsertByNaturalKey(target, staged, Seq("Date"))
-      .write.mode(SaveMode.Overwrite).parquet(s"$stgPath.new")
-    // swap (parquet can't overwrite its own input): old → .bak first so
-    // a crash at any point leaves a recoverable copy, then new → live,
-    // then drop the .bak
-    fs.delete(bak, true)
-    if (fs.exists(live) && !fs.rename(live, bak))
-      throw new java.io.IOException(
-        s"staging swap failed: could not set aside $stgPath as $bak")
-    if (!fs.rename(fresh, live)) {
-      // rename signals failure by return value, not exception; restore
-      // the set-aside copy before failing
-      fs.rename(bak, live)
-      throw new java.io.IOException(
-        s"staging swap failed: could not rename $fresh to $stgPath")
-    }
-    fs.delete(bak, true)
+    Staging.publishStore(Staging.upsertByNaturalKey(target, staged, Seq("Date")),
+      stgPath, "staging store")
     val stg = spark.read.parquet(stgPath)
     Staging.reconcileAndLog(spark, s"$outDir/audit", "pipeline",
       "KC=F.csv", "stg_ohlcv", ohlcv, stg, t0)

@@ -1,12 +1,7 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main (not part of the driver contract): runs ONE
-  * SparkEntry query with a listener attached and prints
+  * SparkEntry query with the Harness recorder attached and prints
   *   - every job's wall time (the action-grain cost breakdown an
   *     iterative trace like q282 needs — each round's checkpoint,
   *     census count and aggregate is its own job), and
@@ -22,58 +17,21 @@ object Probe {
     require(args.length >= 2, "usage: Probe <sfDir> <query>")
     val sfDir = args(0)
     val q = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val blocks = TrieMap.empty[String, (Long, Long)]
-    val jobStart = TrieMap.empty[Int, Long]
-    val jobs = TrieMap.empty[Int, Long]
-    val jobDesc = TrieMap.empty[Int, String]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit = {
-        val u = e.blockUpdatedInfo
-        val id = u.blockId.name
-        if (id.startsWith("rdd_")) {
-          val prev = blocks.getOrElse(id, (0L, 0L))
-          blocks(id) =
-            (math.max(prev._1, u.memSize), math.max(prev._2, u.diskSize))
-        }
-      }
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobStart(e.jobId) = e.time
-        // name the job so a whale in the printout is identifiable:
-        // prefer the SQL-action description, fall back to the last
-        // stage's callsite (e.g. "count at Relational.scala:2603")
-        val d = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .orElse(e.stageInfos.lastOption.map(_.name))
-          .getOrElse("")
-        jobDesc(e.jobId) = d.linesIterator.take(1).mkString.take(90)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobStart.get(e.jobId).foreach(t0 => jobs(e.jobId) = e.time - t0)
-    })
+    val spark = Harness.session(Harness.cpus)
+    val rec = Harness.record(spark)
 
     val t0 = System.nanoTime()
     SparkEntry.queries(q)(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
     val total = (System.nanoTime() - t0) / 1e9
-    // listener bus is async (and private[spark] — no waitUntilEmpty
-    // from here); a diagnostic main can afford a settle sleep
-    Thread.sleep(3000)
+    Harness.drain(spark.sparkContext)
 
-    println(f"probe] $q total ${total}%.2f s, ${jobs.size} jobs")
-    jobs.toSeq.sortBy(_._1).foreach { case (id, ms) =>
+    println(f"probe] $q total ${total}%.2f s, ${rec.jobMs.size} jobs")
+    rec.jobMs.toSeq.sortBy(_._1).foreach { case (id, ms) =>
       if (ms >= 200) println(f"probe] job $id%4d  ${ms / 1000.0}%8.2f s  " +
-        jobDesc.getOrElse(id, ""))
+        rec.jobDesc.getOrElse(id, ""))
     }
-    val byRdd = blocks.toSeq
+    val byRdd = rec.blockHw.toSeq
       .groupBy(_._1.split("_")(1).toInt)
       .map { case (r, bs) =>
         (r, bs.map(_._2._1).sum, bs.map(_._2._2).sum) }

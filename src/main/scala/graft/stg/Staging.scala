@@ -1,7 +1,9 @@
 package graft.stg
 
+import java.io.IOException
 import java.sql.{Date, Timestamp}
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,6 +32,45 @@ object Staging {
     val cond = keys.map(k => target(k) <=> staged(k)).reduce(_ && _)
     target.join(staged, cond, "left_anti").unionByName(staged)
       .select(target.columns.map(col): _*)
+  }
+
+  /** The current contents of the whole-replaced parquet store at
+    * `path`, or None when no store exists yet. First recovers a crash
+    * inside [[publishStore]]'s two-rename window: live absent but
+    * `.bak` present means the backup holds the only copy, so it is
+    * promoted. Every other read failure (corrupt footer, transient FS
+    * error) propagates — reading an unreadable store as empty would
+    * publish a store with its history gone. `label` names the store in
+    * error messages. */
+  def readStore(spark: SparkSession, path: String, label: String): Option[DataFrame] = {
+    val fs = FileSystem.get(spark.sparkContext.hadoopConfiguration)
+    val live = new Path(path)
+    val bak = new Path(s"$path.bak")
+    if (!fs.exists(live) && fs.exists(bak) && !fs.rename(bak, live))
+      throw new IOException(s"$label: cannot recover backup $bak -> $live")
+    if (fs.exists(live)) Some(spark.read.parquet(path)) else None
+  }
+
+  /** Replace the store at `path` with `df` (parquet cannot overwrite
+    * its own input): write `path.new`, set the live store aside as
+    * `.bak`, rename `.new` into place, drop `.bak`. A crash at any
+    * point leaves a complete store in live or `.bak`, which
+    * [[readStore]] recovers. Rename signals failure by return value,
+    * not exception, so each one is checked. */
+  def publishStore(df: DataFrame, path: String, label: String): Unit = {
+    df.write.mode(SaveMode.Overwrite).parquet(s"$path.new")
+    val fs = FileSystem.get(df.sparkSession.sparkContext.hadoopConfiguration)
+    val live = new Path(path)
+    val fresh = new Path(s"$path.new")
+    val bak = new Path(s"$path.bak")
+    fs.delete(bak, true)
+    if (fs.exists(live) && !fs.rename(live, bak))
+      throw new IOException(s"$label: cannot set aside $live")
+    if (!fs.rename(fresh, live)) {
+      fs.rename(bak, live)
+      throw new IOException(s"$label: cannot publish $fresh")
+    }
+    fs.delete(bak, true)
   }
 
   /** SCD type-2 apply — the history-keeping upgrade of

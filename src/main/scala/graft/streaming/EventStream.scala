@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sources.Tables
+import graft.stg.Staging
 
 import graft.syntax._
 
@@ -612,8 +613,8 @@ object EventStream {
     * what upgrades that to effectively-once on the stored table — the
     * same recipe every Delta/Iceberg `MERGE`-from-stream runs, with the
     * store swap playing the commit. Per batch the target is read,
-    * anti-joined on the key, and atomically swapped (write-new → rename
-    * — the graft.Pipeline staging swap discipline). Returns the final
+    * anti-joined on the key, and atomically swapped (write-new → rename,
+    * [[graft.stg.Staging.publishStore]]). Returns the final
     * store as a DataFrame.
     *
     * Scale notes: the anti-join shuffles on the natural key exactly
@@ -623,46 +624,20 @@ object EventStream {
     * identical. */
   def streamUpsertSink(spark: SparkSession, sfDir: String,
       storePath: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     val name = "ups_" + UUID.randomUUID().toString.replace("-", "")
     val ckpt = ckptDir(name)
     val q = rawEvents(spark, sfDir)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val live = new Path(storePath)
-        val fresh = new Path(s"$storePath.new")
-        val bak = new Path(s"$storePath.bak")
-        // Read the current store. ONLY a genuinely-missing live path
-        // means "empty store"; if live is absent but a .bak survives,
-        // the previous batch crashed inside the two-rename publish
-        // window — promote the backup and continue from it. Every other
-        // failure (corrupt footer, transient FS error) PROPAGATES and
-        // fails the batch: the old Try(...).getOrElse(empty) here would
-        // have silently discarded every previously-upserted row, which
-        // contradicts the effectively-once contract this sink exists to
-        // provide (round-7 verdict, defect #1).
-        val target =
-          if (fs.exists(live)) spark.read.parquet(storePath)
-          else if (fs.exists(bak)) {
-            if (!fs.rename(bak, live))
-              throw new java.io.IOException(
-                s"upsert sink: cannot recover backup $bak -> $live")
-            spark.read.parquet(storePath)
-          } else batch.limit(0)
-        graft.stg.Staging.upsertByNaturalKey(target, batch, Seq("event_id"))
-          .write.mode("overwrite").parquet(s"$storePath.new")
-        fs.delete(bak, true)
-        if (fs.exists(live) && !fs.rename(live, bak))
-          throw new java.io.IOException(s"upsert sink: cannot set aside $live")
-        if (!fs.rename(fresh, live)) {
-          fs.rename(bak, live)
-          throw new java.io.IOException(s"upsert sink: cannot publish $fresh")
-        }
-        fs.delete(bak, true)
-        ()
+        // a corrupt store fails the batch rather than reading as empty
+        // (round-7 verdict, defect #1): Staging.readStore recovers only
+        // a crash inside the publish window
+        val target = Staging.readStore(spark, storePath, "upsert sink")
+          .getOrElse(batch.limit(0))
+        Staging.publishStore(
+          Staging.upsertByNaturalKey(target, batch, Seq("event_id")),
+          storePath, "upsert sink")
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
@@ -1119,7 +1094,7 @@ object EventStream {
     * monotone-dominance argument as an executable law) without paying
     * a streaming query per sample. */
   private[graft] def hhMergeCut(target: DataFrame, batch: DataFrame): DataFrame = {
-    val merged = graft.stg.Staging.upsertByNaturalKey(
+    val merged = Staging.upsertByNaturalKey(
       target.drop("rank"), batch, Seq("win_start", "user_id"))
     val w = Window.partitionBy($"win_start")
       .orderBy($"n_events".desc, $"user_id")
@@ -1133,12 +1108,9 @@ object EventStream {
     * StreamingSpec can drive a multi-batch file feed through the
     * cut-and-re-enter path. */
   private[graft] def heavyHitterStream(ss: SparkSession, src: DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.Path
     val name = "hhu_" + UUID.randomUUID().toString.replace("-", "")
     val store = s"/tmp/graft_hh_store_$name"
     registerTmpStore(store)
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration)
     val stream = src
       .withWatermark("ts", "1 hour")
       .groupBy(window($"ts", "1 day").as("win"), $"user_id")
@@ -1150,35 +1122,11 @@ object EventStream {
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val sp = batch.sparkSession
-        val live = new Path(store)
-        val fresh = new Path(s"$store.new")
-        val bak = new Path(s"$store.bak")
-        // same recovery contract as the q159 upsert sink: only a
-        // genuinely-missing live path means "empty store"; a surviving
-        // .bak means the previous batch crashed inside the publish
-        // window — promote it; any other read failure propagates
-        val target =
-          if (fs.exists(live)) sp.read.parquet(store)
-          else if (fs.exists(bak)) {
-            if (!fs.rename(bak, live))
-              throw new java.io.IOException(
-                s"heavy-hitter store: cannot recover backup $bak -> $live")
-            sp.read.parquet(store)
-          } else batch.limit(0)
-        hhMergeCut(target, batch)
-          .write.mode("overwrite").parquet(s"$store.new")
-        fs.delete(bak, true)
-        if (fs.exists(live) && !fs.rename(live, bak))
-          throw new java.io.IOException(
-            s"heavy-hitter store: cannot set aside $live")
-        if (!fs.rename(fresh, live)) {
-          fs.rename(bak, live)
-          throw new java.io.IOException(
-            s"heavy-hitter store: cannot publish $fresh")
-        }
-        fs.delete(bak, true)
-        ()
+        val target = Staging
+          .readStore(batch.sparkSession, store, "heavy-hitter store")
+          .getOrElse(batch.limit(0))
+        Staging.publishStore(hhMergeCut(target, batch), store,
+          "heavy-hitter store")
       }
       .start()
     try q.awaitTermination()
@@ -1260,26 +1208,10 @@ object EventStream {
   private[graft] def cmsStoreMerge(batch: DataFrame, batchId: Long,
       store: String,
       lastBatch: java.util.concurrent.atomic.AtomicLong): Unit = {
-    import org.apache.hadoop.fs.Path
     import graft.operators.TextOps.CmsD
     if (batchId <= lastBatch.get()) ()
     else {
-      val sp = batch.sparkSession
-      val fs = org.apache.hadoop.fs.FileSystem.get(
-        sp.sparkContext.hadoopConfiguration)
-      val live = new Path(store)
-      val fresh = new Path(s"$store.new")
-      val bak = new Path(s"$store.bak")
-      // q159 recovery contract: only a genuinely-missing live path
-      // is an empty sketch; a surviving .bak is promoted
-      val target =
-        if (fs.exists(live)) Some(sp.read.parquet(store))
-        else if (fs.exists(bak)) {
-          if (!fs.rename(bak, live))
-            throw new java.io.IOException(
-              s"cms store: cannot recover backup $bak -> $live")
-          Some(sp.read.parquet(store))
-        } else None
+      val target = Staging.readStore(batch.sparkSession, store, "cms store")
       // persisted replay mark: every store row carries the last
       // merged batch_id, so the skip survives a publish-then-crash
       // replay and a restart against a durable store — the store's
@@ -1298,21 +1230,12 @@ object EventStream {
           .agg(count(lit(1)).as("cell"))
         val prior = target.fold(delta.limit(0))(
           _.select($"day", $"hrow", $"bucket", $"cell"))
-        prior.unionByName(delta)
-          .groupBy($"day", $"hrow", $"bucket")
-          .agg(sum($"cell").as("cell"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite").parquet(s"$store.new")
-        fs.delete(bak, true)
-        if (fs.exists(live) && !fs.rename(live, bak))
-          throw new java.io.IOException(
-            s"cms store: cannot set aside $live")
-        if (!fs.rename(fresh, live)) {
-          fs.rename(bak, live)
-          throw new java.io.IOException(
-            s"cms store: cannot publish $fresh")
-        }
-        fs.delete(bak, true)
+        Staging.publishStore(
+          prior.unionByName(delta)
+            .groupBy($"day", $"hrow", $"bucket")
+            .agg(sum($"cell").as("cell"))
+            .withColumn("batch_id", lit(batchId)),
+          store, "cms store")
         lastBatch.set(math.max(lastBatch.get(), batchId))
       }
     }
@@ -1324,7 +1247,6 @@ object EventStream {
     * cross-batch additive accumulation. */
   private[graft] def cmsHeavyHitters(ss: SparkSession, src: DataFrame,
       probeEvents: DataFrame): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import graft.operators.TextOps.CmsD
     val name = "cmshh_" + UUID.randomUUID().toString.replace("-", "")
     val store = s"/tmp/graft_cmshh_store_$name"
@@ -1440,7 +1362,7 @@ object EventStream {
     * longer dies with the JVM — after every processed batch the full
     * (n, S, latched) table plus (batch_id, hi_water) is snapshotted to
     * a parquet table INSIDE the checkpoint directory (two-rename
-    * publish, surviving .old promoted on recovery), so the state has
+    * publish, surviving .bak promoted on recovery), so the state has
     * exactly the checkpoint's lifetime: a run-private drain deletes
     * both, a caller-pinned `fixedCkpt` makes a later sprtStream call
     * resume the walk where the dead JVM left it. Replay idempotence:
@@ -1451,7 +1373,6 @@ object EventStream {
   private[graft] def sprtStream(ss: SparkSession, src: DataFrame,
       fixedCkpt: Option[String] = None): DataFrame = {
     import graft.operators.EventOps
-    import org.apache.hadoop.fs.Path
     // per-type carried state: (n, S, latched (n_decide, llr_decide))
     val state = scala.collection.concurrent.TrieMap
       .empty[String, (Long, Long, Option[(Long, Long)])]
@@ -1461,51 +1382,27 @@ object EventStream {
     val name = "sprt_" + UUID.randomUUID().toString.replace("-", "")
     val ckpt = fixedCkpt.getOrElse(ckptDir(name))
     val stateDir = s"$ckpt/graft_sprt_state"
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      ss.sparkContext.hadoopConfiguration)
     def restoreOnce(sp: SparkSession): Unit =
-      if (restored.compareAndSet(false, true)) {
-        val live = new Path(stateDir)
-        val old = new Path(s"$stateDir.old")
-        // a surviving .old means the previous run died inside the
-        // publish window — promote it (q159 recovery contract)
-        if (!fs.exists(live) && fs.exists(old) && !fs.rename(old, live))
-          throw new java.io.IOException(
-            s"sprtStream: cannot recover state snapshot $old -> $live")
-        if (fs.exists(live)) {
-          val snap = sp.read.parquet(stateDir).collect()
-          snap.foreach { r =>
+      if (restored.compareAndSet(false, true))
+        Staging.readStore(sp, stateDir, "sprtStream state snapshot")
+          .foreach(_.collect().foreach { r =>
             val dec =
               if (r.isNullAt(3)) None
               else Some((r.getLong(3), r.getLong(4)))
             state.put(r.getString(0), (r.getLong(1), r.getLong(2), dec))
             hiWater.set(math.max(hiWater.get(), r.getLong(6)))
             lastBatch.set(math.max(lastBatch.get(), r.getLong(5)))
-          }
-        }
-      }
+          })
     def snapshot(sp: SparkSession, batchId: Long): Unit = {
       val rows = state.toSeq.map { case (t, (n, s0, dec)) =>
         (t, n, s0, dec.map(_._1), dec.map(_._2), batchId, hiWater.get())
       }
-      sp.createDataFrame(rows)
-        .toDF("event_type", "n", "s", "n_dec", "llr_dec",
-          "batch_id", "hi_water")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(s"$stateDir.new")
-      val live = new Path(stateDir)
-      val fresh = new Path(s"$stateDir.new")
-      val old = new Path(s"$stateDir.old")
-      fs.delete(old, true)
-      if (fs.exists(live) && !fs.rename(live, old))
-        throw new java.io.IOException(
-          s"sprtStream: cannot set aside state snapshot $live")
-      if (!fs.rename(fresh, live)) {
-        fs.rename(old, live)
-        throw new java.io.IOException(
-          s"sprtStream: cannot publish state snapshot $fresh")
-      }
-      fs.delete(old, true)
+      Staging.publishStore(
+        sp.createDataFrame(rows)
+          .toDF("event_type", "n", "s", "n_dec", "llr_dec",
+            "batch_id", "hi_water")
+          .coalesce(1),
+        stateDir, "sprtStream state snapshot")
     }
     val q = src.writeStream
       .outputMode("append")

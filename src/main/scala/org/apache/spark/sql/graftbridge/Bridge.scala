@@ -4,11 +4,12 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Minimal bridge into `private[sql]` Spark internals (the standard
-  * extension-library technique: a package object inside the
-  * `org.apache.spark.sql` tree). Exposes exactly two capabilities the
-  * engine's custom Catalyst expressions need: Column↔Expression
-  * conversion and session function registration.
+/** Minimal bridge into `private[sql]`/`private[spark]` Spark internals
+  * (the standard extension-library technique: an object inside the
+  * `org.apache.spark.sql` tree). Exposes what the engine's custom
+  * Catalyst expressions need (Column↔Expression conversion, session
+  * function registration), state-store unloading, and the listener-bus
+  * drain `graft.Harness` uses.
   */
 object Bridge {
 
@@ -44,4 +45,9 @@ object Bridge {
     *  reloads its providers from the checkpoint on its next batch. */
   def unloadStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.unloadAll()
+
+  /** Return once every event posted to the `private[spark]` listener
+    * bus so far has reached every listener. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -25,21 +25,7 @@ class CapstoneSpec extends AnyFunSuite {
     Pipeline.main(Array(outDir))
   }
 
-  private lazy val spark: SparkSession = {
-    ran
-    // warehouse dir matters beyond this suite: the session created here
-    // outlives the suite (getOrCreate reuses it downstream), and static
-    // confs like the warehouse location cannot be changed later — an
-    // unset value here would strand other suites' managed tables in the
-    // repo-local default ./spark-warehouse
-    SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-  }
+  private lazy val spark: SparkSession = { ran; Harness.session(4) }
 
   private def csvOut(name: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true")

@@ -15,13 +15,7 @@ import graft.stg.{Normalizer, Staging}
   * messy-header normalization — on tiny literal frames. */
 class EngineSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4)
   import spark.implicits._
 
   private def d(s: String) = Date.valueOf(s)
@@ -388,52 +382,6 @@ class EngineSpec extends AnyFunSuite {
     assert(failLine320.length < 1870,
       s"64-failure batch at 320 queries overflows (${failLine320.length}) " +
         "— the scheme needs revisiting before the surface grows further")
-  }
-
-  test("bench breakdown lists name real queries and stay disjoint") {
-    // drift gate for the infrastructure breakout in the bench file
-    // output: a renamed/removed query must fail here, not silently
-    // misclassify cost
-    val known = SparkEntry.queries.keySet
-    assert(Bench.streamQueries.subsetOf(known),
-      s"stream breakout names unknown queries: ${Bench.streamQueries -- known}")
-    assert(Bench.stagedQueries.subsetOf(known),
-      s"staged breakout names unknown queries: ${Bench.stagedQueries -- known}")
-    assert((Bench.streamQueries & Bench.stagedQueries).isEmpty,
-      "a query cannot bill both infrastructure classes")
-  }
-
-  test("bench stream breakout is COMPLETE: equals the EventStream-backed registrations") {
-    // round-14 verdict: the old gate only asserted subset-of-known, so
-    // q264/q287/q288/q289 silently fell out of the stream class and
-    // stream_s understated the checkpoint-billed cost. Re-derive the
-    // membership from the registration source itself: a query bills
-    // the stream class iff its `queries` entry calls `EventStream.`
-    // directly (q275 routes through TextOps and deliberately bills
-    // staged — the source scan excludes it by the same rule).
-    val src = {
-      val p = java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")
-      assume(java.nio.file.Files.exists(p), "source tree not available")
-      new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    }
-    val mapBody = {
-      val from = src.indexOf("def queries")
-      val to = src.indexOf("def oracleSql")
-      assert(from >= 0 && to > from, "SparkEntry layout changed; update this gate")
-      src.substring(from, to)
-    }
-    // split the map literal into per-entry segments at each "qN..." ->
-    val entryPat = """"(q\d[A-Za-z0-9_]*)"\s*->""".r
-    val hits = entryPat.findAllMatchIn(mapBody).toSeq
-    val derived = hits.zipWithIndex.flatMap { case (m, i) =>
-      val end = if (i + 1 < hits.size) hits(i + 1).start else mapBody.length
-      val body = mapBody.substring(m.start, end)
-      if (body.contains("EventStream.")) Some(m.group(1)) else None
-    }.toSet
-    assert(derived === Bench.streamQueries,
-      s"stream breakout drifted from the EventStream-backed registrations: " +
-        s"missing=${derived -- Bench.streamQueries} " +
-        s"extra=${Bench.streamQueries -- derived}")
   }
 
   test("substr grams: native expression equals the declarative lead-window md5s") {

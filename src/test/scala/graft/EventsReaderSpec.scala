@@ -15,13 +15,7 @@ import graft.sources.Tables
   * fail every events query (round 8's DATATYPE_MISMATCH episode). */
 class EventsReaderSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4)
   import spark.implicits._
 
   // micros chosen so the ns form (µs·1000) round-trips exactly

@@ -13,13 +13,7 @@ import graft.mart.Extracts
   */
 class GoldenParitySpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4)
 
   private val goldenDir = "/root/reference/Data Processed"
 

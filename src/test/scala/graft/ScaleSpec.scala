@@ -11,13 +11,7 @@ import graft.sources.Tables
   * exchange-free bucketed joins, partition-scoped overwrite. */
 class ScaleSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Harness.session(4)
   import spark.implicits._
 
   private def freshTable(name: String): String = {
