@@ -1,5 +1,7 @@
 package graft
 
+import graft.util.Blocks
+
 /** Benchmark main (driver contract): times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
@@ -107,24 +109,8 @@ object Bench {
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) =>
         only.forall(ids => ids.contains(name) || ids.contains(name.split("_")(0))) }
-    // Round-16 in-band hygiene + attribution (round-15 verdict item 1):
-    // the r15 32-core one-shot degraded a contiguous stretch (q190
-    // 10.8x, q191 11.6x) that the same code at 8 cores refuted — the
-    // unexcluded code-side suspect was ~20 eager localCheckpoint block
-    // sets that only GC/ContextCleaner ever released, lingering across
-    // a 287-query JVM. Two additions, both OUTSIDE the timed region and
-    // invisible to the stdout contract:
-    //  (a) deterministic block release after every rep — the
-    //      boruvkaTrace persistent-RDD watermark diff (Relational.scala)
-    //      generalized to the bench loop: any persist()/localCheckpoint
-    //      block set a query created is unpersisted before the next
-    //      timing starts, so no query inherits another's storage-pool
-    //      pressure (no cross-query DataFrame ever references another
-    //      query's blocks — each fn builds its own plan);
-    //  (b) a per-query stderr attribution line: GC-time delta (exact,
-    //      MX beans) and cached-block high-water (the Harness recorder,
-    //      read after draining the listener bus; attribution aid, not
-    //      a contract).
+    // per-query stderr attribution (not part of the stdout contract):
+    // GC-time delta, blocks released, cached-block high-water
     val rec = Harness.record(spark)
     def gcMs(): Long = {
       import scala.jdk.CollectionConverters._
@@ -134,35 +120,18 @@ object Bench {
     val results = selected.map { case (name, fn) =>
       val gc0 = gcMs()
       rec.clear()
-      var released = 0
-      val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
-      val times = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            false
-          }
-        if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
-      }
-      // deterministic release — ONCE per query, after the LAST rep's
-      // clock stops, so the timed region and the cross-rep cache
-      // semantics are byte-identical to the r15 harness. Two layers:
-      //  1. catalog.clearCache() drops every Dataset-level persist
-      //     THROUGH the CacheManager — raw rdd.unpersist here would
-      //     leave a stale CacheManager entry (same canonical plan)
-      //     whose storage level is now NONE, making every later
-      //     identical persist recompute per reference without caching
-      //     (measured: q221 5.2 → 15.1 s, q284 6.3 → 18.4 s under a
-      //     per-REP raw-unpersist variant of this loop);
-      //  2. the watermark diff then unpersists what clearCache cannot
-      //     see — eager localCheckpoint block sets, which are exactly
-      //     the blocks the r15 verdict found lingering between GCs.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!rddsBefore.contains(id)) {
-          rdd.unpersist(blocking = false); released += 1
+      // blocks are released ONCE per query, after the LAST rep's clock
+      // stops, so no query inherits another's storage-pool pressure
+      val (times, released) = Blocks.scope(spark) {
+        (1 to reps).map { _ =>
+          val t0 = System.nanoTime()
+          val ok =
+            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+            catch { case e: Throwable =>
+              System.err.println(s"[bench] $name failed: ${e.getMessage}")
+              false
+            }
+          if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         }
       }
       Harness.drain(spark.sparkContext)

@@ -1,5 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
+
+import graft.util.Blocks
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -54,13 +57,15 @@ object Verify {
       System.err.println(s"[verify] ln boundary margins: $margins")
     }
     val keep = (n: String) => only.forall(_.contains(n))
+    // each query's blocks are freed before the next query runs
     SparkEntry.queries.foreach { case (name, fn) =>
-      if (keep(name))
+      if (keep(name)) Blocks.scope(spark) {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.sources.Tables
+import graft.util.Blocks
 
 import graft.syntax._
 
@@ -3492,13 +3493,6 @@ object Relational {
           "bound: w="), $"w", lit(" pa="), $"pa", lit(" pb="), $"pb")))
       .otherwise($"w")
     val sc = edges0.sparkSession.sparkContext
-    // persistent-RDD watermark: every block this call creates (both
-    // persist() caches and localCheckpoint block sets — the latter are
-    // invisible to Dataset.unpersist) is released before returning, so
-    // a 285-query session does not accumulate dead round relations
-    // (round-12 advice); the census is collected EAGERLY per round, so
-    // nothing reads them after the loop
-    val rddsBefore = sc.getPersistentRDDs.keySet.toSet
     // edges: SERIALIZED always — one narrow relation read at most
     // three times (bound scan, label axis, round-1 candidates), so the
     // ser/deser CPU is noise, while the deserialized form at 100×
@@ -3603,7 +3597,6 @@ object Relational {
     val census = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
     census += (("r0_components", comps.count()))
     var prevCand: DataFrame = null
-    var prevCandIds = Set.empty[Int]
     var relab: DataFrame = null
     for (r <- 1 to MstRounds) {
       // localCheckpoint (eager), not persist, MEASURED: cand feeds two
@@ -3618,7 +3611,6 @@ object Relational {
       // coarsen, so an edge once intra-component can never cross
       // components again — candidate sets shrink monotonically (the
       // standard contraction prune).
-      val beforeCand = sc.getPersistentRDDs.keySet.toSet
       val cand = (if (r == 1)
           edges.select($"pa", $"pb", $"w",
             $"pa".as("ca"), $"pb".as("cb"))
@@ -3631,20 +3623,15 @@ object Relational {
         .filter($"ca" =!= $"cb")
         .select(packK.as("k"), packCC.as("cc"))
         .localCheckpoint(true, ckptLevel)
-      val candIds = sc.getPersistentRDDs.keySet.toSet -- beforeCand
       // the previous generation's checkpoint blocks were consumed by
       // the relabel that just materialized — free them NOW, not at
       // function exit, so at most ~two candidate generations ever
       // coexist in the storage pool (the high-water Probe measured)
-      if (prevCand != null) sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (prevCandIds.contains(id)) rdd.unpersist(blocking = false)
-      }
-      if (relab != null) { relab.unpersist(); relab = null }
+      Blocks.release(prevCand, relab)
       // the full edge relation is only read by the bound scan, the r0
       // label axis and round 1's candidates — dead weight afterwards
-      if (r == 1) edges.unpersist()
+      if (r == 1) Blocks.release(edges)
       prevCand = cand
-      prevCandIds = candIds
       // per-component argmin, carrying the winning edge's label pair
       // through the aggregate as min(struct(k, cc)) — k is unique per
       // edge and k ↦ cc is functional, so the struct min is exactly
@@ -3667,6 +3654,7 @@ object Relational {
       val newEdges = (if (mst == null) picks
         else picks.join(mst, Seq("pa", "pb"), "left_anti"))
         .localCheckpoint(true)
+      val prevMst = mst
       mst = (if (mst == null) newEdges.select($"pa", $"pb")
         else mst.unionByName(newEdges.select($"pa", $"pb")))
         .localCheckpoint(true)
@@ -3703,20 +3691,16 @@ object Relational {
       comps = cm.select($"m".as("c")).distinct().localCheckpoint(true)
       census += ((s"r${r}_components", comps.count()))
       // the contraction map survives into the NEXT round's relabel
-      // (unpersisted there, right after the new candidates
-      // materialize); everything else from this round is dead
+      // (released there, right after the new candidates materialize);
+      // everything else from this round, and the superseded forest
+      // and component set, is dead
       relab = cm
-      prevComps.unpersist()
-      cg.unpersist()
-      cms.init.foreach(_.unpersist())
+      Blocks.release(Seq(prevComps, prevMst, newEdges, cg) ++ cms.init: _*)
     }
-    // release the localCheckpoint block sets this call created (the
-    // final cand generation, newEdges, mst, comps snapshots) —
-    // Dataset.unpersist cannot reach them, so free them at RDD grain
-    // via the watermark diff
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!rddsBefore.contains(id)) rdd.unpersist(blocking = false)
-    }
+    // the census is collected EAGERLY per round, so nothing reads the
+    // last generation after the loop — free it before returning, so a
+    // 287-query session does not accumulate dead round relations
+    Blocks.release(prevCand, relab, mst, comps)
     edges0.sparkSession.createDataFrame(census.toSeq)
       .toDF("metric", "value").orderBy($"metric")
   }

@@ -15,13 +15,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * corpus and five.
   *
   * Mechanics:
-  *   - stage path = GRAFT_STAGE_DIR (default /tmp/graft_stage)
-  *     / <derivation version + constants> / <sf dir + input fingerprint>
-  *     / <stage name>. The version segment bakes in the constants the
-  *     derivations depend on, the fingerprint (size + mtime of
-  *     documents.parquet) the input data — either changing invalidates
-  *     the stage automatically; no stale reads across rounds or corpus
-  *     regenerations.
+  *   - stage path = system property `graft.stage.dir` (default
+  *     /tmp/graft_stage) / <derivation version + constants> / <sf dir
+  *     + input fingerprint> / <stage name>. The version segment bakes
+  *     in the constants the derivations depend on, the fingerprint
+  *     (size + mtime of documents.parquet) the input data — either
+  *     changing invalidates the stage automatically; no stale reads
+  *     across rounds or corpus regenerations.
   *   - writes go to a pid-suffixed temp dir then ATOMIC_MOVE into
   *     place, so a concurrent writer (two benches racing) can never
   *     yield a half-written stage: losers see the winner's complete
@@ -47,9 +47,7 @@ object Staged {
   private val Version = 1
 
   private def root: String =
-    sys.props.get("graft.stage.dir")
-      .orElse(sys.env.get("GRAFT_STAGE_DIR"))
-      .getOrElse("/tmp/graft_stage")
+    sys.props.getOrElse("graft.stage.dir", "/tmp/graft_stage")
 
   private def versionSeg(constants: String): String = s"v$Version-$constants"
 

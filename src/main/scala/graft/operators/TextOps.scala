@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Text
 import graft.operators.Relational.{sqlRound, stableRound}
 import graft.sources.Tables
+import graft.util.Blocks
 
 import graft.syntax._
 
@@ -590,7 +591,7 @@ object TextOps {
           .localCheckpoint(true)
         val changed =
           next.agg(coalesce(sum($"chg"), lit(0L))).head().getLong(0)
-        if (prevCached != null) prevCached.unpersist()
+        Blocks.release(prevCached)
         prevCached = next
         labels = next.select($"id", $"label")
         converged = changed == 0
@@ -615,8 +616,7 @@ object TextOps {
       // runs on the non-convergence throw and any mid-loop failure too —
       // a surviving session (Verify's per-query catch, the test suites)
       // must not accumulate dead cached blocks
-      if (prevCached != null) prevCached.unpersist()
-      edges.unpersist()
+      Blocks.release(prevCached, edges)
     }
   }
 

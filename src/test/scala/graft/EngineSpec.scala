@@ -3717,9 +3717,16 @@ class EngineSpec extends AnyFunSuite {
 
   test("entry() returns rows; every declared query runs at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
+    // each query runs the way Verify and Bench run it, inside
+    // Blocks.scope, and must leave no persistent RDD behind
+    def rdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, "/root/testdata/sf0.001").count()
+      val before = rdds
+      val (n, _) = graft.util.Blocks.scope(spark)(
+        fn(spark, "/root/testdata/sf0.001").count())
       assert(n > 0, s"$name returned no rows")
+      assert((rdds -- before).isEmpty,
+        s"$name left persistent rdds ${rdds -- before} behind")
     }
   }
 
