@@ -3,8 +3,8 @@ package graft
 /** Plan-audit main: prints the formatted physical plan for the named
   * queries (or all). Used to hold the scale discipline: PushedFilters
   * reach the scan, ReadSchema is pruned, dim joins are
-  * BroadcastHashJoin, WholeStageCodegen spans are wide, and exchange
-  * counts match the design notes.
+  * BroadcastHashJoin, WholeStageCodegen spans are wide. The exchange,
+  * join, window and generate counts are held by `plans/budgets.tsv`.
   *
   * Usage: runMain graft.Explain <sfDir> [queryName ...]
   */

@@ -3672,19 +3672,22 @@ object Relational {
       census += ((s"r${r}_new_edges", ne.getLong(0)))
       census += ((s"r${r}_mst_weight", mstWeight))
       // contraction graph at component grain: the chosen edges' label
-      // pairs (one row per chosen edge, symmetrized)
+      // pairs (one row per chosen edge, symmetrized). It and every hop
+      // map are eager checkpoints, not lazy persists: each hop reads cg
+      // and the previous map twice (directly and inside msgs), and two
+      // AQE stage jobs reading an unfilled cache both compute the same
+      // partitions
       val cg = newEdges.select($"ca".as("x"), $"cb".as("y"))
         .unionByName(newEdges.select($"cb".as("x"), $"ca".as("y")))
-        .persist()
+        .localCheckpoint(true)
       val cms = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var cm = comps.select($"c", $"c".as("m")).persist()
-      cms += cm
+      var cm = comps.select($"c", $"c".as("m"))
       for (_ <- 1 to MstHops) {
         val msgs = cg.join(cm.select($"c".as("x"), $"m"), Seq("x"))
           .groupBy($"y").agg(min($"m").as("nm"))
         cm = cm.join(msgs.withColumnRenamed("y", "c"), Seq("c"), "left")
           .select($"c", least($"m", coalesce($"nm", $"m")).as("m"))
-          .persist()
+          .localCheckpoint(true)
         cms += cm
       }
       val prevComps = comps

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
@@ -91,7 +97,7 @@ class BlocksSpec extends AnyFunSuite {
     assert((rddIds & left).isEmpty, "the one survivor was not the result")
   }
 
-  test("boruvkaTrace leaves no block behind, on both argmin key widths") {
+  test("boruvkaTrace leaves no block behind and computes no cached partition twice") {
     // EngineSpec's hand-solved 5-node graph, and its wide-arm replay
     // with every id past the 21-bit narrow-pack ceiling
     val edges = Seq(
@@ -101,11 +107,28 @@ class BlocksSpec extends AnyFunSuite {
     val off = (1L << 33) + 12345L
     val wide = edges.select(
       ($"pa" + off).as("pa"), ($"pb" + off).as("pb"), $"w")
-    Seq(edges, wide).foreach { g: DataFrame =>
+    // a block stored by a second task that computed the same cached
+    // partition is logged by the BlockManager and dropped
+    val readds = new AtomicInteger
+    val appender = new AbstractAppender("readds", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("not re-adding"))
+          readds.incrementAndGet()
+    }
+    val logger = LogManager.getLogger("org.apache.spark.storage.BlockManager")
+      .asInstanceOf[CoreLogger]
+    appender.start()
+    logger.addAppender(appender)
+    try Seq(edges, wide).foreach { g: DataFrame =>
       val (out, left) = leftBy(Relational.boruvkaTrace(g))
       assert(left.isEmpty, s"boruvkaTrace left rdds $left behind")
       assert(out.filter($"metric" === "r3_mst_weight")
         .select($"value").as[Long].head() === 10L)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
     }
+    assert(readds.get === 0, "a cached partition was computed twice")
   }
 }

@@ -1,8 +1,16 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import java.sql.Date
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -3715,19 +3723,85 @@ class EngineSpec extends AnyFunSuite {
     assert(viaJoin.nonEmpty, "vacuous law: crafted graph has no triangles")
   }
 
+  /** Exchange, SortMergeJoin, BroadcastHashJoin, Window and Generate
+    * nodes in a frame's final AQE plan, subqueries included. */
+  private def planCounts(df: DataFrame): Seq[Int] = {
+    val nodes = new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
+    Seq(nodes.count(_.isInstanceOf[Exchange]),
+      nodes.count(_.isInstanceOf[SortMergeJoinExec]),
+      nodes.count(_.isInstanceOf[BroadcastHashJoinExec]),
+      nodes.count(_.isInstanceOf[WindowExec]),
+      nodes.count(_.isInstanceOf[GenerateExec]))
+  }
+
   test("entry() returns rows; every declared query runs at sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
-    // each query runs the way Verify and Bench run it, inside
-    // Blocks.scope, and must leave no persistent RDD behind
+    // Each query runs once with collect(), which computes every column
+    // as Bench's noop write does, inside Blocks.scope and against a
+    // private stage store, so a staged query builds its stage on every
+    // run. It must return rows, leave no persistent RDD behind, and
+    // stay within its line of plans/budgets.tsv: plan node counts and
+    // Spark jobs, where `-` marks a count that varies between runs with
+    // the order AQE's concurrent stages finish in. The measured table
+    // goes to target/plan_budgets.tsv; copying it over the budget file
+    // regenerates the budgets.
+    val columns = Seq("exchange", "smj", "bhj", "window", "generate", "jobs")
     def rdds = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val before = rdds
-      val (n, _) = graft.util.Blocks.scope(spark)(
-        fn(spark, "/root/testdata/sf0.001").count())
-      assert(n > 0, s"$name returned no rows")
-      assert((rdds -- before).isEmpty,
-        s"$name left persistent rdds ${rdds -- before} behind")
+    val prevStage = sys.props.get("graft.stage.dir")
+    val stage = Files.createTempDirectory("graft_stage_budget")
+    sys.props("graft.stage.dir") = stage.toString
+    val rec = Harness.record(spark)
+    val measured = try SparkEntry.queries.toSeq.sortBy(_._1).map {
+      case (name, fn) =>
+        val before = rdds
+        rec.clear()
+        val (counts, _) = graft.util.Blocks.scope(spark) {
+          val df = fn(spark, "/root/testdata/sf0.001")
+          assert(df.collect().nonEmpty, s"$name returned no rows")
+          planCounts(df)
+        }
+        Harness.drain(spark.sparkContext)
+        assert((rdds -- before).isEmpty,
+          s"$name left persistent rdds ${rdds -- before} behind")
+        name -> (counts :+ rec.jobMs.size)
+    } finally {
+      spark.sparkContext.removeSparkListener(rec)
+      prevStage match {
+        case Some(v) => sys.props("graft.stage.dir") = v
+        case None => sys.props.remove("graft.stage.dir")
+      }
+      new scala.reflect.io.Directory(stage.toFile).deleteRecursively()
     }
+    val budgetFile = Paths.get("plans/budgets.tsv")
+    val budgets: Map[String, Seq[String]] =
+      if (!Files.exists(budgetFile)) Map.empty
+      else Files.readAllLines(budgetFile).asScala.toSeq.tail
+        .map(_.split('\t').toSeq).map(l => l.head -> l.tail).toMap
+    val table = measured.map { case (name, got) =>
+      val held = budgets.getOrElse(name, got.map(_.toString))
+      (name +: got.zip(held).map {
+        case (_, "-") => "-"
+        case (g, _) => g.toString
+      }).mkString("\t")
+    }
+    Files.write(Paths.get("target/plan_budgets.tsv"),
+      (("query" +: columns).mkString("\t") +: table).asJava)
+    val cells = for {
+      (name, got) <- measured
+      held <- budgets.get(name).toSeq
+      ((g, h), col) <- got.zip(held).zip(columns) if h != "-"
+    } yield (s"$name $col", g, h.toInt)
+    cells.filter { case (_, g, h) => g < h }.foreach { case (c, g, h) =>
+      println(s"tighten plans/budgets.tsv: $c is $g, budget $h")
+    }
+    val problems =
+      cells.collect { case (c, g, h) if g > h => s"over budget: $c $g > $h" } ++
+        measured.map(_._1).filterNot(budgets.contains)
+          .map(n => s"no budget line: $n") ++
+        budgets.keys.toSeq.sorted.filterNot(SparkEntry.queries.contains)
+          .map(n => s"budget line names no registered query: $n")
+    if (problems.nonEmpty) fail(problems.mkString("plan budgets:\n", "\n", ""))
   }
 
   test("q191 BPE trainer: iteration-2 winner exists only via iteration 1; " +
