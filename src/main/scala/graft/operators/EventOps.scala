@@ -1049,25 +1049,24 @@ object EventOps {
     * census — day count, median, MAD, max, spike count, last spike —
     * so a flat corpus reports zero spikes instead of an empty table. */
   def q133SpikeDays(s: SparkSession, d: String): DataFrame = {
-    val daily = Tables.events(s, d)
+    // one scan: median and MAD are window columns over the one daily
+    // relation, so no subtree repeats in the plan for AQE to reuse (or
+    // not); a null type is dropped, as the oracle's join drops it
+    val daily = Tables.events(s, d).filter($"event_type".isNotNull)
       .select($"event_type", date_format($"ts", "yyyy-MM-dd").as("day"))
       .groupBy($"event_type", $"day").agg(count(lit(1)).as("n"))
     val byType = Window.partitionBy($"event_type")
-    def medOf(df: DataFrame, v: String, out: String): DataFrame =
-      df.groupBy($"event_type", col(v)).agg(count(lit(1)).as("c"))
-        .select($"event_type", col(v), $"c",
-          sum($"c").over(byType.orderBy(col(v))).as("cum"),
-          sum($"c").over(byType).as("nn"))
-        .groupBy($"event_type")
-        .agg(min(when($"cum" * 2 >= $"nn", col(v))).as(out))
-    val med = medOf(daily, "n", "med_n")
-    val devs = daily.join(med, "event_type")
-      .select($"event_type", $"day", $"n",
-        abs($"n" - $"med_n").as("dev"), $"med_n")
-    val mad = medOf(devs.select($"event_type", $"dev"), "dev", "mad_n")
+    // the least value of `v` whose cumulative day count (a RANGE frame,
+    // so tied days count together) reaches half the type's days
+    def withMedian(df: DataFrame, v: String, out: String): DataFrame =
+      df.withColumn("cum", count(lit(1)).over(byType.orderBy(col(v))))
+        .withColumn("nn", count(lit(1)).over(byType))
+        .withColumn(out, min(when($"cum" * 2 >= $"nn", col(v))).over(byType))
+        .drop("cum", "nn")
+    val devs = withMedian(daily, "n", "med_n").withColumn("dev", abs($"n" - $"med_n"))
     // per-type census (never empty — a flat corpus reports 0 spikes
     // rather than vanishing from the result)
-    devs.join(mad, "event_type")
+    withMedian(devs, "dev", "mad_n")
       .groupBy($"event_type")
       .agg(
         count(lit(1)).as("n_days"),

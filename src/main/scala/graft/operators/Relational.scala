@@ -2743,15 +2743,13 @@ object Relational {
       val e2 = sup.filter($"sup" >= minSup).select($"pa", $"pb").persist()
       // e2 stays LAZY: next round's census action materializes it
       // from the still-cached sup (freed one round later)
-      free.foreach(_.unpersist())
-      free = Seq(e, sup) ++ Option(prevTri).toSeq
+      Blocks.release(free: _*)
+      free = Seq(e, sup, prevTri)
       e = e2
       prevTri = triP
     }
     val sess = edges0.sparkSession
-    free.foreach(_.unpersist())
-    e.unpersist()
-    Option(prevTri).foreach(_.unpersist())
+    Blocks.release(free :+ e :+ prevTri: _*)
     sess.createDataFrame(census.toSeq).toDF("metric", "value")
       .orderBy($"metric")
   }

@@ -97,18 +97,10 @@ class BlocksSpec extends AnyFunSuite {
     assert((rddIds & left).isEmpty, "the one survivor was not the result")
   }
 
-  test("boruvkaTrace leaves no block behind and computes no cached partition twice") {
-    // EngineSpec's hand-solved 5-node graph, and its wide-arm replay
-    // with every id past the 21-bit narrow-pack ceiling
-    val edges = Seq(
-      (1L, 2L, 5L), (2L, 3L, 1L), (3L, 4L, 2L),
-      (1L, 3L, 4L), (4L, 5L, 10L), (1L, 5L, 3L))
-      .toDF("pa", "pb", "w")
-    val off = (1L << 33) + 12345L
-    val wide = edges.select(
-      ($"pa" + off).as("pa"), ($"pb" + off).as("pb"), $"w")
-    // a block stored by a second task that computed the same cached
-    // partition is logged by the BlockManager and dropped
+  /** Runs `body` and asserts no task stored a cached partition that
+    * another task had already computed: the BlockManager logs such a
+    * block and drops it. */
+  private def noReadds(body: => Unit): Unit = {
     val readds = new AtomicInteger
     val appender = new AbstractAppender("readds", null, null, true,
         Property.EMPTY_ARRAY) {
@@ -120,15 +112,43 @@ class BlocksSpec extends AnyFunSuite {
       .asInstanceOf[CoreLogger]
     appender.start()
     logger.addAppender(appender)
-    try Seq(edges, wide).foreach { g: DataFrame =>
-      val (out, left) = leftBy(Relational.boruvkaTrace(g))
-      assert(left.isEmpty, s"boruvkaTrace left rdds $left behind")
-      assert(out.filter($"metric" === "r3_mst_weight")
-        .select($"value").as[Long].head() === 10L)
-    } finally {
+    try body
+    finally {
       logger.removeAppender(appender)
       appender.stop()
     }
     assert(readds.get === 0, "a cached partition was computed twice")
+  }
+
+  test("boruvkaTrace leaves no block behind and computes no cached partition twice") {
+    // EngineSpec's hand-solved 5-node graph, and its wide-arm replay
+    // with every id past the 21-bit narrow-pack ceiling
+    val edges = Seq(
+      (1L, 2L, 5L), (2L, 3L, 1L), (3L, 4L, 2L),
+      (1L, 3L, 4L), (4L, 5L, 10L), (1L, 5L, 3L))
+      .toDF("pa", "pb", "w")
+    val off = (1L << 33) + 12345L
+    val wide = edges.select(
+      ($"pa" + off).as("pa"), ($"pb" + off).as("pb"), $"w")
+    noReadds(Seq(edges, wide).foreach { g: DataFrame =>
+      val (out, left) = leftBy(Relational.boruvkaTrace(g))
+      assert(left.isEmpty, s"boruvkaTrace left rdds $left behind")
+      assert(out.filter($"metric" === "r3_mst_weight")
+        .select($"value").as[Long].head() === 10L)
+    })
+  }
+
+  test("kTrussTrace leaves no block behind and computes no cached partition twice") {
+    // EngineSpec's crafted K4 + weak triangle + bridge: the peel keeps
+    // the K4's 6 edges
+    val k4 = Seq(
+      (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L), (4L, 6L), (5L, 6L), (6L, 7L)).toDF("pa", "pb")
+    noReadds {
+      val (out, left) = leftBy(Relational.kTrussTrace(k4, 2L))
+      assert(left.isEmpty, s"kTrussTrace left rdds $left behind")
+      assert(out.filter($"metric" === "r3_edges")
+        .select($"value").as[Long].head() === 6L)
+    }
   }
 }

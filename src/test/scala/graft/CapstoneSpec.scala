@@ -1,96 +1,60 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Capstone end-to-end parity (VERDICT r5 #6): run the FULL `Pipeline`
-  * main over the reference's real `Data Sample/KC=F.csv` — twice, so
-  * the upsert path exercises a warm store — then assert SURVEY §5's
-  * cross-derivation invariants on the artifacts it wrote. The stage
-  * mechanics are proven on synthesized tables in StgPipelineSpec; this
-  * spec is the one that fails if any golden invariant breaks on the
-  * actual end-to-end run over the actual file.
-  */
-class CapstoneSpec extends AnyFunSuite {
+import graft.warehouse.{Check, Invariants, Warehouse}
 
-  private val outDir =
-    java.nio.file.Files.createTempDirectory("graft_capstone").toString
+/** Capstone end to end: the paper's warehouse chain runs its backfill
+  * and every one-day delta of the checked-in source fixture
+  * (`src/test/resources/warehouse`, `perfbench/gen.py` seed 7: one year
+  * × 12 contract months, 6 deltas of kinds trading, holiday, null) into
+  * a fresh root, then each of the paper's invariants (SURVEY §5) is
+  * recomputed from what the chain wrote. The stage mechanics are proven
+  * on synthesized tables in StgPipelineSpec. */
+class CapstoneSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  // Runs the capstone twice (second run = J4 upsert against a warm
-  // store). Pipeline.main stops its SparkSession on exit, so the
-  // assertions below always build a fresh one AFTER this completes.
-  private lazy val ran: Unit = {
-    Pipeline.main(Array(outDir))
-    Pipeline.main(Array(outDir))
+  private lazy val spark: SparkSession = Harness.session(4)
+  private val source = new java.io.File(getClass.getResource("/warehouse").toURI).getPath
+  private val root = java.nio.file.Files.createTempDirectory("graft_capstone").toString
+
+  /** The chain, run once; the store check after every load. */
+  private lazy val (w, m, storeAfterEachLoad) = {
+    val w = new Warehouse(spark, root)
+    val m = w.backfill(source)
+    val states = Invariants.storeState(spark, w, m.barchart) +:
+      m.deltas.map { d => w.dailyLoad(d); Invariants.storeState(spark, w, d) }
+    (w, m, states)
   }
 
-  private lazy val spark: SparkSession = { ran; Harness.session(4) }
+  override def afterAll(): Unit =
+    new scala.reflect.io.Directory(new java.io.File(root)).deleteRecursively(): Unit
 
-  private def csvOut(name: String): DataFrame =
-    spark.read.option("header", "true").option("inferSchema", "true")
-      .csv(s"$outDir/$name")
+  private def holds(c: Check): Unit = assert(c.ok, s"${c.name}: ${c.detail}")
 
-  test("E1 on the real file: 5957 raw rows stage to 5857; upsert twice = once") {
-    val stg = spark.read.parquet(s"$outDir/stg_ohlcv")
-    // 5,957 data rows, 100 literal-null Close rows (BASELINE.md) — and
-    // the SECOND run's upsert must not have duplicated any natural key
-    assert(stg.count() === 5857L)
-    assert(stg.select("Date").distinct().count() === 5857L)
+  test("E1: the staged store holds the manifest's rows and last ticks after every load") {
+    assert(storeAfterEachLoad.size === 7)
+    storeAfterEachLoad.foreach(holds)
   }
 
-  test("E2 fact: two contract months per staged date, MA columns present") {
-    val fact = spark.read.parquet(s"$outDir/ods_fact")
-    assert(fact.count() === 2 * 5857L)
-    assert(Seq("ma_50", "ma_200", "last", "mo").forall(fact.columns.contains))
+  test("E1: upserting the last batch again leaves the store unchanged") {
+    holds(Invariants.idempotent(spark, w, m.deltas.last))
   }
 
-  test("invariant 1: Spread(d) = price(d,mo=3) - price(d,mo=2), every 2020 date") {
-    val ny = csvOut("ny_prices")
-    val p = ny.groupBy($"date_actual")
-      .agg(max(when($"mo" === 3, $"ny_price")).as("p3"),
-        max(when($"mo" === 2, $"ny_price")).as("p2"))
-    val sp = csvOut("spread")
-    val bad = sp.join(p, Seq("date_actual"))
-      .filter(abs($"spread_max_min" - ($"p3" - $"p2")) > 1e-9).count()
-    assert(bad === 0L)
-    // the synthesized second month carries exactly +2.0 — the spread
-    // must reproduce it exactly on every date
-    assert(sp.filter(abs($"spread_max_min" - 2.0) > 1e-9).count() === 0L)
-    assert(sp.count() === ny.count() / 2)
+  test("E1: one audit row per load, with the reconciled counts") {
+    holds(Invariants.audit(spark, w, m.audits(m.deltas.size)))
   }
 
-  test("invariant 2: MA extract's NY-price column = mo=2 price series") {
-    val mo2 = csvOut("ny_prices").filter($"mo" === 2)
-      .select($"date_actual", $"ny_price")
-    val ma = csvOut("ma")
-    assert(ma.count() === mo2.count())
-    val bad = ma.join(mo2, Seq("date_actual"))
-      .filter(abs(col("NY price") - $"ny_price") > 1e-9).count()
-    assert(bad === 0L)
+  test("E2: MA-50/MA-200 are 51-row and 201-row frames of the fact") {
+    holds(Invariants.movingAverages(w))
   }
 
-  test("invariant 3: MA frames are 51/201 physical rows (recomputed on the fact)") {
-    import org.apache.spark.sql.expressions.Window
-    val fact = spark.read.parquet(s"$outDir/ods_fact")
-      .filter($"mo".cast("int") === 2)
-      .select($"date_actual", $"last".cast("double").as("px"),
-        $"ma_50", $"ma_200")
-    val w = Window.orderBy($"date_actual")
-    val re = fact.select($"date_actual", $"ma_50", $"ma_200",
-      avg($"px").over(w.rowsBetween(-50, 0)).as("r50"),
-      avg($"px").over(w.rowsBetween(-200, 0)).as("r200"))
-    val bad = re.filter(abs($"ma_50" - $"r50") > 1e-6 ||
-      abs($"ma_200" - $"r200") > 1e-6).count()
-    assert(bad === 0L)
+  test("E3: spread = price(mo=3) - price(mo=2) on every extract date") {
+    holds(Invariants.spread(spark, w))
   }
 
-  test("audit log: both runs reconciled and logged") {
-    val audit = spark.read.parquet(s"$outDir/audit")
-    assert(audit.count() >= 2L)
-  }
-
-  private implicit class Dollar(val sc: StringContext) {
-    def $(args: Any*): org.apache.spark.sql.Column = col(sc.parts.mkString)
+  test("E3: COT Net = Long + Short, and the unpivot round-trips") {
+    holds(Invariants.cot(spark, w))
   }
 }
