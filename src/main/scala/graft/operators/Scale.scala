@@ -102,7 +102,7 @@ object Scale {
     * time. */
   def q193PartitionedRead(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Relational.moneySum
-    val path = s"/tmp/graft_part_q193_${ProcessHandle.current().pid()}"
+    val path = graft.util.Scratch.dir("part_q193", dir)
     val orders = graft.sources.Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         date_format(col("o_orderdate"), "yyyy-MM").as("month"))
@@ -137,7 +137,7 @@ object Scale {
     * aggregates onto a bounded 10-band axis. */
   def q198BucketedJoin(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Relational.moneySum
-    val base = s"/tmp/graft_bq198_${ProcessHandle.current().pid()}"
+    val base = graft.util.Scratch.dir("bq198", dir)
     val db = "graft_q198"
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db LOCATION '$base/db'")
     def writeB(df: DataFrame, tname: String, key: String): String = {

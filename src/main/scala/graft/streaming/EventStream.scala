@@ -2,13 +2,14 @@ package graft.streaming
 
 import java.util.UUID
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.sources.Tables
 import graft.stg.Staging
+import graft.util.Scratch
 
 import graft.syntax._
 
@@ -27,17 +28,6 @@ import graft.syntax._
   */
 object EventStream {
 
-  /** A stream-private session: shares the SparkContext (same executors,
-    * same caches) but carries its own SQLConf, so the narrow state-store
-    * shuffle width below is scoped to the streaming query instead of
-    * mutating the caller's session. The previous pattern (set
-    * `spark.sql.shuffle.partitions`, `start()`, restore in `finally`)
-    * restored the conf BEFORE the async micro-batch planner read it and
-    * raced any concurrent query on the shared session — output-neutral
-    * here, but exactly the kind of cross-query interference a
-    * 1000-executor deployment cannot afford. `newSession()` inherits the
-    * context-level defaults (timezone, AQE) from the SparkConf; the two
-    * confs the streams need are set explicitly. */
   /** Checkpoint base dir, overridable via SPARK_GRAFT_CKPT_BASE (e.g.
     * /dev/shm to measure a tmpfs store): every streaming query's
     * run-private checkpoint lives under it and is deleted after the
@@ -47,19 +37,18 @@ object EventStream {
   private def ckptDir(name: String): String =
     s"${sys.env.getOrElse("SPARK_GRAFT_CKPT_BASE", "/tmp")}/graft_ckpt_$name"
 
-  /** Post-drain teardown (round-14 verdict): delete the run-private
-    * checkpoint AND unload the terminated query's state-store
-    * providers. Every stream here drains exactly once against a UUID
-    * checkpoint, so a provider left in `StateStore.loadedProviders`
-    * after termination is pure dead weight — and a complete-mode
-    * aggregation's providers hold the full keyed state ON-HEAP
-    * (q264: one counter per (day, user); measured at the 100× decade
-    * polluting in-band successors — q289 ran 92 s in-band after q264
-    * vs 10.1 s solo). `deleteDir = false` keeps a fixed checkpoint
-    * for restart-path queries; the unload is still correct there (a
-    * restarted query reloads providers from the checkpoint files). */
-  private def dropStreamScaffolding(ckpt: String,
-      deleteDir: Boolean = true): Unit = {
+  /** Post-drain teardown: delete the run-private checkpoint AND unload
+    * the terminated query's state-store providers. Every stream here
+    * drains exactly once against a unique checkpoint, so a provider
+    * left in `StateStore.loadedProviders` after termination is pure
+    * dead weight — and a complete-mode aggregation's providers hold
+    * the full keyed state ON-HEAP (q264: one counter per (day, user);
+    * measured at the 100× decade polluting in-band successors — q289
+    * ran 92 s in-band after q264 vs 10.1 s solo). `deleteDir = false`
+    * keeps a caller-pinned checkpoint for restart-path queries; the
+    * unload is still correct there (a restarted query reloads
+    * providers from the checkpoint files). */
+  private def dropStreamScaffolding(ckpt: String, deleteDir: Boolean): Unit = {
     val t0 = System.nanoTime()
     org.apache.spark.sql.graftbridge.Bridge.unloadStateStores()
     val t1 = System.nanoTime()
@@ -72,6 +61,37 @@ object EventStream {
       f"delete=${(t2 - t1) / 1e6}%.0fms $ckpt")
   }
 
+  /** The one stream drain: runs `stream` under a unique query name
+    * (`tag` + a UUID) with the availableNow trigger, which processes
+    * the backlog and stops, then tears down (even when the query
+    * fails, so repeated runs leave no checkpoints behind). `sink`
+    * completes the writer: a memory format or a foreachBatch. The
+    * checkpoint is run-private under [[ckptDir]] and deleted, unless
+    * the caller pins `ckpt`, which is kept for a later restart.
+    * Returns the query name, which is a memory sink's table name. */
+  private def drain(stream: DataFrame, tag: String, mode: String,
+      ckpt: Option[String] = None)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): String = {
+    val name = tag + "_" + UUID.randomUUID().toString.replace("-", "")
+    val dir = ckpt.getOrElse(ckptDir(name))
+    val q = sink(stream.writeStream
+      .outputMode(mode)
+      .queryName(name)
+      .option("checkpointLocation", dir)
+      .trigger(Trigger.AvailableNow()))
+      .start()
+    try q.awaitTermination()
+    finally dropStreamScaffolding(dir, deleteDir = ckpt.isEmpty)
+    name
+  }
+
+  /** A stream-private session: shares the SparkContext (same executors,
+    * same caches) but carries its own SQLConf, so a stream's narrow
+    * state-store shuffle width is scoped to the streaming query instead
+    * of mutating the caller's session, where the async micro-batch
+    * planner would race any concurrent query. `newSession()` inherits
+    * the context-level defaults (timezone, AQE) from the SparkConf; the
+    * two confs the streams need are set explicitly. */
   private def streamSession(spark: SparkSession, shufflePartitions: Int): SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -85,7 +105,6 @@ object EventStream {
     * batch DataFrame (from the in-memory sink). Output matches
     * `EventOps.q30EventsTumbling` row-for-row. */
   def tumblingCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "evt_" + UUID.randomUUID().toString.replace("-", "")
     // stream-scoped shuffle width: each state-store partition carries
     // fixed open/commit overhead per micro-batch, which dominates at
     // local scale — 8 partitions instead of the session's 32 roughly
@@ -101,19 +120,7 @@ object EventStream {
         count(lit(1)).as("n_events"),
         graft.operators.Relational.moneySum($"value").as("sum_value"),
         approx_count_distinct($"user_id").as("approx_users"))
-    val ckpt = ckptDir(name)
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    // the uniquely-named checkpoint can never be resumed — remove it
-    // even when the query fails, so repeated Verify/Bench runs don't
-    // accumulate orphans in /tmp
-    try q.awaitTermination()
-    finally dropStreamScaffolding(ckpt)
+    val name = drain(stream, "evt", "complete")(_.format("memory"))
     ss.table(name)
       .select(
         date_format($"win.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
@@ -128,7 +135,6 @@ object EventStream {
     * entries per key instead of one, which is the memory trade sliding
     * windows make at any scale. */
   def slidingCounts(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "evs_" + UUID.randomUUID().toString.replace("-", "")
     val ss = streamSession(spark, 8)
     val stream = rawEvents(ss, sfDir)
       .withWatermark("ts", "1 hour")
@@ -138,16 +144,7 @@ object EventStream {
       .agg(
         count(lit(1)).as("n_events"),
         graft.operators.Relational.moneySum($"value").as("sum_value"))
-    val ckpt = ckptDir(name)
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally dropStreamScaffolding(ckpt)
+    val name = drain(stream, "evs", "complete")(_.format("memory"))
     ss.table(name)
       .select(
         date_format($"win.start", "yyyy-MM-dd HH:mm:ss").as("window_start"),
@@ -163,12 +160,10 @@ object EventStream {
     * (rel_sec, event_id) ≡ ordering by (ts_sec, event_id) — identical
     * picks, but the seconds need only 12 bits instead of 31, leaving
     * event_id 51 bits (≈2.3·10¹⁵ — a genuine 100 TB tick-archive
-    * bound). The round-13 10× streaming sweep is WHY: the original
-    * absolute-seconds split capped ids at 2²⁴ ≈ 16.8 M and the
-    * replicated 10× event ids (~2·10⁷) tripped the loud guard — no
-    * aliasing (the guard is the point: an over-bound id would silently
-    * order as a tick one second later), but a ceiling any year of
-    * real ingest crosses. Bound still enforced LOUDLY per row.
+    * bound; an absolute-seconds split would cap ids at 2²⁴ ≈ 16.8 M,
+    * a ceiling the 10× event ids (~2·10⁷) and any year of real ingest
+    * cross). The bound is enforced LOUDLY per row: an over-bound id
+    * would silently order as a tick one second later.
     * pmod, not %: Spark's % keeps the dividend's sign, so a pre-epoch
     * timestamp (negative seconds) would yield a negative remainder
     * that silently inverts ordering inside its window (in the
@@ -196,7 +191,6 @@ object EventStream {
     * output is the bounded bar-grain aggregate (hours × instruments),
     * never row-grain. */
   def q187StreamOhlc(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "evo_" + UUID.randomUUID().toString.replace("-", "")
     val ss = streamSession(spark, 8)
     val stream = rawEvents(ss, sfDir)
       .withWatermark("ts", "1 hour")
@@ -208,16 +202,7 @@ object EventStream {
         max_by($"value", packedTickKey).as("close"),
         count(lit(1)).as("n_ticks"),
         graft.operators.Relational.moneySum($"value").as("volume"))
-    val ckpt = ckptDir(name)
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally dropStreamScaffolding(ckpt)
+    val name = drain(stream, "evo", "complete")(_.format("memory"))
     ss.table(name)
       .select($"event_type",
         date_format($"win.start", "yyyy-MM-dd HH:00").as("bar"),
@@ -260,20 +245,12 @@ object EventStream {
     * at the late-arrival window — not the stream length — at any
     * scale. Returns the deduped count. */
   def dedupCount(spark: SparkSession, sfDir: String): Long = {
-    val name = "dedup_" + UUID.randomUUID().toString.replace("-", "")
-    val q = rawEvents(spark, sfDir)
+    val counted = rawEvents(spark, sfDir)
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id")
       .groupBy()
       .count()
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.spark.sql.graftbridge.Bridge.unloadStateStores()
+    val name = drain(counted, "dedup", "complete")(_.format("memory"))
     spark.table(name).head().getLong(0)
   }
 
@@ -340,9 +317,8 @@ object EventStream {
     * end is last event + gap, and two events split iff their gap
     * STRICTLY exceeds 30 min — Spark merges `next.start <= prev.end`,
     * i.e. an exactly-gap follower extends the session (pinned by the
-    * crafted StreamingSpec boundary case; the first mirror draft used
-    * `>=` and agreed on the real corpus by luck — the sub-1% latent
-    * mismatch class the determinism rules exist for). Scale:
+    * crafted StreamingSpec boundary case: a `>=` mirror agrees on the
+    * real corpus and still mismatches there). Scale:
     * complete mode is the oracle harness, not the deployment shape — a
     * production run uses append mode, where the same per-(user, open
     * session) state is watermark-evicted and closed sessions stream
@@ -385,52 +361,22 @@ object EventStream {
     * DataFrame — the scale-safe alternative to a `memory` sink for any
     * stream whose output is NOT a bounded-cardinality aggregate:
     * executors append each micro-batch directly, no row ever rides the
-    * driver (round-8 advice #2). `memory` sinks remain only on the
-    * aggregated complete/1-row surfaces, ratcheted in ScaleSpec.
-    * The checkpoint is run-private and deleted; the store is left for
-    * the session to read lazily (same lifecycle as q159's upsert
-    * store). If the stream emitted zero batches the store may not
-    * exist — callers' streams here always see ≥1 micro-batch, and the
-    * batch write lays the schema down even when a batch has 0 rows. */
-  /** Run-private stream stores created by this JVM — reclaimed by a
-    * shutdown hook so repeated Verify/Bench runs don't accumulate
-    * corpus-sized directories in /tmp (the memory sinks these drains
-    * replaced at least died with the session; the parquet stores must
-    * too). Exit-time deletion, not eager: the returned DataFrames read
-    * the stores LAZILY, so any earlier delete races the consumer. */
-  private val tmpStores = scala.collection.mutable.ArrayBuffer.empty[String]
-  private lazy val storeCleanupHook: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tmpStores.synchronized(tmpStores.toList).foreach { p =>
-        new scala.reflect.io.Directory(new java.io.File(p)).deleteRecursively()
-        ()
-      }))
-    ()
-  }
-  private[graft] def registerTmpStore(path: String): Unit = {
-    storeCleanupHook
-    tmpStores.synchronized { tmpStores += path; () }
-  }
-
+    * driver. `memory` sinks remain only on the aggregated
+    * complete/1-row surfaces, ratcheted in ScaleSpec. The store is a
+    * [[Scratch]] directory, deleted at JVM exit rather than after the
+    * drain: the returned DataFrame reads it LAZILY, so any earlier
+    * delete races the consumer. If the stream emitted zero batches the
+    * store may not exist — callers' streams here always see ≥1
+    * micro-batch, and the batch write lays the schema down even when a
+    * batch has 0 rows. */
   private def drainToParquet(stream: DataFrame, tag: String,
       mode: String = "append"): DataFrame = {
-    val name = tag + "_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = ckptDir(name)
-    val store = s"/tmp/graft_stream_store_$name"
-    registerTmpStore(store)
-    val spark = stream.sparkSession
-    val q = stream.writeStream
-      .outputMode(mode)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(store)
-        ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally dropStreamScaffolding(ckpt)
-    spark.read.parquet(store)
+    val store = Scratch.uniqueDir("stream_store")
+    drain(stream, tag, mode)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+      batch.write.mode("append").parquet(store)
+      ()
+    })
+    stream.sparkSession.read.parquet(store)
   }
 
   /** Open-session state carried across micro-batches. */
@@ -454,12 +400,6 @@ object EventStream {
       gapSec: Long): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    // round 16: the ONE streaming surface still running on the
-    // caller's session (32 state-store partitions) — every other
-    // drain uses the narrow stream-scoped width because each state
-    // partition carries fixed per-micro-batch open/commit overhead
-    // (see streamSession). Same rows at any width (grouping is
-    // per-user; the final orderBy pins the order).
     val ss = streamSession(spark, 8)
     val stream = rawEvents(ss, sfDir)
       .select(col("user_id"), col("ts").cast("long").as("sec"))
@@ -556,7 +496,6 @@ object EventStream {
     * enrich-on-ingest pattern (fact stream + slowly-read dims) every
     * streaming warehouse front-door runs. */
   def streamStaticEnrich(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "enr_" + UUID.randomUUID().toString.replace("-", "")
     val ss = streamSession(spark, 8)
     val dim = broadcast(Tables.customer(ss, sfDir)
       .select($"c_custkey", $"c_mktsegment"))
@@ -566,16 +505,7 @@ object EventStream {
       .agg(
         count(lit(1)).as("n_events"),
         graft.operators.Relational.moneySum($"value").as("sum_value"))
-    val ckpt = ckptDir(name)
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally dropStreamScaffolding(ckpt)
+    val name = drain(stream, "enr", "complete")(_.format("memory"))
     ss.table(name)
       .select($"c_mktsegment", $"event_type", $"n_events", $"sum_value")
       .orderBy($"c_mktsegment", $"event_type")
@@ -616,26 +546,19 @@ object EventStream {
     * identical. */
   def streamUpsertSink(spark: SparkSession, sfDir: String,
       storePath: String): DataFrame = {
-    val name = "ups_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = ckptDir(name)
-    val q = rawEvents(spark, sfDir)
+    val events = rawEvents(spark, sfDir)
       .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // a corrupt store fails the batch rather than reading as empty
-        // (round-7 verdict, defect #1): Staging.readStore recovers only
-        // a crash inside the publish window
+    drain(events, "ups", "append")(_.foreachBatch {
+      (batch: DataFrame, _: Long) =>
+        // a corrupt store fails the batch rather than reading as empty:
+        // Staging.readStore recovers only a crash inside the publish
+        // window
         val target = Staging.readStore(spark, storePath, "upsert sink")
           .getOrElse(batch.limit(0))
         Staging.publishStore(
           Staging.upsertByNaturalKey(target, batch, Seq("event_id")),
           storePath, "upsert sink")
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally dropStreamScaffolding(ckpt)
+    })
     spark.read.parquet(storePath)
   }
 
@@ -754,11 +677,9 @@ object EventStream {
     * Output is projected to the deterministic grid (epoch seconds,
     * integer cents — README rules) and ordered by the natural key. */
   def q159StreamUpsert(spark: SparkSession, sfDir: String): DataFrame = {
-    val store = s"/tmp/graft_upsert_store_" +
-      UUID.randomUUID().toString.replace("-", "")
-    // same exit-time reclamation as the drainToParquet stores (the
-    // sink's .new/.bak siblings are transient — gone by publish time)
-    registerTmpStore(store)
+    // exit-time reclamation like the drainToParquet stores (the sink's
+    // .new/.bak siblings are transient — gone by publish time)
+    val store = Scratch.uniqueDir("upsert_store")
     streamUpsertSink(spark, sfDir, store)
     val stored = streamUpsertSink(spark, sfDir, store)
     stored.select(
@@ -795,10 +716,9 @@ object EventStream {
     * Scale shape: the deduped stream drains via foreachBatch into a
     * run-private parquet store (executor-side appends, like q159's
     * sink) and the census aggregates THAT — no row of the event stream
-    * ever touches the driver. The earlier `memory`-sink draft here
-    * materialized the whole deduped corpus driver-side (round-8
-    * advice #2); ScaleSpec's sink ratchet now counts memory sinks so
-    * that shape can't silently return. */
+    * ever touches the driver; ScaleSpec's sink ratchet counts memory
+    * sinks so a driver-side drain of the deduped corpus can't
+    * silently appear. */
   def q165StreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val ss = streamSession(spark, 8)
     val deduped = rawEvents(ss, sfDir)
@@ -821,12 +741,12 @@ object EventStream {
   // q260: streaming near-dup front door — ingest-time dedup lookup
   // ---------------------------------------------------------------
 
-  /** The ingest-time shape of the dedup story (round-10 verdict item
-    * 4): a stream of incoming documents labeled against the STAGED
-    * q50 near-dup clusters — every arriving doc gets its canonical
-    * representative and a keep/drop action, exactly what a production
-    * pipeline's front door runs before admitting a document to the
-    * training corpus. Composes [[streamStaticEnrich]]'s stream-static
+  /** The ingest-time shape of the dedup story: a stream of incoming
+    * documents labeled against the STAGED q50 near-dup clusters —
+    * every arriving doc gets its canonical representative and a
+    * keep/drop action, exactly what a production pipeline's front door
+    * runs before admitting a document to the training corpus.
+    * Composes [[streamStaticEnrich]]'s stream-static
     * join pattern with [[graft.operators.TextOps.q50DedupClusters]]'s
     * materialized-once cluster relation.
     *
@@ -918,12 +838,8 @@ object EventStream {
     // the monotone-ingest high-water mark starts at the indexed corpus
     val seed = cutDf.head().getLong(0) - 1L
     val maxSeen = new java.util.concurrent.atomic.AtomicLong(seed)
-    val name = "ilsh_" + UUID.randomUUID().toString.replace("-", "")
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckptDir(name))
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    drain(stream, "ilsh", "append")(_.foreachBatch {
+      (batch: DataFrame, _: Long) =>
         val bounds = batch.agg(min($"doc_id"), max($"doc_id")).head()
         if (!bounds.isNullAt(0)) {
           require(bounds.getLong(0) > maxSeen.get(),
@@ -939,10 +855,7 @@ object EventStream {
           TextOps.bandsOf(batch).write.mode("append").parquet(bandsDir)
           maxSeen.set(bounds.getLong(1))
         }
-      }
-      .start()
-    try q.awaitTermination()
-    finally dropStreamScaffolding(ckptDir(name))
+    })
     val appended =
       if (new java.io.File(pairsDir).exists())
         stagedPairs.unionByName(ss.read.parquet(pairsDir))
@@ -976,22 +889,12 @@ object EventStream {
     * (count desc, user_id) tie-break (README rule: every window
     * ORDER BY totally ordered). */
   def q264StreamHeavyHitters(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = "hh_" + UUID.randomUUID().toString.replace("-", "")
     val ss = streamSession(spark, 8)
     val stream = rawEvents(ss, sfDir)
       .withWatermark("ts", "1 hour")
       .groupBy(window($"ts", "1 day").as("win"), $"user_id")
       .agg(count(lit(1)).as("n_events"))
-    val ckpt = ckptDir(name)
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally dropStreamScaffolding(ckpt)
+    val name = drain(stream, "hh", "complete")(_.format("memory"))
     val w = Window.partitionBy($"win").orderBy($"n_events".desc, $"user_id")
     ss.table(name)
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -1021,8 +924,7 @@ object EventStream {
 
   /** The SCALE-SAFE heavy-hitter readout — q264's output (per tumbling
     * day window, the top-[[HhTopK]] users by event count) produced by
-    * the shape a 100 TB deployment actually runs, closing the one
-    * `weak` grade of the round-12 verdict:
+    * the shape a 100 TB deployment actually runs:
     *
     *   - the windowed count aggregate runs in `update` output mode
     *     under the 1-hour watermark, so the state store holds one
@@ -1100,29 +1002,20 @@ object EventStream {
     * StreamingSpec can drive a multi-batch file feed through the
     * cut-and-re-enter path. */
   private[graft] def heavyHitterStream(ss: SparkSession, src: DataFrame): DataFrame = {
-    val name = "hhu_" + UUID.randomUUID().toString.replace("-", "")
-    val store = s"/tmp/graft_hh_store_$name"
-    registerTmpStore(store)
+    val store = Scratch.uniqueDir("hh_store")
     val stream = src
       .withWatermark("ts", "1 hour")
       .groupBy(window($"ts", "1 day").as("win"), $"user_id")
       .agg(count(lit(1)).as("n_events"))
       .select($"win.start".as("win_start"), $"user_id", $"n_events")
-    val ckpt = ckptDir(name)
-    val q = stream.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    drain(stream, "hhu", "update")(_.foreachBatch {
+      (batch: DataFrame, _: Long) =>
         val target = Staging
           .readStore(batch.sparkSession, store, "heavy-hitter store")
           .getOrElse(batch.limit(0))
         Staging.publishStore(hhMergeCut(target, batch), store,
           "heavy-hitter store")
-      }
-      .start()
-    try q.awaitTermination()
-    finally dropStreamScaffolding(ckpt)
+    })
     ss.read.parquet(store)
       .select(date_format($"win_start", "yyyy-MM-dd").as("day"),
         $"rank", $"user_id", $"n_events")
@@ -1190,8 +1083,8 @@ object EventStream {
   /** One micro-batch merge into the per-day CMS store — the
     * foreachBatch body of [[cmsHeavyHitters]], split out so
     * PropertySpec can drive it directly with random multisets, random
-    * batch splits and a random crash-and-replay point (the round-14
-    * verdict's executable-law ask). `batch` is (day, user_id) rows;
+    * batch splits and a random crash-and-replay point. `batch` is
+    * (day, user_id) rows;
     * sketch addition is non-idempotent, so effective-once rides the
     * PERSISTED batch_id mark (read back from the store rows as the
     * high-water before merging — a replay after a publish-then-crash,
@@ -1240,23 +1133,14 @@ object EventStream {
   private[graft] def cmsHeavyHitters(ss: SparkSession, src: DataFrame,
       probeEvents: DataFrame): DataFrame = {
     import graft.operators.TextOps.CmsD
-    val name = "cmshh_" + UUID.randomUUID().toString.replace("-", "")
-    val store = s"/tmp/graft_cmshh_store_$name"
-    registerTmpStore(store)
+    val store = Scratch.uniqueDir("cmshh_store")
     val lastBatch = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val stream = src.select(
       date_format($"ts", "yyyy-MM-dd").as("day"), $"user_id")
-    val ckpt = ckptDir(name)
-    val q = stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    drain(stream, "cmshh", "append")(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         cmsStoreMerge(batch, batchId, store, lastBatch)
-      }
-      .start()
-    try q.awaitTermination()
-    finally dropStreamScaffolding(ckpt)
+    })
     val cms = ss.read.parquet(store).drop("batch_id")
     val users = probeEvents
       .select(date_format($"ts", "yyyy-MM-dd").as("day"), $"user_id")
@@ -1349,15 +1233,15 @@ object EventStream {
     * value) stream — split from [[q287StreamSprt]] so StreamingSpec
     * can drive a multi-batch file feed.
     *
-    * RESTART-SAFE (round-12 verdict item 6 / round-13 advice 1): the
-    * carried per-type state is driver-held between batches but no
-    * longer dies with the JVM — after every processed batch the full
-    * (n, S, latched) table plus (batch_id, hi_water) is snapshotted to
-    * a parquet table INSIDE the checkpoint directory (two-rename
-    * publish, surviving .bak promoted on recovery), so the state has
-    * exactly the checkpoint's lifetime: a run-private drain deletes
-    * both, a caller-pinned `fixedCkpt` makes a later sprtStream call
-    * resume the walk where the dead JVM left it. Replay idempotence:
+    * RESTART-SAFE: the carried per-type state is driver-held between
+    * batches but does not die with the JVM — after every processed
+    * batch the full (n, S, latched) table plus (batch_id, hi_water) is
+    * snapshotted to a parquet table (two-rename publish, surviving
+    * .bak promoted on recovery). With a caller-pinned `fixedCkpt` the
+    * snapshot lives INSIDE that checkpoint, so a later sprtStream call
+    * on it resumes the walk where the dead JVM left it; a run-private
+    * walk keeps it in a [[Scratch]] directory nothing else reads.
+    * Replay idempotence:
     * foreachBatch is at-least-once, and a replayed batch (its batchId
     * ≤ the snapshot's) is SKIPPED — its effect is already folded into
     * the snapshot, and without the skip the monotone-ingest require
@@ -1371,9 +1255,8 @@ object EventStream {
     val hiWater = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val lastBatch = new java.util.concurrent.atomic.AtomicLong(Long.MinValue)
     val restored = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val name = "sprt_" + UUID.randomUUID().toString.replace("-", "")
-    val ckpt = fixedCkpt.getOrElse(ckptDir(name))
-    val stateDir = s"$ckpt/graft_sprt_state"
+    val stateDir = fixedCkpt.fold(Scratch.uniqueDir("sprt_state"))(
+      ckpt => s"$ckpt/graft_sprt_state")
     def restoreOnce(sp: SparkSession): Unit =
       if (restored.compareAndSet(false, true))
         Staging.readStore(sp, stateDir, "sprtStream state snapshot")
@@ -1396,11 +1279,8 @@ object EventStream {
           .coalesce(1),
         stateDir, "sprtStream state snapshot")
     }
-    val q = src.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    drain(src, "sprt", "append", fixedCkpt)(_.foreachBatch {
+      (batch: DataFrame, batchId: Long) =>
         val sp = batch.sparkSession
         restoreOnce(sp)
         if (batchId <= lastBatch.get()) {
@@ -1473,10 +1353,7 @@ object EventStream {
         // regressing even if a future edit reorders the branches
         lastBatch.set(math.max(lastBatch.get(), batchId))
         }
-      }
-      .start()
-    try q.awaitTermination()
-    finally dropStreamScaffolding(ckpt, deleteDir = fixedCkpt.isEmpty)
+    })
     val rows = state.toSeq.map { case (t, (n, s0, dec)) =>
       (t, n, EventOps.SprtLnRMicro * (2L * s0 - n),
         dec.map(_._1), dec.map(_._2),

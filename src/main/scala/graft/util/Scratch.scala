@@ -1,15 +1,19 @@
 package graft.util
 
-/** Per-JVM scratch directories for the write→read-back sink oracles
-  * (q171 audit trail, q267 schema evolution, q271/q272/q273 sink round
-  * trips). A path is keyed by purpose + pid + a sanitized corpus tag,
-  * so two corpora probed in one JVM never share a directory (a lazily
-  * held DataFrame from the first call would silently read the second
-  * corpus's files), and two JVMs never race. The directory is wiped on
-  * the FIRST claim per JVM (not on repeats — a live plan from an
-  * earlier identical call may still read it; the rewrite is
-  * mode=overwrite anyway) and deleted at JVM exit, so nothing leaks
-  * into /tmp across runs.
+/** Per-JVM scratch directories: the only owner of run-private paths
+  * under /tmp. Two kinds of caller claim them: the write→read-back sink
+  * oracles (q171 audit trail, q193/q198/q267 layout round trips,
+  * q271/q272/q273 sink round trips), keyed by purpose + pid + a
+  * sanitized corpus tag, and the stream stores (drainToParquet, the
+  * upsert and heavy-hitter stores), one unique directory per call. A
+  * corpus-keyed path means two corpora probed in one JVM never share a
+  * directory (a lazily held DataFrame from the first call would
+  * silently read the second corpus's files), and the pid means two
+  * JVMs never race. A directory is wiped on the FIRST claim per JVM
+  * (not on repeats — a live plan from an earlier identical call may
+  * still read it; the rewrite is mode=overwrite anyway). One exit hook,
+  * registered by the first claim, deletes every claimed directory, so
+  * nothing leaks into /tmp across runs.
   */
 object Scratch {
 
@@ -23,23 +27,27 @@ object Scratch {
     val path =
       s"/tmp/graft_${purpose}_${ProcessHandle.current().pid()}_$tag"
     claimed.synchronized {
-      if (claimed.add(path)) {
-        wipe(path)
-        Runtime.getRuntime.addShutdownHook(new Thread(() => wipe(path)))
-      }
+      if (claimed.isEmpty)
+        Runtime.getRuntime.addShutdownHook(new Thread(() =>
+          claimed.synchronized(claimed.toList).foreach(wipe)))
+      if (claimed.add(path)) wipe(path)
     }
     path
   }
 
   /** Like [[dir]], but wiped on EVERY call: for sinks that APPEND
     * during the call (q171's audit trail), where a leftover from an
-    * earlier call would double the result. The exit hook still
-    * registers only once. */
+    * earlier call would double the result. */
   def freshDir(purpose: String, tagSource: String): String = {
     val path = dir(purpose, tagSource)
     wipe(path)
     path
   }
+
+  /** A claimed directory no other call shares: for a store one call
+    * writes and the DataFrame it returns reads lazily. */
+  def uniqueDir(purpose: String): String =
+    dir(purpose, java.util.UUID.randomUUID().toString.replace("-", ""))
 
   /** Sanitized corpus tag, usable in catalog TABLE names (saveAsTable
     * sinks need per-corpus tables for the same non-collision reason;

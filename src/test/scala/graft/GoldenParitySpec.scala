@@ -139,18 +139,20 @@ class GoldenParitySpec extends AnyFunSuite {
       col("mo"), col("last").cast("double")), 2010, Seq(2, 3))
     val spread = Extracts.spread(ny)
     val dir = java.nio.file.Files.createTempDirectory("graft_golden").toString
-    Extracts.writeGoldenCsv(spread, s"$dir/spread", Seq("date_actual"))
-    val back = spark.read.option("header", "true").csv(s"$dir/spread")
-    assert(back.columns.toSeq === Seq("spread_max_min", "date_actual"))
-    // the reference's date rendering: 'YYYY-MM-DD HH:MM:SS'
-    assert(back.filter(
-      !col("date_actual").rlike("^\\d{4}-\\d{2}-\\d{2} 00:00:00$")).count() === 0)
-    // values round-trip: parse back and compare to the frame written
-    val parsed = back.select(col("spread_max_min").cast("double"),
-      to_date(col("date_actual")).as("date_actual"))
-    assert(spread.count() > 200)
-    assert(parsed.exceptAll(spread).count() === 0)
-    assert(spread.exceptAll(parsed).count() === 0)
+    try {
+      Extracts.writeGoldenCsv(spread, s"$dir/spread", Seq("date_actual"))
+      val back = spark.read.option("header", "true").csv(s"$dir/spread")
+      assert(back.columns.toSeq === Seq("spread_max_min", "date_actual"))
+      // the reference's date rendering: 'YYYY-MM-DD HH:MM:SS'
+      assert(back.filter(
+        !col("date_actual").rlike("^\\d{4}-\\d{2}-\\d{2} 00:00:00$")).count() === 0)
+      // values round-trip: parse back and compare to the frame written
+      val parsed = back.select(col("spread_max_min").cast("double"),
+        to_date(col("date_actual")).as("date_actual"))
+      assert(spread.count() > 200)
+      assert(parsed.exceptAll(spread).count() === 0)
+      assert(spread.exceptAll(parsed).count() === 0)
+    } finally new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 
   test("ohlcv.csv reads with literal-null handling: the manifest's rows and null closes") {

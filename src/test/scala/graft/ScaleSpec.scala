@@ -662,6 +662,38 @@ class ScaleSpec extends AnyFunSuite {
         "site's per-key bound (cap BEFORE the aggregation), then register it")
   }
 
+  test("every /tmp path literal in src/main is registered") {
+    // run-private directories come from graft.util.Scratch, which keys
+    // them by pid and corpus tag and deletes them at JVM exit; a path
+    // built by hand under /tmp is one nobody deletes, and two corpora
+    // in one JVM share it. Only the roots below may name /tmp: each is
+    // shared by design or overridable, and its owner cleans it.
+    val allowed = Map(
+      "util/Scratch.scala" -> (1, "the run-private root itself"),
+      "operators/Staged.scala" -> (1,
+        "default stage-store root (graft.stage.dir), shared across runs"),
+      "Harness.scala" -> (1, "the session's warehouse dir"),
+      "Bench.scala" -> (3,
+        "the contract's JSON output (canonical and sf-tagged) and its " +
+          "private per-run stage store"),
+      "Pipeline.scala" -> (1, "default output dir (argument override)"),
+      "streaming/EventStream.scala" -> (1,
+        "ckptDir's default base (SPARK_GRAFT_CKPT_BASE override)"))
+    val root = java.nio.file.Paths.get("src/main/scala/graft")
+    val found = scala.collection.mutable.Map.empty[String, Int]
+    java.nio.file.Files.walk(root).forEach { p =>
+      if (p.toString.endsWith(".scala")) {
+        val n = "\"/tmp\\b".r
+          .findAllMatchIn(new String(java.nio.file.Files.readAllBytes(p))).size
+        if (n > 0) found(root.relativize(p).toString) = n
+      }
+    }
+    assert(found.toMap === allowed.view.mapValues(_._1).toMap,
+      s"/tmp path literals drifted from the registered roots (found " +
+        s"$found): take a run-private directory from graft.util.Scratch, " +
+        "or register the new root here with the reason it may name /tmp")
+  }
+
   test("q162 shared passages: native fp arrays, no char-grain explode or window") {
     // the census must ride the single-pass WinnowFps expression: one
     // Generate (exploding the ~len/w selected prints), NO Window — a

@@ -95,18 +95,20 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("foreachBatch upsert sink: store equals batch events; rerun is a no-op") {
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_upsert_store").toString + "/events"
-    val first = EventStream.streamUpsertSink(spark, d, store)
-      .select($"event_id").collect().map(_.getLong(0)).toSet
-    val batchIds = Tables.events(spark, d)
-      .select($"event_id").collect().map(_.getLong(0)).toSet
-    assert(first === batchIds)
-    // second full run re-delivers every event — the idempotent upsert
-    // must leave the store EXACTLY as it was (effectively-once)
-    val second = EventStream.streamUpsertSink(spark, d, store)
-    assert(second.count() === batchIds.size.toLong)
-    assert(second.select($"event_id").distinct().count() === batchIds.size.toLong)
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_store")
+    val store = dir.toString + "/events"
+    try {
+      val first = EventStream.streamUpsertSink(spark, d, store)
+        .select($"event_id").collect().map(_.getLong(0)).toSet
+      val batchIds = Tables.events(spark, d)
+        .select($"event_id").collect().map(_.getLong(0)).toSet
+      assert(first === batchIds)
+      // second full run re-delivers every event — the idempotent upsert
+      // must leave the store EXACTLY as it was (effectively-once)
+      val second = EventStream.streamUpsertSink(spark, d, store)
+      assert(second.count() === batchIds.size.toLong)
+      assert(second.select($"event_id").distinct().count() === batchIds.size.toLong)
+    } finally new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
   }
 
   test("upsert sink: a corrupt store fails loudly instead of truncating") {
@@ -117,15 +119,17 @@ class StreamingSpec extends AnyFunSuite {
     // but is not readable parquet must now fail the batch — and leave
     // the corrupt store untouched for forensics.
     val dir = java.nio.file.Files.createTempDirectory("graft_upsert_corrupt")
-    val store = dir.toString + "/events"
-    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(store))
-    val junk = java.nio.file.Paths.get(store, "part-00000.parquet")
-    java.nio.file.Files.write(junk, "this is not a parquet file".getBytes)
-    intercept[Exception] {
-      EventStream.streamUpsertSink(spark, d, store)
-    }
-    assert(java.nio.file.Files.exists(junk),
-      "the unreadable store must survive the failed run untouched")
+    try {
+      val store = dir.toString + "/events"
+      java.nio.file.Files.createDirectory(java.nio.file.Paths.get(store))
+      val junk = java.nio.file.Paths.get(store, "part-00000.parquet")
+      java.nio.file.Files.write(junk, "this is not a parquet file".getBytes)
+      intercept[Exception] {
+        EventStream.streamUpsertSink(spark, d, store)
+      }
+      assert(java.nio.file.Files.exists(junk),
+        "the unreadable store must survive the failed run untouched")
+    } finally new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
   }
 
   test("upsert sink: recovers the .bak store when a crash left no live path") {
@@ -133,14 +137,16 @@ class StreamingSpec extends AnyFunSuite {
     // as .bak but the fresh store was never renamed in — on the next
     // batch the sink must resume from the backup, not restart empty
     val dir = java.nio.file.Files.createTempDirectory("graft_upsert_bak")
-    val store = dir.toString + "/events"
-    EventStream.streamUpsertSink(spark, d, store)
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(store), java.nio.file.Paths.get(store + ".bak"))
-    val recovered = EventStream.streamUpsertSink(spark, d, store)
-    val n = Tables.events(spark, d).count()
-    assert(recovered.count() === n)
-    assert(recovered.select($"event_id").distinct().count() === n)
+    try {
+      val store = dir.toString + "/events"
+      EventStream.streamUpsertSink(spark, d, store)
+      java.nio.file.Files.move(
+        java.nio.file.Paths.get(store), java.nio.file.Paths.get(store + ".bak"))
+      val recovered = EventStream.streamUpsertSink(spark, d, store)
+      val n = Tables.events(spark, d).count()
+      assert(recovered.count() === n)
+      assert(recovered.select($"event_id").distinct().count() === n)
+    } finally new scala.reflect.io.Directory(dir.toFile).deleteRecursively()
   }
 
   test("mapGroupsWithState final per-user counts equal batch group counts") {
