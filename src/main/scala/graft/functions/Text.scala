@@ -89,13 +89,10 @@ object Text {
   def fingerprintNormalized(text: Column): Column =
     md5(trim(regexp_replace(lower(text), " +", " ")))
 
-  /** 64-bit rolling-style document hash via xxhash64 (Spark-native,
-    * codegen'd). No DuckDB equivalent — used by non-oracled ops. */
-  def fingerprint64(text: Column): Column = xxhash64(text)
-
   /** Crude n-gram language-ID heuristic: scores text against per-language
-    * marker words and picks the argmax. Marker lists are tiny and
-    * broadcast as literals inside the expression — no join, no shuffle. */
+    * marker words ([[graft.operators.TextOps.q21LangId]] picks the
+    * argmax). Marker lists are tiny and broadcast as literals inside the
+    * expression — no join, no shuffle. */
   val langMarkers: Map[String, Seq[String]] = Map(
     "en" -> Seq("the", "and", "of"),
     "es" -> Seq("el", "la", "de"),
@@ -111,18 +108,5 @@ object Text {
       // engine (round 16, see stopwordCount)
       (length(padded) - length(replace(padded, lit(s" $w "), lit("")))) / gap
     }.reduce(_ + _)
-  }
-
-  /** Argmax over [[langMarkers]] scores — ties resolve to the
-    * lexicographically FIRST language code, matching
-    * [[graft.operators.TextOps.q21LangId]]'s ordered CASE chain (and its
-    * DuckDB oracle) exactly. */
-  def languageId(text: Column): Column = {
-    val langs = langMarkers.toSeq.sortBy(_._1)
-    val scores = langs.map { case (lang, ws) => lang -> langScore(text, ws) }
-    scores.init.foldRight(lit(langs.last._1)) { case ((lang, score), rest) =>
-      val ge = scores.filter(_._1 != lang).map(o => score >= o._2).reduce(_ && _)
-      when(ge, lit(lang)).otherwise(rest)
-    }
   }
 }

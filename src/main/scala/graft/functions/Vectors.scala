@@ -16,10 +16,6 @@ import org.apache.spark.sql.graftbridge.Bridge
   */
 object Vectors {
 
-  /** Σ f(a_i) as a left fold in element order, double accumulator. */
-  private def foldSum(arr: Column): Column =
-    aggregate(arr, lit(0.0), (acc, x) => acc + x)
-
   /** Σ aᵢ·bᵢ — native codegen'd left fold ([[VecDot]]); bit-identical
     * to `aggregate(zip_with(..))` (same order, same double widening)
     * but it stays inside whole-stage codegen with no per-row

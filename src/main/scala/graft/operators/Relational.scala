@@ -2368,6 +2368,12 @@ object Relational {
       Staged.combine(Staged.planHash(tri), orientedToken(s, d)))(tri)
   }
 
+  /** An iterative operator's eagerly taken census as its result: one
+    * local (metric, value) row per metric, in metric order. */
+  private def censusFrame(s: SparkSession,
+      rows: Seq[(String, Long)]): DataFrame =
+    s.createDataFrame(rows.sortBy(_._1)).toDF("metric", "value")
+
   private def censusRow(name: String, df: DataFrame): DataFrame =
     df.agg(count(lit(1)).as("value"))
       .select(lit(name).as("metric"), $"value")
@@ -2514,14 +2520,13 @@ object Relational {
     * graph only SHRINKS round over round — no transitive closure, no
     * frontier state; at 100 TB each round costs at most one pass over
     * the current edge set, the standard distributed-peel shape. Each
-    * round's edge set is PERSISTED (the GraphX iteration discipline):
-    * round r's relation is referenced by its own census rows AND round
-    * r+1's degree/semi-join subtrees, and without the cache the
-    * re-evaluation doubles per round (2^r edge-build replays — the
-    * measured 80 s cliff at sf0.1); the blocks are metadata beside the
-    * corpus and the ContextCleaner reclaims them when the plan is
-    * garbage-collected. The mirror pins the same shape with
-    * AS MATERIALIZED. */
+    * round's edge set and degree relation are one generation of
+    * [[Blocks.generations]]: the round's census (one aggregate over the
+    * degree relation) is the action that fills both, the next round's
+    * semi joins read them filled, and the superseded generation is
+    * freed right after. Without the caches the re-evaluation doubles
+    * per round (2^r edge-build replays — the measured 80 s cliff at
+    * sf0.1). The mirror pins the same shape with AS MATERIALIZED. */
   def q197KCore(s: SparkSession, d: String): DataFrame =
     kCoreTrace(coEdgesStaged(s, d), KCoreK)
 
@@ -2529,27 +2534,31 @@ object Relational {
     * [[q197KCore]] so the crafted spec can drive a small graph with a
     * small k. */
   private[graft] def kCoreTrace(edges0: DataFrame, k: Long): DataFrame = {
-    def nodes(edges: DataFrame): DataFrame =
-      edges.select(explode(array($"pa", $"pb")).as("p")).distinct()
-    def peel(edges: DataFrame): DataFrame = {
-      val alive = edges.select(explode(array($"pa", $"pb")).as("p"))
-        .groupBy($"p").agg(count(lit(1)).as("deg"))
-        .filter($"deg" >= k).select($"p")
-      edges
-        .join(alive.withColumnRenamed("p", "pa"), Seq("pa"), "leftsemi")
-        .join(alive.withColumnRenamed("p", "pb"), Seq("pb"), "leftsemi")
-        .select($"pa", $"pb")
+    // one degree relation per round is the whole census (nodes = its
+    // rows, edges = Σdeg/2, exact on any edge list) and the next
+    // round's alive set
+    val census = Blocks.generations { gens =>
+      var e = edges0
+      var deg: DataFrame = null
+      (0 to KCoreRounds).flatMap { r =>
+        if (r > 0) {
+          val alive = deg.filter($"deg" >= k).select($"p")
+          e = e
+            .join(alive.withColumnRenamed("p", "pa"), Seq("pa"), "leftsemi")
+            .join(alive.withColumnRenamed("p", "pb"), Seq("pb"), "leftsemi")
+            .select($"pa", $"pb")
+        }
+        e = gens.keep(e)
+        deg = gens.keep(e.select(explode(array($"pa", $"pb")).as("p"))
+          .groupBy($"p").agg(count(lit(1)).as("deg")))
+        val row = gens.fill(s"kcore round $r: census (degree agg)") {
+          deg.agg(count(lit(1)), coalesce(sum($"deg"), lit(0L))).head()
+        }
+        Seq(s"r${r}_nodes" -> row.getLong(0),
+          s"r${r}_edges" -> row.getLong(1) / 2)
+      }
     }
-    def roundRow(r: Int, edges: DataFrame): DataFrame =
-      censusRow(s"r${r}_edges", edges)
-        .unionByName(censusRow(s"r${r}_nodes", nodes(edges)))
-    var e = edges0.persist()
-    var out = roundRow(0, e)
-    for (r <- 1 to KCoreRounds) {
-      e = peel(e).persist()
-      out = out.unionByName(roundRow(r, e))
-    }
-    out.orderBy($"metric")
+    censusFrame(edges0.sparkSession, census)
   }
 
   val q197KCoreSql: String = {
@@ -2636,9 +2645,10 @@ object Relational {
     * corpus-grain work); later rounds re-run the Σ outdeg² wedge close
     * only on the SHRINKING survivor graph (measured: 29k edges by
     * round 1 at sf0.1 — the expensive join runs on ~2% of the edges).
-    * Each round's edge set and support relation are persisted (the
-    * q197 iteration discipline: both are referenced twice — census +
-    * next round). The mirror pins the identical shape with
+    * Each round's triangle and support relations are one generation,
+    * filled by the round's census (the q197 iteration discipline); the
+    * next round's survivor edge set is a filter over the filled support
+    * relation. The mirror pins the identical shape with
     * AS MATERIALIZED per round. */
   def q279KTruss(s: SparkSession, d: String): DataFrame =
     kTrussTrace(coEdgesStaged(s, d), KTrussMinSup,
@@ -2649,13 +2659,12 @@ object Relational {
     * graph with a small threshold and its own trace depth (`rounds`
     * defaults to the live [[KTrussRounds]] — round-12 advice); `tri0`
     * optionally supplies a precomputed round-0 triangle relation (the
-    * live staged path). Census values are collected EAGERLY per round
-    * (a handful of driver-side longs) in ONE action per round — both
-    * census numbers read off the support relation (round-13 verdict
-    * item 2) — and each generation's superseded edge set and support
-    * relation are unpersisted right after the round that consumed
-    * them, so a 285-query session never accumulates dead cached round
-    * relations (round-12 advice) while no round pays a second job.
+    * live staged path). Each round's triangle and support relations
+    * are one generation of [[Blocks.generations]]: ONE census action
+    * per round — both census numbers read off the support relation —
+    * fills both, and the superseded generation is freed right after,
+    * so a 287-query session never accumulates dead round relations
+    * while no round pays a second job.
     * PRECONDITION (already the truss contract): `edges0` is a
     * DISTINCT (pa, pb) pair relation — the survivor census counts
     * passing support rows, which only equals the semijoined edge
@@ -2671,87 +2680,67 @@ object Relational {
         .as("e"))
       .select($"e.pa".as("pa"), $"e.pb".as("pb"))
       .groupBy($"pa", $"pb").agg(count(lit(1)).as("sup"))
-    var e = edges0.persist()
-    val census = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    census += (("r0_edges", e.count()))
-    // the generation superseded LAST round — freed only after this
-    // round's census action has materialized the relations that read
-    // it, so each round runs exactly ONE job (round-13 verdict item 2:
-    // the separate e2.count action is gone) at the price of a bounded
-    // two-generation cache window (edge sets only shrink)
-    var free: Seq[DataFrame] = Nil
-    // round 16 (guide §1.2 step 1 — don't recompute what a filter
-    // gives): rounds ≥ 2 used to re-derive triangles from scratch on
-    // the survivor graph (degree aggregate + orientation joins + wedge
-    // join + closing join — Probe: ~22 AQE stage jobs per round, ~10 s
-    // of the 14.4 s total, on ~29k surviving edges). But edge sets
-    // only SHRINK, so the survivor graph's triangles are exactly the
-    // previous round's triangles whose three edges all survived —
-    // three semi-joins against the (tiny, cached) survivor edge set.
-    // The corner labeling (u = min-(deg,id)) is inherited from the
-    // round that BUILT the triangle rather than re-derived from the
-    // shrunken graph's degrees, which is invisible here: supportOf
-    // keys every corner pair by least/greatest and the census is
-    // corner-blind (the crafted-peel spec replays the full trace
-    // against hand counts).
-    var prevTri: DataFrame = null
-    for (r <- 1 to rounds) {
-      val tri = if (r == 1) tri0.getOrElse(triangleParts(e)._4)
-        else {
-          val ecur = e
-          def keep(tag: String) =
-            ecur.select($"pa".as(s"ka$tag"), $"pb".as(s"kb$tag"))
-          prevTri
-            .join(keep("1"),
-              least($"u", $"v") === $"ka1" && greatest($"u", $"v") === $"kb1",
-              "left_semi")
-            .join(keep("2"),
-              least($"u", $"w") === $"ka2" && greatest($"u", $"w") === $"kb2",
-              "left_semi")
-            .join(keep("3"),
-              least($"v", $"w") === $"ka3" && greatest($"v", $"w") === $"kb3",
-              "left_semi")
+    val census = Blocks.generations { gens =>
+      var e = gens.keep(edges0)
+      val r0 = gens.fill("ktruss round 0: census (edge count)")(e.count())
+      var tri: DataFrame = null
+      ("r0_edges" -> r0) +: (1 to rounds).flatMap { r =>
+        // round 16 (guide §1.2 step 1 — don't recompute what a filter
+        // gives): rounds ≥ 2 used to re-derive triangles from scratch
+        // on the survivor graph (degree aggregate + orientation joins +
+        // wedge join + closing join — Probe: ~22 AQE stage jobs per
+        // round, ~10 s of the 14.4 s total, on ~29k surviving edges).
+        // But edge sets only SHRINK, so the survivor graph's triangles
+        // are exactly the previous round's triangles whose three edges
+        // all survived — three semi-joins against the survivor edge
+        // set. The corner labeling (u = min-(deg,id)) is inherited from
+        // the round that BUILT the triangle rather than re-derived from
+        // the shrunken graph's degrees, which is invisible here:
+        // supportOf keys every corner pair by least/greatest and the
+        // census is corner-blind (the crafted-peel spec replays the
+        // full trace against hand counts).
+        tri = gens.keep(if (r == 1) tri0.getOrElse(triangleParts(e)._4)
+          else {
+            val ecur = e
+            def keep(tag: String) =
+              ecur.select($"pa".as(s"ka$tag"), $"pb".as(s"kb$tag"))
+            tri
+              .join(keep("1"),
+                least($"u", $"v") === $"ka1" && greatest($"u", $"v") === $"kb1",
+                "left_semi")
+              .join(keep("2"),
+                least($"u", $"w") === $"ka2" && greatest($"u", $"w") === $"kb2",
+                "left_semi")
+              .join(keep("3"),
+                least($"v", $"w") === $"ka3" && greatest($"v", $"w") === $"kb3",
+                "left_semi")
+          })
+        val sup = gens.keep(supportOf(tri))
+        // ONE census action per round: the triangle count is
+        // sum(sup)/3, and the survivor-edge count is count(sup >=
+        // minSup) — equal to count(e2) because every support key is a
+        // triangle edge (hence an edge of e) and e is a DISTINCT pair
+        // relation, so the semijoin below keeps exactly one row per
+        // passing support row (the crafted-peel spec replays the whole
+        // trace against hand counts)
+        val row = gens.fill(s"ktruss round $r: census (support agg)") {
+          sup.agg(
+            coalesce(sum($"sup"), lit(0L)),
+            count(when($"sup" >= minSup, lit(1)))).head()
         }
-      val triP = tri.persist()
-      val sup = supportOf(triP).persist()
-      // ONE census action per round: the triangle count is
-      // sum(sup)/3, and the survivor-edge count is count(sup >=
-      // minSup) — equal to count(e2) because every support key is a
-      // triangle edge (hence an edge of e) and e is a DISTINCT pair
-      // relation, so the semijoin below keeps exactly one row per
-      // passing support row (the crafted-peel spec replays the whole
-      // trace against hand counts)
-      val sc = edges0.sparkSession.sparkContext
-      sc.setJobDescription(s"ktruss round $r: census (support agg)")
-      val row = sup.agg(
-        coalesce(sum($"sup"), lit(0L)),
-        count(when($"sup" >= minSup, lit(1)))).head()
-      sc.setJobDescription(null)
-      census += ((s"r${r - 1}_tri", row.getLong(0) / 3L))
-      census += ((s"r${r}_edges", row.getLong(1)))
-      // round 15 (guide §2.4): the survivor edge set is read DIRECTLY
-      // off the support relation — every support key is a triangle
-      // edge of e, and e is a DISTINCT pair relation, so
-      // sup.filter(sup >= minSup).select(pa, pb) IS the old
-      // e ⋉ σ(sup) semijoin's result with the corpus-grain join
-      // removed. The join was not just a wasted shuffle: e2 stayed
-      // lazy until the NEXT round's census, whose triangleParts(e2)
-      // references e2 several times, and each reference re-evaluated
-      // the 1.2M-edge semijoin lineage before the cache filled
-      // (Probe: round-2 census = 11 jobs x ~1.5 s at sf0.1). The
-      // replacement lineage is one filter over the still-cached sup.
-      val e2 = sup.filter($"sup" >= minSup).select($"pa", $"pb").persist()
-      // e2 stays LAZY: next round's census action materializes it
-      // from the still-cached sup (freed one round later)
-      Blocks.release(free: _*)
-      free = Seq(e, sup, prevTri)
-      e = e2
-      prevTri = triP
+        // round 15 (guide §2.4): the survivor edge set is read DIRECTLY
+        // off the support relation — every support key is a triangle
+        // edge of e, and e is a DISTINCT pair relation, so
+        // sup.filter(sup >= minSup).select(pa, pb) IS the old
+        // e ⋉ σ(sup) semijoin's result with the corpus-grain join
+        // removed. It stays a projection of the filled sup: the next
+        // round's three semi joins read it through that cache.
+        e = sup.filter($"sup" >= minSup).select($"pa", $"pb")
+        Seq(s"r${r - 1}_tri" -> row.getLong(0) / 3L,
+          s"r${r}_edges" -> row.getLong(1))
+      }
     }
-    val sess = edges0.sparkSession
-    Blocks.release(free :+ e :+ prevTri: _*)
-    sess.createDataFrame(census.toSeq).toDF("metric", "value")
-      .orderBy($"metric")
+    censusFrame(edges0.sparkSession, census)
   }
 
   val q279KTrussSql: String = {
@@ -3064,12 +3053,12 @@ object Relational {
     * Scale: the textbook Pregel/BSP BFS shape — each round is ONE join
     * of the (shrinking) frontier against the edge list on the
     * entropy-rich part-id key plus one anti join against the reached
-    * set; no per-pair work, no transitive closure. Frontier and
-    * reached sets are PERSISTED per round (the q197/GraphX iteration
-    * discipline: round r's relation feeds both its own census rows and
-    * round r+1's joins — without the cache the edge build re-evaluates
-    * 2^r times, the measured 80 s cliff). The mirror pins the same
-    * shape with AS MATERIALIZED.
+    * set; no per-pair work, no transitive closure. The reached set is
+    * each round's [[Blocks.generations]] generation (the q197
+    * discipline): one count over it is the round's census and the
+    * action that fills it, and round r+1 reads it filled — without the
+    * cache the edge build re-evaluates 2^r times, the measured 80 s
+    * cliff. The mirror pins the same shape with AS MATERIALIZED.
     *
     * Determinism: pure integer node ids and counts; seed choice is a
     * modulus, not a sample. */
@@ -3080,48 +3069,51 @@ object Relational {
     * from [[q225BfsHops]] so the crafted spec can drive a small graph
     * with a small seed modulus (the kCoreTrace pattern). */
   private[graft] def bfsTrace(edges0: DataFrame, seedMod: Long): DataFrame = {
-    val edges = edges0.persist()
-    val nodes = edges.select(explode(array($"pa", $"pb")).as("p"))
-      .distinct().persist()
-    // round 16 (guide §2.4 — two operations keyed the same way share
-    // one exchange): the frontier expansion used to semi-join the edge
-    // list TWICE PER ROUND (once by pa, once by pb), shuffling the
-    // full corpus-grain edge list 2 × rounds times. The symmetrized
-    // (src, dst) relation is shuffled by src ONCE and cached; every
-    // round's expansion reuses the cached partitioning and only the
-    // (small) frontier side moves. Same neighbor set by construction:
-    // {dst : (src,dst) ∈ edges ∪ swap(edges), src ∈ frontier}.
-    val und = edges.select($"pa".as("src"), $"pb".as("dst"))
-      .unionByName(edges.select($"pb".as("src"), $"pa".as("dst")))
-      .repartition($"src").persist()
-    var frontier = nodes.filter($"p" % seedMod === 0L).persist()
-    var reached = frontier.select($"p", lit(0L).as("dist")).persist()
-    var out = censusRow("r0_frontier", frontier)
-    for (r <- 1 to BfsRounds) {
-      val nbrs = und
-        .join(frontier.withColumnRenamed("p", "src"), Seq("src"), "leftsemi")
-        .select($"dst".as("p"))
-        .distinct()
-      // localCheckpoint, not persist: reached_r references reached_{r-1}
-      // TWICE (the anti join and the union), so the logical tree — and
-      // with it per-round analysis cost — doubles every round under a
-      // plain persist (measured 17 s → ~3 s at sf0.1); the checkpoint
-      // materializes the same blocks and truncates lineage (GraphX
-      // iteration rule, same as dedupClusters)
-      frontier = nbrs
-        .join(reached.select($"p"), Seq("p"), "leftanti")
-        .localCheckpoint(true)
-      reached = reached
-        .unionByName(frontier.select($"p", lit(r.toLong).as("dist")))
-        .localCheckpoint(true)
-      out = out.unionByName(censusRow(s"r${r}_frontier", frontier))
+    val census = Blocks.generations { gens =>
+      // round 16 (guide §2.4 — two operations keyed the same way share
+      // one exchange): the frontier expansion used to semi-join the
+      // edge list TWICE PER ROUND (once by pa, once by pb), shuffling
+      // the full corpus-grain edge list 2 × rounds times. The
+      // symmetrized (src, dst) relation is shuffled by src ONCE and
+      // pinned; every round's expansion reuses the cached partitioning
+      // and only the (small) frontier side moves. Same neighbor set by
+      // construction: {dst : (src,dst) ∈ edges ∪ swap(edges), src ∈
+      // frontier}.
+      val und = gens.pin(edges0.select($"pa".as("src"), $"pb".as("dst"))
+        .unionByName(edges0.select($"pb".as("src"), $"pa".as("dst")))
+        .repartition($"src"))
+      val nodes = gens.keep(edges0.select(explode(array($"pa", $"pb")).as("p"))
+        .distinct())
+      val r0 = gens.fill("bfs round 0: census (nodes, seeds)") {
+        nodes.agg(count(lit(1)), count(when($"p" % seedMod === 0L, lit(1))))
+          .head()
+      }
+      // reached (p, dist) is the round's generation: round r's frontier
+      // is its dist = r slice, so its census is one count over it
+      var reached = nodes.filter($"p" % seedMod === 0L)
+        .select($"p", lit(0L).as("dist"))
+      val frontiers = r0.getLong(1) +: (1 to BfsRounds).map { r =>
+        val frontier = und
+          .join(reached.filter($"dist" === r - 1L)
+            .select($"p".as("src")), Seq("src"), "leftsemi")
+          .select($"dst".as("p"))
+          .distinct()
+          .join(reached.select($"p"), Seq("p"), "leftanti")
+        reached = gens.keep(reached
+          .unionByName(frontier.select($"p", lit(r.toLong).as("dist"))))
+        gens.fill(s"bfs round $r: census (frontier)") {
+          reached.agg(count(when($"dist" === r.toLong, lit(1)))).head()
+            .getLong(0)
+        }
+      }
+      // reached holds each round's frontier at its dist, so the
+      // distance histogram is the frontier trace (present dists only)
+      frontiers.zipWithIndex.flatMap { case (n, r) =>
+        (s"r${r}_frontier" -> n) +:
+          (if (n > 0) Seq(s"dist_$r" -> n) else Nil)
+      } :+ ("unreached" -> (r0.getLong(0) - frontiers.sum))
     }
-    val hist = reached.groupBy($"dist").agg(count(lit(1)).as("value"))
-      .select(concat(lit("dist_"), $"dist".cast("string")).as("metric"),
-        $"value")
-    val unreached = censusRow("unreached",
-      nodes.join(reached.select($"p"), Seq("p"), "leftanti"))
-    out.unionByName(hist).unionByName(unreached).orderBy($"metric")
+    censusFrame(edges0.sparkSession, census)
   }
 
   val q225BfsHopsSql: String = {
@@ -3339,38 +3331,45 @@ object Relational {
     * Scale: each round is one map-side-combinable min aggregate over
     * the directed edge list joined to the current labels on the
     * entropy-rich id key — the standard Pregel/BSP message round; the
-    * label relation stays one row per node forever. Per-round label
-    * relations are persisted (iterative-plan rule: round r feeds its
-    * own census rows AND round r+1). */
+    * label relation stays one row per node forever. Each round's
+    * stepped label relation is one generation of [[Blocks.generations]]:
+    * one groupBy(lbl) over it is the census (groups = components, its
+    * summed lower-label count = changed) and the action that fills it;
+    * round r+1 reads it filled, and the symmetrized edge list is pinned
+    * for the whole loop. */
   def q228ConnComp(s: SparkSession, d: String): DataFrame =
     ccTrace(coEdgesStaged(s, d))
 
   /** The propagation loop over an arbitrary (pa, pb) edge list — split
     * from [[q228ConnComp]] for the crafted spec (kCoreTrace pattern). */
   private[graft] def ccTrace(edges0: DataFrame): DataFrame = {
-    val edges = edges0.persist()
-    val adj = edges.select($"pa".as("src"), $"pb".as("dst"))
-      .unionByName(edges.select($"pb".as("src"), $"pa".as("dst")))
-      .persist()
-    var lbl = edges.select(explode(array($"pa", $"pb")).as("p"))
-      .distinct().select($"p", $"p".as("lbl")).persist()
-    var out = censusRow("r0_components", lbl.select($"lbl").distinct())
-    for (r <- 1 to CcRounds) {
-      val msgs = adj.join(lbl.select($"p".as("src"), $"lbl"), "src")
-        .groupBy($"dst").agg(min($"lbl").as("nlbl"))
-      val stepped = lbl.select($"p", $"lbl".as("old"))
-        .join(msgs.withColumnRenamed("dst", "p"), Seq("p"), "left")
-        .select($"p",
-          least($"old", coalesce($"nlbl", $"old")).as("lbl"), $"old")
-        .persist()
-      out = out
-        .unionByName(censusRow(s"r${r}_components",
-          stepped.select($"lbl").distinct()))
-        .unionByName(censusRow(s"r${r}_changed",
-          stepped.filter($"lbl" < $"old")))
-      lbl = stepped.select($"p", $"lbl")
+    val census = Blocks.generations { gens =>
+      val adj = gens.pin(edges0.select($"pa".as("src"), $"pb".as("dst"))
+        .unionByName(edges0.select($"pb".as("src"), $"pa".as("dst"))))
+      // (p, lbl, old): round 0 labels every node with its own id
+      var stepped = gens.keep(edges0
+        .select(explode(array($"pa", $"pb")).as("p")).distinct()
+        .select($"p", $"p".as("lbl"), $"p".as("old")))
+      (0 to CcRounds).flatMap { r =>
+        if (r > 0) {
+          val lbl = stepped.select($"p", $"lbl")
+          val msgs = adj.join(lbl.select($"p".as("src"), $"lbl"), "src")
+            .groupBy($"dst").agg(min($"lbl").as("nlbl"))
+          stepped = gens.keep(lbl.select($"p", $"lbl".as("old"))
+            .join(msgs.withColumnRenamed("dst", "p"), Seq("p"), "left")
+            .select($"p",
+              least($"old", coalesce($"nlbl", $"old")).as("lbl"), $"old"))
+        }
+        val row = gens.fill(s"cc round $r: census (label groups)") {
+          stepped.groupBy($"lbl")
+            .agg(count(when($"lbl" < $"old", lit(1))).as("changed"))
+            .agg(count(lit(1)), coalesce(sum($"changed"), lit(0L))).head()
+        }
+        (s"r${r}_components" -> row.getLong(0)) +:
+          (if (r > 0) Seq(s"r${r}_changed" -> row.getLong(1)) else Nil)
+      }
     }
-    out.orderBy($"metric")
+    censusFrame(edges0.sparkSession, census)
   }
 
   val q228ConnCompSql: String = {
@@ -3702,8 +3701,7 @@ object Relational {
     // last generation after the loop — free it before returning, so a
     // 287-query session does not accumulate dead round relations
     Blocks.release(prevCand, relab, mst, comps)
-    edges0.sparkSession.createDataFrame(census.toSeq)
-      .toDF("metric", "value").orderBy($"metric")
+    censusFrame(edges0.sparkSession, census.toSeq)
   }
 
   val q282BoruvkaSql: String = {

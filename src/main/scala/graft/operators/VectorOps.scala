@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.Vectors
 import graft.operators.Relational.{sqlRound, stableRound}
 import graft.sources.Tables
+import graft.util.Blocks
 
 import graft.syntax._
 
@@ -2047,7 +2048,11 @@ object VectorOps {
     * ((sentinel − mind)·2⁶³ + vec_id, ids to 2⁶³, structurally
     * unboundable) beyond. Both arms induce the same (mind desc,
     * vec_id asc) order, so the choice is output-invisible; the DuckDB
-    * mirror keeps the BIGINT pack (generator ids are bounded).
+    * mirror keeps the BIGINT pack (generator ids are bounded). Each
+    * round's min-distance relation is one generation of
+    * [[Blocks.generations]]: one aggregate over it is the round's
+    * census AND the next round's argmax, and the action that fills it;
+    * the next center's vector is a filter on the collected id.
     *
     * Determinism: distances are the gridded cosine (1e6 − cos_grid,
     * exact integers after the q161-style floor); every selection and
@@ -2064,41 +2069,43 @@ object VectorOps {
     // ADAPTIVE argmax key width: one 1-row bound scan (a pruned
     // vec_id-only parquet pass) routes ids ≥ 2⁴⁰ to the DECIMAL(38,0)
     // arm; (sentinel − mind) ≤ 2e6, so 2e6·2⁶³ + (2⁶³−1) ≈ 1.8e25
-    // sits far under DECIMAL(38,0)'s 1e38 ceiling — no guard can trip
-    val maxId = emb.agg(max($"vec_id")).head()
-    val wideIds = !maxId.isNullAt(0) && maxId.getLong(0) >= KCenterIdShift
+    // sits far under DECIMAL(38,0)'s 1e38 ceiling — no guard can trip.
+    // The same scan's min id is round 1's pick: every mind starts at
+    // the sentinel, so the argmax tie-breaks to the smallest id.
+    val bounds = emb.agg(min($"vec_id"), max($"vec_id")).head()
+    val wideIds = !bounds.isNullAt(1) && bounds.getLong(1) >= KCenterIdShift
     val two63 = new java.math.BigDecimal("9223372036854775808")
-    val s0 = emb.select($"vec_id", $"embedding",
-      lit(KCenterInf).as("mind"))
-    val (_, rows) = (1 to KCenterK)
-      .foldLeft((s0, Seq.empty[DataFrame])) { case ((state, acc), k) =>
-        val sel = if (wideIds)
-          state
-            .select(((lit(KCenterInf) - $"mind").cast("decimal(38,0)") *
-              lit(two63) + $"vec_id").as("pack"))
-            .agg(min($"pack").as("mp"))
-            .select(expr("CAST(mp % 9223372036854775808 AS BIGINT)")
-              .as("cid"))
-        else state
-          .select(((lit(KCenterInf) - $"mind") * KCenterIdShift +
-            guardedId).as("pack"))
-          .agg(min($"pack").as("mp"))
-          .select(($"mp" % KCenterIdShift).as("cid"))
-        val cEmb = sel.join(emb, $"cid" === $"vec_id")
-          .select($"cid", $"embedding".as("cvec"))
-        val ns = state.crossJoin(broadcast(cEmb))
-          .select($"vec_id", $"embedding", $"cid",
+    val (pack, unpack) = if (wideIds)
+      ((lit(KCenterInf) - $"mind").cast("decimal(38,0)") * lit(two63) +
+        $"vec_id", expr("CAST(mp % 9223372036854775808 AS BIGINT)"))
+    else ((lit(KCenterInf) - $"mind") * KCenterIdShift + guardedId,
+      $"mp" % KCenterIdShift)
+    val rows = Blocks.generations { gens =>
+      var state = emb.select($"vec_id", $"embedding",
+        lit(KCenterInf).as("mind"))
+      var cid = bounds.get(0).asInstanceOf[java.lang.Long]
+      (1 to KCenterK).map { k =>
+        val cEmb = emb.filter($"vec_id" === lit(cid))
+          .select($"embedding".as("cvec"))
+        state = gens.keep(state.crossJoin(broadcast(cEmb))
+          .select($"vec_id", $"embedding",
             least($"mind", lit(1000000L) -
               floor(Vectors.cosine($"embedding", $"cvec") * lit(1e6) +
-                lit(0.5)).cast("long")).as("mind"))
-          .persist()
-        val row = ns.agg(max($"cid").as("center_id"),
-            max($"mind").as("cover_radius_micro"))
-          .select(lit(k.toLong).as("step"), $"center_id",
-            $"cover_radius_micro")
-        (ns.select($"vec_id", $"embedding", $"mind"), acc :+ row)
+                lit(0.5)).cast("long")).as("mind")))
+        // one aggregate: this round's cover radius and the next
+        // round's packed farthest-point argmax
+        val row = gens.fill(s"kcenter round $k: census (cover, argmax)") {
+          state.agg(max($"mind").as("cover"), min(pack).as("mp"))
+            .select($"cover", unpack).head()
+        }
+        val step = (k.toLong, Option(cid).map(_.longValue),
+          Option(row.get(0)).map(_.asInstanceOf[Long]))
+        cid = row.get(1).asInstanceOf[java.lang.Long]
+        step
       }
-    rows.reduce(_ unionByName _).orderBy($"step")
+    }
+    emb.sparkSession.createDataFrame(rows)
+      .toDF("step", "center_id", "cover_radius_micro")
   }
 
   val q248KCenterSql: String = {

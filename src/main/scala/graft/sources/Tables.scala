@@ -21,10 +21,6 @@ import org.apache.spark.sql.types._
   */
 object Tables {
 
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
@@ -73,15 +69,6 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame  = read(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = read(s, d, "embeddings")
-
-  /** Register every test table as a temp view so `spark.sql` works too.
-    * `events` goes through [[events]] (ns-timestamp handling), never the
-    * raw reader. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    names.foreach { n =>
-      val df = if (n == "events") events(spark, sfDir) else read(spark, sfDir, n)
-      df.createOrReplaceTempView(n)
-    }
 
   /** S2: raw line count of a text source (header included) — the
     * reference's `pd.read_csv(header=None).shape[0]` reconciliation

@@ -114,11 +114,6 @@ object Normalizer {
       }
     }
 
-  /** P13: keep only extracted tables wide enough to be real report
-    * tables (`shape[1] > 5`, `ETL Process/STG.py:299`). */
-  def keepWideTables(dfs: Seq[DataFrame], minCols: Int = 6): Seq[DataFrame] =
-    dfs.filter(_.columns.length >= minCols)
-
   /** P11: cast a block of columns to int (`astype(int)`,
     * `ETL Process/STG.py:307`). */
   def castColumnsToInt(df: DataFrame, cols: Seq[String]): DataFrame = {

@@ -197,11 +197,6 @@ object Staging {
     rows.mkString("", "\nUNION ALL\n", "\nORDER BY source_name")
   }
 
-  /** P1: metadata point lookup (`ETL Process/STG.py:68-76`) — the
-    * source-path registry row for a target table. */
-  def lookupMeta(meta: DataFrame, targetName: String): Option[org.apache.spark.sql.Row] =
-    meta.filter(col("target_name") === targetName).limit(1).collect().headOption
-
   /** S11: full-refresh sink — the reference's DELETE + COPY
     * (`ETL Process/ODS.py:34-46`) is a single overwrite save. */
   def fullRefresh(df: DataFrame, table: String): Unit =

@@ -25,6 +25,54 @@ object Blocks {
     }
   }
 
+  /** Run an iterative operator's rounds over one [[Generations]] and
+    * free every frame persisted there on exit, also when `body` throws. */
+  def generations[T](body: Generations => T): T = {
+    val gens = new Generations
+    try body(gens) finally gens.close()
+  }
+
+  /** The generations of one iterative loop. A round persists its new
+    * relations with [[keep]], then runs its census through [[fill]]:
+    * the census is the one action that fills them, so no job is added,
+    * and it must read each kept frame through a single scan (two scans
+    * of one unfilled cache in one action may compute a partition
+    * twice). After that action the superseded generation is freed; it
+    * is safe to free only then, because the CacheManager re-plans every
+    * dependent cache that is not filled yet. [[pin]] persists a
+    * loop-invariant frame that lives until the loop exits. Frames are
+    * freed as persisted, never through a projection of them: the
+    * CacheManager never saw a projection's plan. */
+  final class Generations private[Blocks] () {
+    private var pinned = Vector.empty[DataFrame]
+    private var live = Vector.empty[DataFrame]
+    private var kept = Vector.empty[DataFrame]
+
+    def keep(df: DataFrame): DataFrame = {
+      val p = df.persist(); kept :+= p; p
+    }
+
+    def pin(df: DataFrame): DataFrame = {
+      val p = df.persist(); pinned :+= p; p
+    }
+
+    /** Run `census`, labelled `what` in the Spark job list, as the
+      * action that fills the kept frames; then free the generation they
+      * supersede and return the census. */
+    def fill[T](what: String)(census: => T): T = {
+      val sc = SparkSession.active.sparkContext
+      val label = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription(what)
+      val value = try census finally sc.setJobDescription(label)
+      release(live: _*)
+      live = kept
+      kept = Vector.empty
+      value
+    }
+
+    private[Blocks] def close(): Unit = release(pinned ++ live ++ kept: _*)
+  }
+
   /** Run `body`, then, also when it throws, drop every Dataset cache
     * and unpersist every RDD that `body` created and `clearCache` did
     * not reach (the checkpoints). Returns the body's value and the

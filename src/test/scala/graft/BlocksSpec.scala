@@ -6,15 +6,25 @@ import org.apache.logging.log4j.LogManager
 import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
 import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation,
+  InMemoryTableScanExec}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{Relational, TextOps}
+import graft.operators.{Relational, TextOps, VectorOps}
 import graft.util.Blocks
 
+/** Walks a physical plan through AQE wrappers and query stages. */
+private object AqePlans extends AdaptiveSparkPlanHelper
+
 /** Block release: [[Blocks]] itself, and the iterative operators that
-  * free each dead generation through it. Every check reads the
+  * fill and free each generation through it. Every check reads the
   * context's persistent-RDD set, which holds both `persist()` caches
   * and eager checkpoint block sets. */
 class BlocksSpec extends AnyFunSuite {
@@ -120,35 +130,115 @@ class BlocksSpec extends AnyFunSuite {
     assert(readds.get === 0, "a cached partition was computed twice")
   }
 
-  test("boruvkaTrace leaves no block behind and computes no cached partition twice") {
-    // EngineSpec's hand-solved 5-node graph, and its wide-arm replay
-    // with every id past the 21-bit narrow-pack ceiling
-    val edges = Seq(
-      (1L, 2L, 5L), (2L, 3L, 1L), (3L, 4L, 2L),
-      (1L, 3L, 4L), (4L, 5L, 10L), (1L, 5L, 3L))
-      .toDF("pa", "pb", "w")
-    val off = (1L << 33) + 12345L
-    val wide = edges.select(
-      ($"pa" + off).as("pa"), ($"pb" + off).as("pb"), $"w")
-    noReadds(Seq(edges, wide).foreach { g: DataFrame =>
-      val (out, left) = leftBy(Relational.boruvkaTrace(g))
-      assert(left.isEmpty, s"boruvkaTrace left rdds $left behind")
-      assert(out.filter($"metric" === "r3_mst_weight")
-        .select($"value").as[Long].head() === 10L)
-    })
+  /** Runs `body` with an optimizer rule that sees every plan the
+    * session optimizes, before it runs, and returns the caches some
+    * plan reads unfilled through more than one scan. A scan of an
+    * unfilled cache runs the plan that fills it, so that plan's scans
+    * count too. Two scans of one unfilled cache in one action can
+    * compute the same partition twice: two concurrent AQE stages both
+    * find it missing. */
+  private def unfilledRereads[T](body: => T): (T, Seq[String]) = {
+    val found = new java.util.IdentityHashMap[AnyRef, String]
+    val check = new Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        val scans = new java.util.IdentityHashMap[AnyRef, Integer]
+        val names = new java.util.IdentityHashMap[AnyRef, String]
+        def visit(r: InMemoryRelation): Unit = {
+          val b = r.cacheBuilder
+          if (!b.isCachedColumnBuffersLoaded) {
+            scans.put(b, scans.getOrDefault(b, 0) + 1)
+            names.put(b, b.logicalPlan.nodeName)
+            AqePlans.collectWithSubqueries(b.cachedPlan) {
+              case s: InMemoryTableScanExec => s.relation
+            }.foreach(visit)
+          }
+        }
+        plan.collectWithSubqueries { case r: InMemoryRelation => r }
+          .foreach(visit)
+        found.synchronized {
+          scans.forEach { (b, n) =>
+            if (n > 1) found.put(b, s"${names.get(b)} ${n}x")
+          }
+        }
+        plan
+      }
+    }
+    val prior = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = prior :+ check
+    try {
+      val value = body
+      (value, found.synchronized(found.values.asScala.toSeq))
+    } finally spark.experimental.extraOptimizations = prior
   }
 
-  test("kTrussTrace leaves no block behind and computes no cached partition twice") {
-    // EngineSpec's crafted K4 + weak triangle + bridge: the peel keeps
-    // the K4's 6 edges
-    val k4 = Seq(
-      (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
-      (4L, 5L), (4L, 6L), (5L, 6L), (6L, 7L)).toDF("pa", "pb")
-    noReadds {
-      val (out, left) = leftBy(Relational.kTrussTrace(k4, 2L))
-      assert(left.isEmpty, s"kTrussTrace left rdds $left behind")
-      assert(out.filter($"metric" === "r3_edges")
-        .select($"value").as[Long].head() === 6L)
-    }
+  // Crafted inputs, from EngineSpec's hand-traced cases
+  private lazy val pathAndTriangle = Seq((1L, 2L), (2L, 3L), (1L, 3L),
+    (3L, 4L), (11L, 12L), (12L, 13L), (13L, 14L)).toDF("pa", "pb")
+  private lazy val starAndPath = Seq((1L, 2L), (1L, 3L), (1L, 4L),
+    (10L, 11L), (11L, 12L), (12L, 13L), (13L, 14L)).toDF("pa", "pb")
+  // seed 10 reaches 1, 2, 3 within the 3-round cap; 4, 5, 6 stay out
+  private lazy val pathAndPair = Seq((10L, 1L), (1L, 2L), (2L, 3L),
+    (3L, 4L), (5L, 6L)).toDF("pa", "pb")
+  private lazy val compass = Seq(
+    (0L, Array(1f, 0f)), (1L, Array(0f, 1f)), (2L, Array(-1f, 0f)),
+    (3L, Array(0f, -1f)), (4L, Array(1f, 0f))).toDF("vec_id", "embedding")
+  // K4 + weak triangle + bridge: the peel keeps the K4's 6 edges
+  private lazy val k4 = Seq(
+    (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
+    (4L, 5L), (4L, 6L), (5L, 6L), (6L, 7L)).toDF("pa", "pb")
+  // a hand-solved 5-node graph, and its replay with every id past the
+  // 21-bit narrow-pack ceiling
+  private lazy val mstGraph = Seq(
+    (1L, 2L, 5L), (2L, 3L, 1L), (3L, 4L, 2L),
+    (1L, 3L, 4L), (4L, 5L, 10L), (1L, 5L, 3L)).toDF("pa", "pb", "w")
+
+  private def metric(out: DataFrame, name: String): Long =
+    out.filter($"metric" === name).select($"value").as[Long].head()
+
+  /** Iterative operators on crafted inputs, each with one figure of its
+    * hand-traced result. */
+  private lazy val iterative: Seq[(String, () => DataFrame, DataFrame => Unit)] = {
+    val off = (1L << 41) + 5L
+    val wideMst = (1L << 33) + 12345L
+    Seq(
+      ("kCoreTrace", () => Relational.kCoreTrace(pathAndTriangle, 2L),
+        out => assert(metric(out, "r2_nodes") === 3L)),
+      ("bfsTrace", () => Relational.bfsTrace(pathAndPair, 10L),
+        out => assert(metric(out, "unreached") === 3L)),
+      ("ccTrace", () => Relational.ccTrace(starAndPath),
+        out => assert(metric(out, "r2_changed") === 3L)),
+      ("kCenter", () => VectorOps.kCenter(compass),
+        out => assert(out.select($"center_id").as[Long].collect().toSeq ===
+          Seq(0L, 2L, 1L, 3L))),
+      ("kCenter, wide ids", () => VectorOps.kCenter(
+          compass.select(($"vec_id" + off).as("vec_id"), $"embedding")),
+        out => assert(out.select($"center_id").as[Long].collect().toSeq ===
+          Seq(0L, 2L, 1L, 3L).map(_ + off))),
+      ("kTrussTrace", () => Relational.kTrussTrace(k4, 2L),
+        out => assert(metric(out, "r3_edges") === 6L)),
+      ("boruvkaTrace", () => Relational.boruvkaTrace(mstGraph),
+        out => assert(metric(out, "r3_mst_weight") === 10L)),
+      ("boruvkaTrace, wide ids", () => Relational.boruvkaTrace(mstGraph
+          .select(($"pa" + wideMst).as("pa"), ($"pb" + wideMst).as("pb"),
+            $"w")),
+        out => assert(metric(out, "r3_mst_weight") === 10L)))
+  }
+
+  test("iterative operators fill each cache before two scans read it, " +
+      "free every generation, and compute no cached partition twice") {
+    val problems = Seq.newBuilder[String]
+    noReadds(iterative.foreach { case (name, run, check) =>
+      val ((out, left), rereads) = unfilledRereads(leftBy {
+        val out = run()
+        out.collect()
+        out
+      })
+      if (rereads.nonEmpty) problems += s"$name reads ${rereads.size} " +
+        s"unfilled caches through more than one scan: ${rereads.mkString(", ")}"
+      if (left.nonEmpty) problems += s"$name left rdds $left behind"
+      check(out)
+    })
+    val found = problems.result()
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }
