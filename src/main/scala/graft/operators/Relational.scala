@@ -2370,7 +2370,7 @@ object Relational {
 
   /** An iterative operator's eagerly taken census as its result: one
     * local (metric, value) row per metric, in metric order. */
-  private def censusFrame(s: SparkSession,
+  private[graft] def censusFrame(s: SparkSession,
       rows: Seq[(String, Long)]): DataFrame =
     s.createDataFrame(rows.sortBy(_._1)).toDF("metric", "value")
 
@@ -3186,8 +3186,11 @@ object Relational {
     * map-side-combinable aggregate keyed by the entropy-rich user/item
     * id (no factor matrix ever materializes on one node at rank 1; a
     * rank-k sweep shards the same aggregates by (id, component));
-    * ratings/users/items are persisted because the second half-step
-    * and the fit census re-reference them (iterative-plan rule). */
+    * ratings/users/items are pinned in one [[Blocks.generations]]
+    * loop because the second half-step and the fit census re-reference
+    * them (iterative-plan rule); each is filled by the action that
+    * counts it (bound scan, user count, item count + top pick), so the
+    * fit census reads them filled. */
   def q226AlsStep(s: SparkSession, d: String): DataFrame =
     alsStep(Tables.lineitem(s, d)
       .select($"l_orderkey", $"l_partkey", $"l_quantity")
@@ -3203,67 +3206,71 @@ object Relational {
     * DECIMAL(38,0) argmax arm (the kTrussTrace/boruvkaTrace seam
     * pattern). */
   private[graft] def alsStep(ratings0: DataFrame): DataFrame = {
-    val ratings = ratings0.persist()
-    val users = ratings.groupBy($"c")
-      .agg(sum($"r").as("sr"), count(lit(1)).as("n"))
-      .select($"c",
-        floor($"sr".cast("double") / ($"n" + lit(AlsLambda)).cast("double")
-          * lit(AlsGrid.toDouble) + 0.5).cast("long").as("ug"))
-      .persist()
     val g2 = AlsGrid * AlsGrid
-    val items0 = ratings.join(users, "c")
-      .groupBy($"p")
-      .agg(sum($"r" * $"ug").as("nj"), sum($"ug" * $"ug").as("dj"))
-      .select($"p",
-        floor($"nj".cast("double") * lit(g2.toDouble)
-          / (lit(AlsLambda * g2) + $"dj").cast("double") + 0.5)
-          .cast("long").as("vg"))
-    // ADAPTIVE rule-9 pack width (the q282 recipe, round-13 pack
-    // audit): one 1-row bound scan of the persisted ratings picks the
-    // narrow 31/32-bit BIGINT pack (measurably cheaper) when every
-    // part id fits 32 bits, the DECIMAL(38,0) pack (vg·2⁶³ +
-    // (2⁶³−1−p), both fields structurally BIGINT-bounded — no guard
-    // can trip) beyond; both packs induce the identical
-    // (vg desc, p asc) order, so the arm is output-invisible. The
-    // narrow arm keeps the loud per-row guard (packedTickKey
-    // philosophy): a wider factor would alias pick keys.
-    val maxP = ratings.agg(max($"p")).head()
-    val wideIds = !maxP.isNullAt(0) && maxP.getLong(0) >= (1L << 32)
-    val items = (if (wideIds) items0 else items0.select($"p",
-      when($"p" >= lit(1L << 32) || $"vg" >= lit(1L << 31),
-        raise_error(concat(
-          lit("q226AlsStep: (vg, p) exceeds the 31/32-bit pack bound: vg="),
-          $"vg", lit(" p="), $"p"))).otherwise($"vg").as("vg")))
-      .persist()
-    val errs = ratings.join(users, "c").join(items, "p")
-      .select(abs($"r" * lit(g2) - $"ug" * $"vg").as("ae"))
-    val fit = errs.agg(sum($"ae").as("sae"), count(lit(1)).as("nr"))
-      .select(explode(map(
-        lit("n_ratings"), $"nr",
-        lit("sum_abs_err_micro"), $"sae",
-        lit("mae_micro"), expr("sae div nr"))).as(Seq("metric", "value")))
     val two63 = new java.math.BigDecimal("9223372036854775808")
-    val top = (if (wideIds)
-      items.agg(max($"vg".cast("decimal(38,0)") * lit(two63) +
-          (lit(Long.MaxValue) - $"p")).as("pk"))
-        .select(explode(map(
-          lit("top_item_id"),
-          lit(Long.MaxValue) -
-            expr("CAST(pk % 9223372036854775808 AS BIGINT)"),
-          lit("top_item_vg"), expr("pk div 9223372036854775808")))
-          .as(Seq("metric", "value")))
-    else
-      items.agg(max($"vg" * lit(1L << 32) + (lit((1L << 32) - 1) - $"p"))
-        .as("pk"))
-        .select(explode(map(
-          lit("top_item_id"), lit((1L << 32) - 1) - ($"pk" % lit(1L << 32)),
-          lit("top_item_vg"), expr("pk div 4294967296")))
-          .as(Seq("metric", "value"))))
-    censusRow("n_users", users)
-      .unionByName(censusRow("n_items", items))
-      .unionByName(fit)
-      .unionByName(top)
-      .orderBy($"metric")
+    val census = Blocks.generations { gens =>
+      // each stage is pinned and filled by the action that counts it,
+      // so the next stage and the fit census read it filled
+      val ratings = gens.pin(ratings0)
+      // ADAPTIVE rule-9 pack width (the q282 recipe, round-13 pack
+      // audit): one 1-row bound scan of the ratings picks the narrow
+      // 31/32-bit BIGINT pack (measurably cheaper) when every part id
+      // fits 32 bits, the DECIMAL(38,0) pack (vg·2⁶³ + (2⁶³−1−p), both
+      // fields structurally BIGINT-bounded — no guard can trip) beyond;
+      // both packs induce the identical (vg desc, p asc) order, so the
+      // arm is output-invisible. The narrow arm keeps the loud per-row
+      // guard (packedTickKey philosophy): a wider factor would alias
+      // pick keys.
+      val maxP = gens.fill("als: ratings bound scan") {
+        ratings.agg(max($"p")).head()
+      }
+      val wideIds = !maxP.isNullAt(0) && maxP.getLong(0) >= (1L << 32)
+      val users = gens.pin(ratings.groupBy($"c")
+        .agg(sum($"r").as("sr"), count(lit(1)).as("n"))
+        .select($"c",
+          floor($"sr".cast("double") / ($"n" + lit(AlsLambda)).cast("double")
+            * lit(AlsGrid.toDouble) + 0.5).cast("long").as("ug")))
+      val nUsers = gens.fill("als: user half-step")(users.count())
+      val items0 = ratings.join(users, "c")
+        .groupBy($"p")
+        .agg(sum($"r" * $"ug").as("nj"), sum($"ug" * $"ug").as("dj"))
+        .select($"p",
+          floor($"nj".cast("double") * lit(g2.toDouble)
+            / (lit(AlsLambda * g2) + $"dj").cast("double") + 0.5)
+            .cast("long").as("vg"))
+      val items = gens.pin(if (wideIds) items0 else items0.select($"p",
+        when($"p" >= lit(1L << 32) || $"vg" >= lit(1L << 31),
+          raise_error(concat(
+            lit("q226AlsStep: (vg, p) exceeds the 31/32-bit pack bound: vg="),
+            $"vg", lit(" p="), $"p"))).otherwise($"vg").as("vg")))
+      val top = gens.fill("als: item half-step") {
+        (if (wideIds)
+          items.agg(count(lit(1)).as("n"), max($"vg".cast("decimal(38,0)") *
+              lit(two63) + (lit(Long.MaxValue) - $"p")).as("pk"))
+            .select($"n",
+              lit(Long.MaxValue) -
+                expr("CAST(pk % 9223372036854775808 AS BIGINT)"),
+              expr("pk div 9223372036854775808"))
+        else
+          items.agg(count(lit(1)).as("n"),
+              max($"vg" * lit(1L << 32) + (lit((1L << 32) - 1) - $"p"))
+                .as("pk"))
+            .select($"n",
+              lit((1L << 32) - 1) - ($"pk" % lit(1L << 32)),
+              expr("pk div 4294967296"))).head()
+      }
+      val fit = gens.fill("als: fit census") {
+        ratings.join(users, "c").join(items, "p")
+          .select(abs($"r" * lit(g2) - $"ug" * $"vg").as("ae"))
+          .agg(count(lit(1)).as("nr"), sum($"ae").as("sae"))
+          .select($"nr", $"sae", expr("sae div nr")).head()
+      }
+      Seq("n_users" -> nUsers, "n_items" -> top.getLong(0),
+        "n_ratings" -> fit.getLong(0), "sum_abs_err_micro" -> fit.getLong(1),
+        "mae_micro" -> fit.getLong(2), "top_item_id" -> top.getLong(1),
+        "top_item_vg" -> top.getLong(2))
+    }
+    censusFrame(ratings0.sparkSession, census)
   }
 
   val q226AlsStepSql: String = {
@@ -4058,8 +4065,11 @@ object Relational {
     * Scale: each half-step is one equi-join of the edge list to the
     * previous score relation plus a map-side-combinable aggregate —
     * the Pregel message round expressed declaratively, |E|-bounded
-    * like q110; normalization totals are 1-row broadcasts; the top-k
-    * is TakeOrdered, never a global sort materialization. */
+    * like q110; each half-step's raw scores are a
+    * [[Blocks.generations]] generation whose L1 total (the census) is
+    * the action that fills them, and the total divides as a literal;
+    * each top-k is TakeOrdered read to the driver (2 × [[HitsTopK]]
+    * rows), never a global sort materialization. */
   def q237Hits(s: SparkSession, d: String): DataFrame =
     hits(Tables.orders(s, d)
       .select($"o_orderkey", $"o_custkey")
@@ -4068,38 +4078,33 @@ object Relational {
       .select($"o_custkey".as("c"), $"l_partkey".as("p")).distinct())
 
   private[graft] def hits(edges: DataFrame): DataFrame = {
-    // round 15: eager lineage cuts (the q243/q221 lesson). Without
-    // them this plan re-embedded the corpus-grain distinct edge join
-    // ~20x: every normPpb references its input twice (total + body),
-    // each half-step references the previous, and auth/hubs fork the
-    // tree again — Probe showed four ~1.5 s broadcast jobs each
-    // recomputing the edge relation. One checkpoint of the edge list
-    // plus one per node-grain half-step makes every branch a
-    // LogicalRDD read.
-    val e = edges.localCheckpoint(true)
-    def normPpb(df: DataFrame, key: String): DataFrame = {
-      val d = df.localCheckpoint(true)
-      val tot = d.agg(sum($"raw").as("tot"))
-      d.crossJoin(broadcast(tot))
-        .select(col(key),
-          floor($"raw".cast("double") * 1000000000.0 / $"tot")
+    val rows = Blocks.generations { gens =>
+      // the edge list is pinned: every half-step reads it
+      val e = gens.pin(edges)
+      // one half-step: its raw scores are the generation, and their L1
+      // total — the census — is the action that fills them; the scores
+      // divide by that total as a literal
+      def halfStep(raw: DataFrame, key: String, what: String): DataFrame = {
+        val d = gens.keep(raw)
+        val tot = gens.fill(what)(d.agg(sum($"raw")).head().get(0))
+        d.select(col(key),
+          floor($"raw".cast("double") * 1000000000.0 / lit(tot))
             .cast("long").as("s"))
+      }
+      def top(scores: DataFrame, key: String, role: String) =
+        scores.orderBy($"s".desc, col(key)).take(HitsTopK)
+          .map(r => (role, r.getLong(0), r.getLong(1))).toSeq
+      val a1 = halfStep(e.groupBy($"p").agg(count(lit(1)).as("raw")), "p",
+        "hits: authority 1")
+      val h1 = halfStep(e.join(a1, "p").groupBy($"c")
+        .agg(sum($"s").as("raw")), "c", "hits: hub 1")
+      // read before the next half-step frees h1's generation
+      val hubs = top(h1, "c", "hub")
+      val a2 = halfStep(e.join(h1, "c").groupBy($"p")
+        .agg(sum($"s").as("raw")), "p", "hits: authority 2")
+      top(a2, "p", "authority") ++ hubs
     }
-    val a1 = normPpb(e.groupBy($"p").agg(count(lit(1)).as("raw")), "p")
-      .localCheckpoint(true)
-    val h1 = normPpb(e.join(a1, "p")
-      .groupBy($"c").agg(sum($"s").as("raw")), "c")
-      .localCheckpoint(true)
-    val a2 = normPpb(e.join(h1, "c")
-      .groupBy($"p").agg(sum($"s").as("raw")), "p")
-    val auth = a2.orderBy($"s".desc, $"p").limit(HitsTopK)
-      .select(lit("authority").as("role"), $"p".as("node_id"),
-        $"s".as("score_ppb"))
-    val hubs = h1.orderBy($"s".desc, $"c").limit(HitsTopK)
-      .select(lit("hub").as("role"), $"c".as("node_id"),
-        $"s".as("score_ppb"))
-    auth.unionByName(hubs)
-      .orderBy($"role", $"score_ppb".desc, $"node_id")
+    edges.sparkSession.createDataFrame(rows).toDF("role", "node_id", "score_ppb")
   }
 
   val q237HitsSql: String =

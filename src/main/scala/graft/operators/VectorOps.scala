@@ -1580,13 +1580,16 @@ object VectorOps {
     val (_, _, a1) = lloydOneStep(s, d)
     val w = Window.partitionBy($"cell_id").orderBy($"vec_id")
     // the census below re-references every stage (degrees, core/border
-    // splits, components, and the seven rows) — without these persists
+    // splits, components, and the seven rows) — without these caches
     // the cell-bounded cosine quadratic re-evaluates once PER ROW, the
-    // iterative-plan cliff (measured: 44 s → in-band at sf0.1)
+    // iterative-plan cliff (measured: 44 s → in-band at sf0.1). rk is
+    // checkpointed eagerly: the pair self-join reads it twice, and two
+    // scans of an unfilled cache in one action can compute a partition
+    // twice
     val rk = a1.select($"vec_id", $"embedding", $"cell_id")
       .withColumn("rn", row_number().over(w))
       .filter($"rn" <= SemDedupMaxCell)
-      .persist()
+      .localCheckpoint(true)
     val cand = rk.select($"cell_id".as("ccell"), $"vec_id".as("v2"),
       $"embedding".as("e2"), $"rn".as("rn2"))
     // round 15: EAGER localCheckpoint on the two relations every
@@ -1615,8 +1618,9 @@ object VectorOps {
     val borderV = pc.filter($"ca" =!= $"cb")
       .select(when($"ca", $"b").otherwise($"a").as("v")).distinct()
       .localCheckpoint(true)
+    // an eager checkpoint already: two census branches read it
     val comps = TextOps.dedupClusters(
-      coreEdges.select($"a".as("d1"), $"b".as("d2"))).persist()
+      coreEdges.select($"a".as("d1"), $"b".as("d2")))
     val edgeVerts = coreEdges.select($"a".as("v"))
       .unionAll(coreEdges.select($"b".as("v"))).distinct()
     val isoCores = cores.join(edgeVerts, Seq("v"), "left_anti")
@@ -1802,18 +1806,28 @@ object VectorOps {
     * raise_error-guarded into [0, 1024)); the census is 7 integer
     * rows. Scale: adjacency is |pairs|-bounded, each round one
     * equi-join + bounded aggregate (the Pregel round), label
-    * relations are one row per node. */
+    * relations are one row per node; each round's label relation is a
+    * [[Blocks.generations]] generation, filled by the round's census
+    * and read filled by the next round. */
   def q243LabelProp(s: SparkSession, d: String): DataFrame = {
     val (_, _, a1) = lloydOneStep(s, d)
     val w = Window.partitionBy($"cell_id").orderBy($"vec_id")
-    // persists: every census row re-references the pair build and the
-    // round relations (the q221 iterative-plan cliff)
+    // persisted: the truth join and both sides of the pair self-join
+    // read it (the q221 iterative-plan cliff)
     val rk = a1.select($"vec_id", $"embedding", $"cell_id")
       .withColumn("rn", row_number().over(w))
       .filter($"rn" <= SemDedupMaxCell)
       .persist()
     val cand = rk.select($"cell_id".as("ccell"), $"vec_id".as("v2"),
       $"embedding".as("e2"), $"rn".as("rn2"))
+    // the truth checkpoint is the action that fills rk, through a
+    // single scan: the pair self-join below reads rk twice, and two
+    // scans of an unfilled cache in one action can compute a partition
+    // twice
+    val truth = rk.select($"vec_id")
+      .join(Tables.embeddings(s, d)
+        .select($"vec_id", $"label".cast("long").as("tl")), Seq("vec_id"))
+      .localCheckpoint(true)
     val pairs = rk.join(cand, $"ccell" === $"cell_id" && $"rn" < $"rn2")
       .filter(floor(Vectors.cosine($"embedding", $"e2") * lit(1e6) +
         lit(0.5)) >= lit(DbEpsGrid))
@@ -1830,10 +1844,6 @@ object VectorOps {
     val adj = pairs.select($"a".as("v"), $"b".as("n"))
       .unionAll(pairs.select($"b".as("v"), $"a".as("n")))
       .localCheckpoint(true)
-    val truth = rk.select($"vec_id")
-      .join(Tables.embeddings(s, d)
-        .select($"vec_id", $"label".cast("long").as("tl")), Seq("vec_id"))
-      .localCheckpoint(true)
     val guardedTl = when($"tl" < 0L || $"tl" >= lit(1024L),
       raise_error(concat(
         lit("labelProp: label outside the pack base [0, 1024): "),
@@ -1842,7 +1852,6 @@ object VectorOps {
       .filter(md5(concat(lit("lp:"), $"vec_id".cast("string")))
         < LpSeedHexCut)
       .select($"vec_id", guardedTl.as("lab"))
-      .persist()
     labelPropRounds(adj, truth, l0)
   }
 
@@ -1851,11 +1860,17 @@ object VectorOps {
     * split from [[q243LabelProp]] for the crafted-graph spec. */
   private[graft] def labelPropRounds(adj: DataFrame, truth: DataFrame,
       l0: DataFrame): DataFrame = {
-    def row(name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("value"))
-        .select(lit(name).as("metric"), $"value")
-    val (census, _) = (1 to LpRounds)
-      .foldLeft((row("r0_labeled", l0), l0)) { case ((cen, lbl), r) =>
+    val census = Blocks.generations { gens =>
+      // (vec_id, lab, round, ok): every labeled node, the round that
+      // labeled it, and whether an adopted label matches its truth — the
+      // round's generation, so one aggregate over it is the whole census
+      var lbl = gens.keep(l0.select($"vec_id", $"lab", lit(0).as("round"),
+        lit(false).as("ok")))
+      def take(r: Int) = gens.fill(s"labelprop round $r: census") {
+        lbl.agg(count(lit(1)), count(when($"round" === r, lit(1))),
+          count(when($"round" === r && $"ok", lit(1)))).head()
+      }
+      ("r0_labeled" -> take(0).getLong(0)) +: (1 to LpRounds).flatMap { r =>
         val votes = adj
           .join(lbl.select($"vec_id".as("v")), Seq("v"), "left_anti")
           .join(lbl.select($"vec_id".as("n"), $"lab"), Seq("n"))
@@ -1864,15 +1879,17 @@ object VectorOps {
           .select($"v", ((lit(512L) - $"cnt") * 1024L + $"lab").as("pack"))
           .groupBy($"v").agg(min($"pack").as("mp"))
           .select($"v".as("vec_id"), ($"mp" % 1024L).as("lab"))
-          .persist()
-        val nl = lbl.unionByName(adopted).persist()
-        val correct = adopted.join(truth, Seq("vec_id"))
-          .filter($"lab" === $"tl")
-        (cen.unionAll(row(s"r${r}_adopted", adopted))
-          .unionAll(row(s"r${r}_correct", correct))
-          .unionAll(row(s"r${r}_labeled", nl)), nl)
+        lbl = gens.keep(lbl.unionByName(adopted
+          .join(truth, Seq("vec_id"), "left")
+          .select($"vec_id", $"lab", lit(r).as("round"),
+            coalesce($"lab" === $"tl", lit(false)).as("ok"))))
+        val row = take(r)
+        Seq(s"r${r}_labeled" -> row.getLong(0),
+          s"r${r}_adopted" -> row.getLong(1),
+          s"r${r}_correct" -> row.getLong(2))
       }
-    census.orderBy($"metric")
+    }
+    Relational.censusFrame(adj.sparkSession, census)
   }
 
   val q243LabelPropSql: String = {
@@ -1954,39 +1971,36 @@ object VectorOps {
       .select($"i", $"j", $"gram_micro"))
 
   private[graft] def powerIteration(gram: DataFrame): DataFrame = {
-    // round 15: ONE eager checkpoint of the gram pins the corpus scan
-    // to exactly one evaluation — the gram is a ≤ GramDims² = 256-row
-    // relation, but its LINEAGE is the full corpus scan, and the old
-    // lazy chains re-embedded it ~8x (each iteration references the
-    // previous twice: the L∞ agg + the renorm body; Probe showed ~10
-    // broadcast jobs of 0.9–1.6 s all recomputing the scan). Each
-    // iterate's raw matvec (16 rows) is checkpointed the same way, so
-    // every branch downstream reads metadata-grain LogicalRDDs —
-    // matching the operator's own 100 TB claim (corpus touched once,
-    // iterations are metadata arithmetic).
-    val g = gram.localCheckpoint(true)
-    val gF = g.unionByName(g.filter($"i" =!= $"j")
-      .select($"j".as("i"), $"i".as("j"), $"gram_micro"))
-    val v0 = g.select($"i").distinct()
-      .select($"i", lit(1000000L).as("v"))
-    val (vF, mF) = (1 to PowerIters)
-      .foldLeft((v0, v0 /*placeholder*/)) { case ((v, _), _) =>
-        val raw = gF.join(v.select($"i".as("j"), $"v"), Seq("j"))
+    val rows = Blocks.generations { gens =>
+      // the gram is pinned and filled by one count, so the corpus scan
+      // under it runs exactly once — the gram is a ≤ GramDims² = 256-row
+      // relation, but its LINEAGE is the full corpus scan, and every
+      // iteration reads it twice (both arms of the symmetric form)
+      val g = gens.pin(gram)
+      gens.fill("power: gram")(g.count())
+      val gF = g.unionByName(g.filter($"i" =!= $"j")
+        .select($"j".as("i"), $"i".as("j"), $"gram_micro"))
+      var v = g.select($"i").distinct().select($"i", lit(1000000L).as("v"))
+      var m: Any = null
+      for (k <- 1 to PowerIters) {
+        // each iterate's raw matvec (≤ GramDims rows) is the generation,
+        // and its L∞ norm — the census — is the action that fills it
+        val raw = gens.keep(gF.join(v.select($"i".as("j"), $"v"), Seq("j"))
           .select($"i",
             floor($"gram_micro".cast("double") * $"v" / 1000000.0)
               .cast("long").as("c"))
-          .groupBy($"i").agg(sum($"c").as("r"))
-          .localCheckpoint(true)
-        val m = raw.agg(max(abs($"r")).as("m"))
-        val vn = raw.crossJoin(broadcast(m))
-          .select($"i",
-            floor($"r".cast("double") * 1000000.0 /
-              greatest($"m", lit(1L))).cast("long").as("v"))
-        (vn, m)
+          .groupBy($"i").agg(sum($"c").as("r")))
+        m = gens.fill(s"power: iterate $k")(raw.agg(max(abs($"r"))).head().get(0))
+        v = raw.select($"i",
+          floor($"r".cast("double") * 1000000.0 /
+            greatest(lit(m), lit(1L))).cast("long").as("v"))
       }
-    vF.select($"i".cast("long").as("dim"), $"v".as("value"))
-      .unionByName(mF.select(lit(-1L).as("dim"), $"m".as("value")))
-      .orderBy($"dim")
+      // one row per gram dimension (≤ GramDims)
+      v.select($"i".cast("long"), $"v").collect()
+        .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
+        .toSeq :+ ((-1L, Option(m).map(_.asInstanceOf[Long])))
+    }
+    gram.sparkSession.createDataFrame(rows.sortBy(_._1)).toDF("dim", "value")
   }
 
   val q244PowerIterationSql: String = {

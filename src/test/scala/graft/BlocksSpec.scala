@@ -8,7 +8,7 @@ import org.apache.logging.log4j.core.appender.AbstractAppender
 import org.apache.logging.log4j.core.config.Property
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -188,51 +188,82 @@ class BlocksSpec extends AnyFunSuite {
     (4L, 5L), (4L, 6L), (5L, 6L), (6L, 7L)).toDF("pa", "pb")
   // a hand-solved 5-node graph, and its replay with every id past the
   // 21-bit narrow-pack ceiling
+  // ratings (c, p, r): two users, two items, four ratings
+  private lazy val ratings = Seq((1L, 10L, 3L), (1L, 11L, 1L),
+    (2L, 10L, 2L), (2L, 11L, 5L)).toDF("c", "p", "r")
+  // a nested bipartite purchase graph (c, p): part 101 has the most
+  // buyers, so it leads the authorities
+  private lazy val buyers = Seq((1L, 101L), (1L, 102L), (1L, 103L),
+    (2L, 101L), (2L, 102L), (3L, 101L)).toDF("c", "p")
+  // a gram whose coupled dims 0/1 dominate, dim 0 the max component
+  private lazy val gram = Seq((0, 0, 4000000L), (0, 1, 1000000L),
+    (0, 2, 0L), (1, 1, 3000000L), (1, 2, 0L), (2, 2, 1000000L))
+    .toDF("i", "j", "gram_micro")
+  // chain 1-2-3 and pair 4-5 spread labels 0 and 1; node 6 hears a
+  // tie, adopts 0 against its truth 7, so round 2 has one correct
+  private lazy val (lpAdj, lpTruth) = {
+    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (2L, 6L), (5L, 6L))
+    ((pairs ++ pairs.map(_.swap)).toDF("v", "n"),
+      Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 1L), (5L, 1L), (6L, 7L))
+        .toDF("vec_id", "tl"))
+  }
   private lazy val mstGraph = Seq(
     (1L, 2L, 5L), (2L, 3L, 1L), (3L, 4L, 2L),
     (1L, 3L, 4L), (4L, 5L, 10L), (1L, 5L, 3L)).toDF("pa", "pb", "w")
 
-  private def metric(out: DataFrame, name: String): Long =
-    out.filter($"metric" === name).select($"value").as[Long].head()
+  private def metric(rows: Array[Row], name: String): Long =
+    rows.find(_.getString(0) == name).get.getLong(1)
 
   /** Iterative operators on crafted inputs, each with one figure of its
-    * hand-traced result. */
-  private lazy val iterative: Seq[(String, () => DataFrame, DataFrame => Unit)] = {
+    * hand-traced result, and the queries whose caches are filled
+    * without a generation loop, at sf0.001 inside a query scope. */
+  private lazy val iterative: Seq[(String, () => Array[Row], Array[Row] => Unit)] = {
     val off = (1L << 41) + 5L
     val wideMst = (1L << 33) + 12345L
+    val sf = "/root/testdata/sf0.001"
+    def query(q: (SparkSession, String) => DataFrame): () => Array[Row] =
+      () => Blocks.scope(spark)(q(spark, sf).collect())._1
     Seq(
-      ("kCoreTrace", () => Relational.kCoreTrace(pathAndTriangle, 2L),
-        out => assert(metric(out, "r2_nodes") === 3L)),
-      ("bfsTrace", () => Relational.bfsTrace(pathAndPair, 10L),
-        out => assert(metric(out, "unreached") === 3L)),
-      ("ccTrace", () => Relational.ccTrace(starAndPath),
-        out => assert(metric(out, "r2_changed") === 3L)),
-      ("kCenter", () => VectorOps.kCenter(compass),
-        out => assert(out.select($"center_id").as[Long].collect().toSeq ===
-          Seq(0L, 2L, 1L, 3L))),
+      ("kCoreTrace", () => Relational.kCoreTrace(pathAndTriangle, 2L).collect(),
+        rows => assert(metric(rows, "r2_nodes") === 3L)),
+      ("bfsTrace", () => Relational.bfsTrace(pathAndPair, 10L).collect(),
+        rows => assert(metric(rows, "unreached") === 3L)),
+      ("ccTrace", () => Relational.ccTrace(starAndPath).collect(),
+        rows => assert(metric(rows, "r2_changed") === 3L)),
+      ("kCenter", () => VectorOps.kCenter(compass).collect(),
+        rows => assert(rows.map(_.getLong(1)).toSeq === Seq(0L, 2L, 1L, 3L))),
       ("kCenter, wide ids", () => VectorOps.kCenter(
-          compass.select(($"vec_id" + off).as("vec_id"), $"embedding")),
-        out => assert(out.select($"center_id").as[Long].collect().toSeq ===
+          compass.select(($"vec_id" + off).as("vec_id"), $"embedding")).collect(),
+        rows => assert(rows.map(_.getLong(1)).toSeq ===
           Seq(0L, 2L, 1L, 3L).map(_ + off))),
-      ("kTrussTrace", () => Relational.kTrussTrace(k4, 2L),
-        out => assert(metric(out, "r3_edges") === 6L)),
-      ("boruvkaTrace", () => Relational.boruvkaTrace(mstGraph),
-        out => assert(metric(out, "r3_mst_weight") === 10L)),
+      ("kTrussTrace", () => Relational.kTrussTrace(k4, 2L).collect(),
+        rows => assert(metric(rows, "r3_edges") === 6L)),
+      ("alsStep", () => Relational.alsStep(ratings).collect(),
+        rows => assert(metric(rows, "n_ratings") === 4L)),
+      ("hits", () => Relational.hits(buyers).collect(),
+        rows => assert(rows.head.getLong(1) === 101L)),
+      ("powerIteration", () => VectorOps.powerIteration(gram).collect(),
+        rows => assert(rows.find(_.getLong(0) == 0L).get.getLong(1) === 1000000L)),
+      ("labelPropRounds", () => VectorOps.labelPropRounds(lpAdj, lpTruth,
+          Seq((1L, 0L), (4L, 1L)).toDF("vec_id", "lab")).collect(),
+        rows => assert(metric(rows, "r2_correct") === 1L)),
+      ("q221DensityClusters", query(VectorOps.q221DensityClusters),
+        rows => assert(rows.nonEmpty)),
+      ("q243LabelProp", query(VectorOps.q243LabelProp),
+        rows => assert(rows.nonEmpty)),
+      ("boruvkaTrace", () => Relational.boruvkaTrace(mstGraph).collect(),
+        rows => assert(metric(rows, "r3_mst_weight") === 10L)),
       ("boruvkaTrace, wide ids", () => Relational.boruvkaTrace(mstGraph
           .select(($"pa" + wideMst).as("pa"), ($"pb" + wideMst).as("pb"),
-            $"w")),
-        out => assert(metric(out, "r3_mst_weight") === 10L)))
+            $"w")).collect(),
+        rows => assert(metric(rows, "r3_mst_weight") === 10L)))
   }
 
   test("iterative operators fill each cache before two scans read it, " +
       "free every generation, and compute no cached partition twice") {
     val problems = Seq.newBuilder[String]
     noReadds(iterative.foreach { case (name, run, check) =>
-      val ((out, left), rereads) = unfilledRereads(leftBy {
-        val out = run()
-        out.collect()
-        out
-      })
+      val ((out, left), rereads) = unfilledRereads(leftBy(run()))
       if (rereads.nonEmpty) problems += s"$name reads ${rereads.size} " +
         s"unfilled caches through more than one scan: ${rereads.mkString(", ")}"
       if (left.nonEmpty) problems += s"$name left rdds $left behind"

@@ -542,9 +542,8 @@ class ScaleSpec extends AnyFunSuite {
       // +1 round 10: q211's 1-row exact-count broadcast beside the
       // 1-row estimate
       // +1 round 10: q232's 1-row basket-count broadcast
-      // +1 round 10: q237's 1-row L1-total broadcast (one source site
-      // inside normPpb, applied per half-step — q110 discipline)
-      "operators/Relational.scala" -> 8,
+      // (-1: q237's L1 totals are census literals of its generation loop)
+      "operators/Relational.scala" -> 7,
       // round 10: q234's 1-row (N, tie-term) broadcast; q235's bounded
       // |langs|×|sources| marginal axis, 1-row total broadcast, and
       // 1-row top-cell broadcast onto the 1-row summary
@@ -591,19 +590,20 @@ class ScaleSpec extends AnyFunSuite {
       // coverage census
       "operators/TextOps.scala" -> 39,
       // +1 round 10: q220's NumCells-row centroid broadcast
-      // +1 round 10: q244's per-iteration 1-row L∞-norm broadcast
-      // (one source site inside the fold)
+      // (-1: q244's L∞ norms are census literals of its generation loop)
       // +1 round 10: q248's per-round 1-row newest-center broadcast
       // (one source site inside the fold)
-      "operators/VectorOps.scala" -> 8)
+      "operators/VectorOps.scala" -> 7)
     assert(countSites("crossJoin") === crossJoinBudget,
       s"crossJoin sites drifted (found ${countSites("crossJoin")}): " +
         "argue the new site is broadcast metadata-sized, then register it")
-    // collect() only at the 1-row staging metadata lookup and Verify's
-    // human diagnostics — never in an operator's data path
+    // collect() only at Verify's human diagnostics and bounded census
+    // reads — never in an operator's data path
     val collectBudget = Map(
       "Verify.scala" -> 2,
-      "stg/Staging.scala" -> 1,
+      // q244's final iterate: one row per gram dimension (≤ GramDims
+      // = 16), read once after the last iteration's census
+      "operators/VectorOps.scala" -> 1,
       // q287's |types|-row sequential-test state readout inside the
       // foreachBatch sink — bounded by the event-type axis
       // +1 round 13: sprtStream's restart-restore of the SAME
@@ -618,6 +618,31 @@ class ScaleSpec extends AnyFunSuite {
     assert(countSites("\\.collect\\(\\)") === collectBudget,
       s"driver collect() sites drifted (found ${countSites("\\.collect\\(\\)")}): " +
         "an operator must not loop driver-side; register only metadata lookups")
+    // cache and checkpoint sites: an iterative operator persists its
+    // round relations through Blocks.generations (util/Blocks.scala's
+    // keep and pin), whose round census fills them before a second scan
+    // reads them and which frees them. These counts only go down: a new
+    // hand-rolled persist or eager checkpoint must be argued (a lineage
+    // cut no census can fill) and registered here
+    val persistBudget = Map(
+      "util/Blocks.scala" -> 2,
+      // q243's cell-capped points (filled by the truth checkpoint's one
+      // scan), q191's word symbols (bpeTrainFromWords) x2, q284's
+      // distinct incidence; boruvkaTrace's serialized edge list
+      "operators/VectorOps.scala" -> 1,
+      "operators/TextOps.scala" -> 3,
+      "operators/Relational.scala" -> 1)
+    assert(countSites("\\.persist\\(") === persistBudget,
+      s"persist sites drifted (found ${countSites("\\.persist\\(")}): " +
+        "persist round relations through Blocks.generations")
+    val checkpointBudget = Map(
+      "operators/Relational.scala" -> 10,
+      "operators/TextOps.scala" -> 16,
+      "operators/VectorOps.scala" -> 8)
+    assert(countSites("localCheckpoint\\(true") === checkpointBudget,
+      s"eager checkpoint sites drifted (found " +
+        s"${countSites("localCheckpoint\\(true")}): persist round " +
+        "relations through Blocks.generations")
     // memory sinks materialize their whole output table ON THE DRIVER —
     // the round-8 q165 escape route around the collect() ratchet. Only
     // streams whose output is a bounded-cardinality AGGREGATE may use
