@@ -2520,13 +2520,12 @@ object Relational {
     * graph only SHRINKS round over round — no transitive closure, no
     * frontier state; at 100 TB each round costs at most one pass over
     * the current edge set, the standard distributed-peel shape. Each
-    * round's edge set and degree relation are one generation of
-    * [[Blocks.generations]]: the round's census (one aggregate over the
-    * degree relation) is the action that fills both, the next round's
-    * semi joins read them filled, and the superseded generation is
-    * freed right after. Without the caches the re-evaluation doubles
-    * per round (2^r edge-build replays — the measured 80 s cliff at
-    * sf0.1). The mirror pins the same shape with AS MATERIALIZED. */
+    * round's edge set and degree relation are one
+    * [[Blocks.generations]] generation, filled by the round's census
+    * (one aggregate over the degree relation) before the next round
+    * reads them; without the caches the re-evaluation doubles per
+    * round (the measured 80 s cliff at sf0.1). The mirror pins the
+    * same shape with AS MATERIALIZED. */
   def q197KCore(s: SparkSession, d: String): DataFrame =
     kCoreTrace(coEdgesStaged(s, d), KCoreK)
 
@@ -2534,9 +2533,8 @@ object Relational {
     * [[q197KCore]] so the crafted spec can drive a small graph with a
     * small k. */
   private[graft] def kCoreTrace(edges0: DataFrame, k: Long): DataFrame = {
-    // one degree relation per round is the whole census (nodes = its
-    // rows, edges = Σdeg/2, exact on any edge list) and the next
-    // round's alive set
+    // the degree relation is the round's census (nodes = its rows,
+    // edges = Σdeg/2) and the next round's alive set
     val census = Blocks.generations { gens =>
       var e = edges0
       var deg: DataFrame = null
@@ -2660,11 +2658,8 @@ object Relational {
     * defaults to the live [[KTrussRounds]] — round-12 advice); `tri0`
     * optionally supplies a precomputed round-0 triangle relation (the
     * live staged path). Each round's triangle and support relations
-    * are one generation of [[Blocks.generations]]: ONE census action
-    * per round — both census numbers read off the support relation —
-    * fills both, and the superseded generation is freed right after,
-    * so a 287-query session never accumulates dead round relations
-    * while no round pays a second job.
+    * are one [[Blocks.generations]] generation, filled by ONE census
+    * action that reads both numbers off the support relation.
     * PRECONDITION (already the truss contract): `edges0` is a
     * DISTINCT (pa, pb) pair relation — the survivor census counts
     * passing support rows, which only equals the semijoined edge
@@ -2685,20 +2680,12 @@ object Relational {
       val r0 = gens.fill("ktruss round 0: census (edge count)")(e.count())
       var tri: DataFrame = null
       ("r0_edges" -> r0) +: (1 to rounds).flatMap { r =>
-        // round 16 (guide §1.2 step 1 — don't recompute what a filter
-        // gives): rounds ≥ 2 used to re-derive triangles from scratch
-        // on the survivor graph (degree aggregate + orientation joins +
-        // wedge join + closing join — Probe: ~22 AQE stage jobs per
-        // round, ~10 s of the 14.4 s total, on ~29k surviving edges).
-        // But edge sets only SHRINK, so the survivor graph's triangles
-        // are exactly the previous round's triangles whose three edges
-        // all survived — three semi-joins against the survivor edge
-        // set. The corner labeling (u = min-(deg,id)) is inherited from
-        // the round that BUILT the triangle rather than re-derived from
-        // the shrunken graph's degrees, which is invisible here:
-        // supportOf keys every corner pair by least/greatest and the
-        // census is corner-blind (the crafted-peel spec replays the
-        // full trace against hand counts).
+        // round 16: edge sets only SHRINK, so rounds ≥ 2 keep the
+        // previous round's triangles whose three edges all survived
+        // (three semi joins) instead of re-deriving them (Probe: ~22
+        // stage jobs, ~10 s of 14.4 s per round). The inherited corner
+        // labeling is invisible: supportOf keys corner pairs by
+        // least/greatest and the census is corner-blind.
         tri = gens.keep(if (r == 1) tri0.getOrElse(triangleParts(e)._4)
           else {
             val ecur = e
@@ -2716,25 +2703,17 @@ object Relational {
                 "left_semi")
           })
         val sup = gens.keep(supportOf(tri))
-        // ONE census action per round: the triangle count is
-        // sum(sup)/3, and the survivor-edge count is count(sup >=
-        // minSup) — equal to count(e2) because every support key is a
-        // triangle edge (hence an edge of e) and e is a DISTINCT pair
-        // relation, so the semijoin below keeps exactly one row per
-        // passing support row (the crafted-peel spec replays the whole
-        // trace against hand counts)
+        // ONE census action per round: triangles = sum(sup)/3, and
+        // survivors = count(sup >= minSup), one row per surviving edge
+        // because every support key is an edge of the DISTINCT e
         val row = gens.fill(s"ktruss round $r: census (support agg)") {
           sup.agg(
             coalesce(sum($"sup"), lit(0L)),
             count(when($"sup" >= minSup, lit(1)))).head()
         }
-        // round 15 (guide §2.4): the survivor edge set is read DIRECTLY
-        // off the support relation — every support key is a triangle
-        // edge of e, and e is a DISTINCT pair relation, so
-        // sup.filter(sup >= minSup).select(pa, pb) IS the old
-        // e ⋉ σ(sup) semijoin's result with the corpus-grain join
-        // removed. It stays a projection of the filled sup: the next
-        // round's three semi joins read it through that cache.
+        // round 15: the survivor edge set is read DIRECTLY off the
+        // filled support relation (it IS e ⋉ σ(sup), for the same
+        // reason), so the next round's semi joins read that cache
         e = sup.filter($"sup" >= minSup).select($"pa", $"pb")
         Seq(s"r${r - 1}_tri" -> row.getLong(0) / 3L,
           s"r${r}_edges" -> row.getLong(1))
@@ -3053,12 +3032,12 @@ object Relational {
     * Scale: the textbook Pregel/BSP BFS shape — each round is ONE join
     * of the (shrinking) frontier against the edge list on the
     * entropy-rich part-id key plus one anti join against the reached
-    * set; no per-pair work, no transitive closure. The reached set is
-    * each round's [[Blocks.generations]] generation (the q197
-    * discipline): one count over it is the round's census and the
-    * action that fills it, and round r+1 reads it filled — without the
-    * cache the edge build re-evaluates 2^r times, the measured 80 s
-    * cliff. The mirror pins the same shape with AS MATERIALIZED.
+    * set; no per-pair work, no transitive closure. Each frontier is
+    * pinned in a [[Blocks.generations]] loop and filled by its own
+    * count, the round's census (the q197 discipline); the reached set
+    * is the union of the frontiers so far — without the caches the
+    * edge build re-evaluates 2^r times, the measured 80 s cliff. The
+    * mirror pins the same shape with AS MATERIALIZED.
     *
     * Determinism: pure integer node ids and counts; seed choice is a
     * modulus, not a sample. */
@@ -3070,44 +3049,33 @@ object Relational {
     * with a small seed modulus (the kCoreTrace pattern). */
   private[graft] def bfsTrace(edges0: DataFrame, seedMod: Long): DataFrame = {
     val census = Blocks.generations { gens =>
-      // round 16 (guide §2.4 — two operations keyed the same way share
-      // one exchange): the frontier expansion used to semi-join the
-      // edge list TWICE PER ROUND (once by pa, once by pb), shuffling
-      // the full corpus-grain edge list 2 × rounds times. The
-      // symmetrized (src, dst) relation is shuffled by src ONCE and
-      // pinned; every round's expansion reuses the cached partitioning
-      // and only the (small) frontier side moves. Same neighbor set by
-      // construction: {dst : (src,dst) ∈ edges ∪ swap(edges), src ∈
-      // frontier}.
+      // round 16: the symmetrized (src, dst) edge list is shuffled by
+      // src ONCE and pinned, so every round's expansion reuses the
+      // cached partitioning and only the small frontier side moves
       val und = gens.pin(edges0.select($"pa".as("src"), $"pb".as("dst"))
         .unionByName(edges0.select($"pb".as("src"), $"pa".as("dst")))
         .repartition($"src"))
-      val nodes = gens.keep(edges0.select(explode(array($"pa", $"pb")).as("p"))
+      val nodes = gens.pin(edges0.select(explode(array($"pa", $"pb")).as("p"))
         .distinct())
       val r0 = gens.fill("bfs round 0: census (nodes, seeds)") {
         nodes.agg(count(lit(1)), count(when($"p" % seedMod === 0L, lit(1))))
           .head()
       }
-      // reached (p, dist) is the round's generation: round r's frontier
-      // is its dist = r slice, so its census is one count over it
-      var reached = nodes.filter($"p" % seedMod === 0L)
-        .select($"p", lit(0L).as("dist"))
+      // every frontier is pinned and filled by its own count; reached
+      // is the union of the frontiers so far
+      var frontier = nodes.filter($"p" % seedMod === 0L)
+      var reached = frontier
       val frontiers = r0.getLong(1) +: (1 to BfsRounds).map { r =>
-        val frontier = und
-          .join(reached.filter($"dist" === r - 1L)
-            .select($"p".as("src")), Seq("src"), "leftsemi")
+        frontier = gens.pin(und
+          .join(frontier.withColumnRenamed("p", "src"), Seq("src"), "leftsemi")
           .select($"dst".as("p"))
           .distinct()
-          .join(reached.select($"p"), Seq("p"), "leftanti")
-        reached = gens.keep(reached
-          .unionByName(frontier.select($"p", lit(r.toLong).as("dist"))))
-        gens.fill(s"bfs round $r: census (frontier)") {
-          reached.agg(count(when($"dist" === r.toLong, lit(1)))).head()
-            .getLong(0)
-        }
+          .join(reached, Seq("p"), "leftanti"))
+        reached = reached.unionByName(frontier)
+        gens.fill(s"bfs round $r: census (frontier)")(frontier.count())
       }
-      // reached holds each round's frontier at its dist, so the
-      // distance histogram is the frontier trace (present dists only)
+      // the distance histogram is the frontier trace (present dists
+      // only), and every reached node is in exactly one frontier
       frontiers.zipWithIndex.flatMap { case (n, r) =>
         (s"r${r}_frontier" -> n) +:
           (if (n > 0) Seq(s"dist_$r" -> n) else Nil)
@@ -3212,15 +3180,11 @@ object Relational {
       // each stage is pinned and filled by the action that counts it,
       // so the next stage and the fit census read it filled
       val ratings = gens.pin(ratings0)
-      // ADAPTIVE rule-9 pack width (the q282 recipe, round-13 pack
-      // audit): one 1-row bound scan of the ratings picks the narrow
-      // 31/32-bit BIGINT pack (measurably cheaper) when every part id
-      // fits 32 bits, the DECIMAL(38,0) pack (vg·2⁶³ + (2⁶³−1−p), both
-      // fields structurally BIGINT-bounded — no guard can trip) beyond;
-      // both packs induce the identical (vg desc, p asc) order, so the
-      // arm is output-invisible. The narrow arm keeps the loud per-row
-      // guard (packedTickKey philosophy): a wider factor would alias
-      // pick keys.
+      // ADAPTIVE rule-9 pack width (the q282 recipe): a 1-row bound
+      // scan picks the narrow 31/32-bit BIGINT pack (measurably
+      // cheaper, loud per-row guard) when every part id fits 32 bits,
+      // the DECIMAL(38,0) pack (vg·2⁶³ + (2⁶³−1−p), no guard can trip)
+      // beyond; both induce the same (vg desc, p asc) order.
       val maxP = gens.fill("als: ratings bound scan") {
         ratings.agg(max($"p")).head()
       }

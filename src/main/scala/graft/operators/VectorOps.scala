@@ -1583,9 +1583,7 @@ object VectorOps {
     // splits, components, and the seven rows) — without these caches
     // the cell-bounded cosine quadratic re-evaluates once PER ROW, the
     // iterative-plan cliff (measured: 44 s → in-band at sf0.1). rk is
-    // checkpointed eagerly: the pair self-join reads it twice, and two
-    // scans of an unfilled cache in one action can compute a partition
-    // twice
+    // eager: the pair self-join would read an unfilled cache twice
     val rk = a1.select($"vec_id", $"embedding", $"cell_id")
       .withColumn("rn", row_number().over(w))
       .filter($"rn" <= SemDedupMaxCell)
@@ -1806,9 +1804,8 @@ object VectorOps {
     * raise_error-guarded into [0, 1024)); the census is 7 integer
     * rows. Scale: adjacency is |pairs|-bounded, each round one
     * equi-join + bounded aggregate (the Pregel round), label
-    * relations are one row per node; each round's label relation is a
-    * [[Blocks.generations]] generation, filled by the round's census
-    * and read filled by the next round. */
+    * relations are one row per node, each round's a
+    * [[Blocks.generations]] generation filled by its census. */
   def q243LabelProp(s: SparkSession, d: String): DataFrame = {
     val (_, _, a1) = lloydOneStep(s, d)
     val w = Window.partitionBy($"cell_id").orderBy($"vec_id")
@@ -1820,10 +1817,8 @@ object VectorOps {
       .persist()
     val cand = rk.select($"cell_id".as("ccell"), $"vec_id".as("v2"),
       $"embedding".as("e2"), $"rn".as("rn2"))
-    // the truth checkpoint is the action that fills rk, through a
-    // single scan: the pair self-join below reads rk twice, and two
-    // scans of an unfilled cache in one action can compute a partition
-    // twice
+    // the truth checkpoint fills rk through one scan, before the pair
+    // self-join reads it twice
     val truth = rk.select($"vec_id")
       .join(Tables.embeddings(s, d)
         .select($"vec_id", $"label".cast("long").as("tl")), Seq("vec_id"))
@@ -1861,9 +1856,8 @@ object VectorOps {
   private[graft] def labelPropRounds(adj: DataFrame, truth: DataFrame,
       l0: DataFrame): DataFrame = {
     val census = Blocks.generations { gens =>
-      // (vec_id, lab, round, ok): every labeled node, the round that
-      // labeled it, and whether an adopted label matches its truth — the
-      // round's generation, so one aggregate over it is the whole census
+      // (vec_id, lab, round, ok): each labeled node, its round, and
+      // whether it matches its truth — one aggregate is the census
       var lbl = gens.keep(l0.select($"vec_id", $"lab", lit(0).as("round"),
         lit(false).as("ok")))
       def take(r: Int) = gens.fill(s"labelprop round $r: census") {
@@ -1972,10 +1966,8 @@ object VectorOps {
 
   private[graft] def powerIteration(gram: DataFrame): DataFrame = {
     val rows = Blocks.generations { gens =>
-      // the gram is pinned and filled by one count, so the corpus scan
-      // under it runs exactly once — the gram is a ≤ GramDims² = 256-row
-      // relation, but its LINEAGE is the full corpus scan, and every
-      // iteration reads it twice (both arms of the symmetric form)
+      // round 15: the ≤ 256-row gram's LINEAGE is the corpus scan, so
+      // it is pinned and filled by one count before gF reads it twice
       val g = gens.pin(gram)
       gens.fill("power: gram")(g.count())
       val gF = g.unionByName(g.filter($"i" =!= $"j")
@@ -1983,8 +1975,7 @@ object VectorOps {
       var v = g.select($"i").distinct().select($"i", lit(1000000L).as("v"))
       var m: Any = null
       for (k <- 1 to PowerIters) {
-        // each iterate's raw matvec (≤ GramDims rows) is the generation,
-        // and its L∞ norm — the census — is the action that fills it
+        // the raw matvec is the generation, its L∞ norm the census
         val raw = gens.keep(gF.join(v.select($"i".as("j"), $"v"), Seq("j"))
           .select($"i",
             floor($"gram_micro".cast("double") * $"v" / 1000000.0)
@@ -2063,10 +2054,9 @@ object VectorOps {
     * unboundable) beyond. Both arms induce the same (mind desc,
     * vec_id asc) order, so the choice is output-invisible; the DuckDB
     * mirror keeps the BIGINT pack (generator ids are bounded). Each
-    * round's min-distance relation is one generation of
-    * [[Blocks.generations]]: one aggregate over it is the round's
-    * census AND the next round's argmax, and the action that fills it;
-    * the next center's vector is a filter on the collected id.
+    * round's min-distance relation is a [[Blocks.generations]]
+    * generation, filled by ONE aggregate: the round's census AND the
+    * next argmax, whose center is then a filter on the collected id.
     *
     * Determinism: distances are the gridded cosine (1e6 − cos_grid,
     * exact integers after the q161-style floor); every selection and

@@ -32,17 +32,14 @@ object Blocks {
     try body(gens) finally gens.close()
   }
 
-  /** The generations of one iterative loop. A round persists its new
-    * relations with [[keep]], then runs its census through [[fill]]:
-    * the census is the one action that fills them, so no job is added,
-    * and it must read each kept frame through a single scan (two scans
-    * of one unfilled cache in one action may compute a partition
-    * twice). After that action the superseded generation is freed; it
-    * is safe to free only then, because the CacheManager re-plans every
-    * dependent cache that is not filled yet. [[pin]] persists a
-    * loop-invariant frame that lives until the loop exits. Frames are
-    * freed as persisted, never through a projection of them: the
-    * CacheManager never saw a projection's plan. */
+  /** One iterative loop's generations. A round persists its relations
+    * with [[keep]] and runs its census through [[fill]], the one action
+    * that fills them; it must read each kept frame through a single
+    * scan (two scans of an unfilled cache in one action may compute a
+    * partition twice). Only then is the superseded generation freed:
+    * the CacheManager re-plans every dependent cache not yet filled.
+    * [[pin]] persists a loop-invariant frame until the loop exits.
+    * Frames are freed as persisted, never through a projection. */
   final class Generations private[Blocks] () {
     private var pinned = Vector.empty[DataFrame]
     private var live = Vector.empty[DataFrame]
@@ -56,9 +53,8 @@ object Blocks {
       val p = df.persist(); pinned :+= p; p
     }
 
-    /** Run `census`, labelled `what` in the Spark job list, as the
-      * action that fills the kept frames; then free the generation they
-      * supersede and return the census. */
+    /** Run `census` (job description `what`) as the action that fills
+      * the kept frames, then free the generation they supersede. */
     def fill[T](what: String)(census: => T): T = {
       val sc = SparkSession.active.sparkContext
       val label = sc.getLocalProperty("spark.job.description")

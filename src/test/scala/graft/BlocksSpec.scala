@@ -261,15 +261,16 @@ class BlocksSpec extends AnyFunSuite {
 
   test("iterative operators fill each cache before two scans read it, " +
       "free every generation, and compute no cached partition twice") {
-    val problems = Seq.newBuilder[String]
-    noReadds(iterative.foreach { case (name, run, check) =>
-      val ((out, left), rereads) = unfilledRereads(leftBy(run()))
-      if (rereads.nonEmpty) problems += s"$name reads ${rereads.size} " +
-        s"unfilled caches through more than one scan: ${rereads.mkString(", ")}"
-      if (left.nonEmpty) problems += s"$name left rdds $left behind"
-      check(out)
-    })
-    val found = problems.result()
-    assert(found.isEmpty, found.mkString("\n"))
+    noReadds {
+      val problems = iterative.flatMap { case (name, run, check) =>
+        val ((out, left), rereads) = unfilledRereads(leftBy(run()))
+        check(out)
+        val reread = if (rereads.isEmpty) Nil else Seq(
+          s"$name reads ${rereads.size} unfilled caches through more " +
+            s"than one scan: ${rereads.mkString(", ")}")
+        reread ++ (if (left.isEmpty) Nil else Seq(s"$name left rdds $left behind"))
+      }
+      assert(problems.isEmpty, problems.mkString("\n"))
+    }
   }
 }
