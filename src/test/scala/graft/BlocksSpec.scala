@@ -186,8 +186,6 @@ class BlocksSpec extends AnyFunSuite {
   private lazy val k4 = Seq(
     (1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L),
     (4L, 5L), (4L, 6L), (5L, 6L), (6L, 7L)).toDF("pa", "pb")
-  // a hand-solved 5-node graph, and its replay with every id past the
-  // 21-bit narrow-pack ceiling
   // ratings (c, p, r): two users, two items, four ratings
   private lazy val ratings = Seq((1L, 10L, 3L), (1L, 11L, 1L),
     (2L, 10L, 2L), (2L, 11L, 5L)).toDF("c", "p", "r")
@@ -207,6 +205,8 @@ class BlocksSpec extends AnyFunSuite {
       Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 1L), (5L, 1L), (6L, 7L))
         .toDF("vec_id", "tl"))
   }
+  // a hand-solved 5-node graph; the table replays it with every id
+  // past the 21-bit narrow-pack ceiling
   private lazy val mstGraph = Seq(
     (1L, 2L, 5L), (2L, 3L, 1L), (3L, 4L, 2L),
     (1L, 3L, 4L), (4L, 5L, 10L), (1L, 5L, 3L)).toDF("pa", "pb", "w")
