@@ -1965,33 +1965,39 @@ object VectorOps {
       .select($"i", $"j", $"gram_micro"))
 
   private[graft] def powerIteration(gram: DataFrame): DataFrame = {
-    val rows = Blocks.generations { gens =>
-      // round 15: the ≤ 256-row gram's LINEAGE is the corpus scan, so
-      // it is pinned and filled by one count before gF reads it twice
-      val g = gens.pin(gram)
-      gens.fill("power: gram")(g.count())
-      val gF = g.unionByName(g.filter($"i" =!= $"j")
-        .select($"j".as("i"), $"i".as("j"), $"gram_micro"))
-      var v = g.select($"i").distinct().select($"i", lit(1000000L).as("v"))
-      var m: Any = null
-      for (k <- 1 to PowerIters) {
-        // the raw matvec is the generation, its L∞ norm the census
-        val raw = gens.keep(gF.join(v.select($"i".as("j"), $"v"), Seq("j"))
+    // round 15: ONE eager checkpoint of the gram pins the corpus scan
+    // to exactly one evaluation — the gram is a ≤ GramDims² = 256-row
+    // relation, but its LINEAGE is the full corpus scan, and the old
+    // lazy chains re-embedded it ~8x (each iteration references the
+    // previous twice: the L∞ agg + the renorm body; Probe showed ~10
+    // broadcast jobs of 0.9–1.6 s all recomputing the scan). Each
+    // iterate's raw matvec (16 rows) is checkpointed the same way, so
+    // every branch downstream reads metadata-grain LogicalRDDs —
+    // matching the operator's own 100 TB claim (corpus touched once,
+    // iterations are metadata arithmetic).
+    val g = gram.localCheckpoint(true)
+    val gF = g.unionByName(g.filter($"i" =!= $"j")
+      .select($"j".as("i"), $"i".as("j"), $"gram_micro"))
+    val v0 = g.select($"i").distinct()
+      .select($"i", lit(1000000L).as("v"))
+    val (vF, mF) = (1 to PowerIters)
+      .foldLeft((v0, v0 /*placeholder*/)) { case ((v, _), _) =>
+        val raw = gF.join(v.select($"i".as("j"), $"v"), Seq("j"))
           .select($"i",
             floor($"gram_micro".cast("double") * $"v" / 1000000.0)
               .cast("long").as("c"))
-          .groupBy($"i").agg(sum($"c").as("r")))
-        m = gens.fill(s"power: iterate $k")(raw.agg(max(abs($"r"))).head().get(0))
-        v = raw.select($"i",
-          floor($"r".cast("double") * 1000000.0 /
-            greatest(lit(m), lit(1L))).cast("long").as("v"))
+          .groupBy($"i").agg(sum($"c").as("r"))
+          .localCheckpoint(true)
+        val m = raw.agg(max(abs($"r")).as("m"))
+        val vn = raw.crossJoin(broadcast(m))
+          .select($"i",
+            floor($"r".cast("double") * 1000000.0 /
+              greatest($"m", lit(1L))).cast("long").as("v"))
+        (vn, m)
       }
-      // one row per gram dimension (≤ GramDims)
-      v.select($"i".cast("long"), $"v").collect()
-        .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
-        .toSeq :+ ((-1L, Option(m).map(_.asInstanceOf[Long])))
-    }
-    gram.sparkSession.createDataFrame(rows.sortBy(_._1)).toDF("dim", "value")
+    vF.select($"i".cast("long").as("dim"), $"v".as("value"))
+      .unionByName(mF.select(lit(-1L).as("dim"), $"m".as("value")))
+      .orderBy($"dim")
   }
 
   val q244PowerIterationSql: String = {

@@ -193,10 +193,6 @@ class BlocksSpec extends AnyFunSuite {
   // buyers, so it leads the authorities
   private lazy val buyers = Seq((1L, 101L), (1L, 102L), (1L, 103L),
     (2L, 101L), (2L, 102L), (3L, 101L)).toDF("c", "p")
-  // a gram whose coupled dims 0/1 dominate, dim 0 the max component
-  private lazy val gram = Seq((0, 0, 4000000L), (0, 1, 1000000L),
-    (0, 2, 0L), (1, 1, 3000000L), (1, 2, 0L), (2, 2, 1000000L))
-    .toDF("i", "j", "gram_micro")
   // chain 1-2-3 and pair 4-5 spread labels 0 and 1; node 6 hears a
   // tie, adopts 0 against its truth 7, so round 2 has one correct
   private lazy val (lpAdj, lpTruth) = {
@@ -242,8 +238,6 @@ class BlocksSpec extends AnyFunSuite {
         rows => assert(metric(rows, "n_ratings") === 4L)),
       ("hits", () => Relational.hits(buyers).collect(),
         rows => assert(rows.head.getLong(1) === 101L)),
-      ("powerIteration", () => VectorOps.powerIteration(gram).collect(),
-        rows => assert(rows.find(_.getLong(0) == 0L).get.getLong(1) === 1000000L)),
       ("labelPropRounds", () => VectorOps.labelPropRounds(lpAdj, lpTruth,
           Seq((1L, 0L), (4L, 1L)).toDF("vec_id", "lab")).collect(),
         rows => assert(metric(rows, "r2_correct") === 1L)),

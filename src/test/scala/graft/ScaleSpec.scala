@@ -590,10 +590,11 @@ class ScaleSpec extends AnyFunSuite {
       // coverage census
       "operators/TextOps.scala" -> 39,
       // +1 round 10: q220's NumCells-row centroid broadcast
-      // (-1: q244's L∞ norms are census literals of its generation loop)
+      // +1 round 10: q244's per-iteration 1-row L∞-norm broadcast
+      // (one source site inside the fold)
       // +1 round 10: q248's per-round 1-row newest-center broadcast
       // (one source site inside the fold)
-      "operators/VectorOps.scala" -> 7)
+      "operators/VectorOps.scala" -> 8)
     assert(countSites("crossJoin") === crossJoinBudget,
       s"crossJoin sites drifted (found ${countSites("crossJoin")}): " +
         "argue the new site is broadcast metadata-sized, then register it")
@@ -601,9 +602,6 @@ class ScaleSpec extends AnyFunSuite {
     // reads — never in an operator's data path
     val collectBudget = Map(
       "Verify.scala" -> 2,
-      // q244's final iterate: one row per gram dimension (≤ GramDims
-      // = 16), read once after the last iteration's census
-      "operators/VectorOps.scala" -> 1,
       // q287's |types|-row sequential-test state readout inside the
       // foreachBatch sink — bounded by the event-type axis
       // +1 round 13: sprtStream's restart-restore of the SAME
@@ -638,7 +636,7 @@ class ScaleSpec extends AnyFunSuite {
     val checkpointBudget = Map(
       "operators/Relational.scala" -> 10,
       "operators/TextOps.scala" -> 16,
-      "operators/VectorOps.scala" -> 8)
+      "operators/VectorOps.scala" -> 10)
     assert(countSites("localCheckpoint\\(true") === checkpointBudget,
       s"eager checkpoint sites drifted (found " +
         s"${countSites("localCheckpoint\\(true")}): persist round " +
