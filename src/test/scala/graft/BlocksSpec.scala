@@ -201,11 +201,14 @@ class BlocksSpec extends AnyFunSuite {
       Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 1L), (5L, 1L), (6L, 7L))
         .toDF("vec_id", "tl"))
   }
-  // a hand-solved 5-node graph; the table replays it with every id
+  // a hand-solved 5-node graph; `boruvka` replays it with every id
   // past the 21-bit narrow-pack ceiling
   private lazy val mstGraph = Seq(
     (1L, 2L, 5L), (2L, 3L, 1L), (3L, 4L, 2L),
     (1L, 3L, 4L), (4L, 5L, 10L), (1L, 5L, 3L)).toDF("pa", "pb", "w")
+
+  /** A named operator run and the check of its hand-traced figure. */
+  private type Case = (String, () => Array[Row], Array[Row] => Unit)
 
   private def metric(rows: Array[Row], name: String): Long =
     rows.find(_.getString(0) == name).get.getLong(1)
@@ -213,9 +216,8 @@ class BlocksSpec extends AnyFunSuite {
   /** Iterative operators on crafted inputs, each with one figure of its
     * hand-traced result, and the queries whose caches are filled
     * without a generation loop, at sf0.001 inside a query scope. */
-  private lazy val iterative: Seq[(String, () => Array[Row], Array[Row] => Unit)] = {
+  private lazy val iterative: Seq[Case] = {
     val off = (1L << 41) + 5L
-    val wideMst = (1L << 33) + 12345L
     val sf = "/root/testdata/sf0.001"
     def query(q: (SparkSession, String) => DataFrame): () => Array[Row] =
       () => Blocks.scope(spark)(q(spark, sf).collect())._1
@@ -232,8 +234,6 @@ class BlocksSpec extends AnyFunSuite {
           compass.select(($"vec_id" + off).as("vec_id"), $"embedding")).collect(),
         rows => assert(rows.map(_.getLong(1)).toSeq ===
           Seq(0L, 2L, 1L, 3L).map(_ + off))),
-      ("kTrussTrace", () => Relational.kTrussTrace(k4, 2L).collect(),
-        rows => assert(metric(rows, "r3_edges") === 6L)),
       ("alsStep", () => Relational.alsStep(ratings).collect(),
         rows => assert(metric(rows, "n_ratings") === 4L)),
       ("hits", () => Relational.hits(buyers).collect(),
@@ -244,7 +244,13 @@ class BlocksSpec extends AnyFunSuite {
       ("q221DensityClusters", query(VectorOps.q221DensityClusters),
         rows => assert(rows.nonEmpty)),
       ("q243LabelProp", query(VectorOps.q243LabelProp),
-        rows => assert(rows.nonEmpty)),
+        rows => assert(rows.nonEmpty)))
+  }
+
+  /** boruvkaTrace on the 5-node graph and its wide-id replay. */
+  private lazy val boruvka: Seq[Case] = {
+    val wideMst = (1L << 33) + 12345L
+    Seq(
       ("boruvkaTrace", () => Relational.boruvkaTrace(mstGraph).collect(),
         rows => assert(metric(rows, "r3_mst_weight") === 10L)),
       ("boruvkaTrace, wide ids", () => Relational.boruvkaTrace(mstGraph
@@ -253,17 +259,40 @@ class BlocksSpec extends AnyFunSuite {
         rows => assert(metric(rows, "r3_mst_weight") === 10L)))
   }
 
+  private lazy val kTruss: Seq[Case] = Seq(
+    ("kTrussTrace", () => Relational.kTrussTrace(k4, 2L).collect(),
+      rows => assert(metric(rows, "r3_edges") === 6L)))
+
+  /** Runs each case, checks its figure, and returns one line per case
+    * that read an unfilled cache through two scans or left a block. */
+  private def fillProblems(cases: Seq[Case]): Seq[String] =
+    cases.flatMap { case (name, run, check) =>
+      val ((out, left), rereads) = unfilledRereads(leftBy(run()))
+      check(out)
+      val reread = if (rereads.isEmpty) Nil else Seq(
+        s"$name reads ${rereads.size} unfilled caches through more " +
+          s"than one scan: ${rereads.mkString(", ")}")
+      reread ++ (if (left.isEmpty) Nil else Seq(s"$name left rdds $left behind"))
+    }
+
   test("iterative operators fill each cache before two scans read it, " +
       "free every generation, and compute no cached partition twice") {
     noReadds {
-      val problems = iterative.flatMap { case (name, run, check) =>
-        val ((out, left), rereads) = unfilledRereads(leftBy(run()))
-        check(out)
-        val reread = if (rereads.isEmpty) Nil else Seq(
-          s"$name reads ${rereads.size} unfilled caches through more " +
-            s"than one scan: ${rereads.mkString(", ")}")
-        reread ++ (if (left.isEmpty) Nil else Seq(s"$name left rdds $left behind"))
-      }
+      val problems = fillProblems(iterative)
+      assert(problems.isEmpty, problems.mkString("\n"))
+    }
+  }
+
+  test("boruvkaTrace leaves no block behind and computes no cached partition twice") {
+    noReadds {
+      val problems = fillProblems(boruvka)
+      assert(problems.isEmpty, problems.mkString("\n"))
+    }
+  }
+
+  test("kTrussTrace leaves no block behind and computes no cached partition twice") {
+    noReadds {
+      val problems = fillProblems(kTruss)
       assert(problems.isEmpty, problems.mkString("\n"))
     }
   }
