@@ -16,8 +16,9 @@ import graft.util.Blocks
   *    reports the per-query MEDIAN — one-shot cold numbers on a loaded
   *    host have shown ±2x noise (the r5 bench inflated uniformly ~1.9x
   *    vs standalone re-runs) and misdirect optimization. With k>1 the
-  *    first rep absorbs any stage-materialization cost, so medians
-  *    reflect steady-state; the JSON contract is unchanged.
+  *    first rep absorbs any stage-materialization cost (the staged
+  *    parquet outlives a rep, its caches and checkpoints do not), so
+  *    medians reflect steady-state; the JSON contract is unchanged.
   */
 object Bench {
   /** Build the short-id stdout contract line, folding the FASTEST
@@ -73,23 +74,18 @@ object Bench {
     val spark = Harness.session(Harness.cpus)
 
     // reproducible totals: point this run at a RUN-PRIVATE stage store
-    // so it is reproducibly COLD (a stage surviving from a prior
-    // Verify/Bench would silently shave ~13s off the metric and make
-    // cross-run comparisons cold-vs-warm). Private rather than clearing
-    // the shared store: a concurrent Verify/Bench on the same SF keeps
-    // its staged parquet — no cross-process delete race. Within the run
-    // the pipeline still stages once and reuses — that reuse is what's
-    // being measured. Set SPARK_GRAFT_KEEP_STAGE=1 to bench warm against
-    // the shared store instead.
+    // (a Scratch directory, deleted at JVM exit) so it is reproducibly
+    // COLD (a stage surviving from a prior Verify/Bench would silently
+    // shave ~13s off the metric and make cross-run comparisons
+    // cold-vs-warm). Private rather than clearing the shared store: a
+    // concurrent Verify/Bench on the same SF keeps its staged parquet —
+    // no cross-process delete race. Within the run the pipeline still
+    // stages once and reuses — that reuse is what's being measured. Set
+    // SPARK_GRAFT_KEEP_STAGE=1 to bench warm against the shared store
+    // instead.
     val keepStage = sys.env.get("SPARK_GRAFT_KEEP_STAGE").contains("1")
-    val privateStage: Option[java.nio.file.Path] =
-      if (keepStage) None
-      else {
-        val p = java.nio.file.Paths.get(
-          s"/tmp/graft_stage_bench_${ProcessHandle.current().pid()}")
-        sys.props("graft.stage.dir") = p.toString
-        Some(p)
-      }
+    if (!keepStage)
+      sys.props("graft.stage.dir") = graft.util.Scratch.dir("stage_bench", sfDir)
 
     // warm-up: JVM, codegen, parquet footer reads — one count per table
     // family so the alphabetically-first query (q100 since round 5) is
@@ -120,10 +116,11 @@ object Bench {
     val results = selected.map { case (name, fn) =>
       val gc0 = gcMs()
       rec.clear()
-      // blocks are released ONCE per query, after the LAST rep's clock
-      // stops, so no query inherits another's storage-pool pressure
-      val (times, released) = Blocks.scope(spark) {
-        (1 to reps).map { _ =>
+      // blocks are released after EVERY rep, outside its clock, so no
+      // rep finds an earlier rep's caches and no query inherits
+      // another's storage-pool pressure; `released` sums over the reps
+      val runs = (1 to reps).map { _ =>
+        Blocks.scope(spark) {
           val t0 = System.nanoTime()
           val ok =
             try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -134,6 +131,8 @@ object Bench {
           if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         }
       }
+      val times = runs.map(_._1)
+      val released = runs.map(_._2).sum
       Harness.drain(spark.sparkContext)
       val hwMem = rec.blockHw.values.map(_._1).sum / 1e6
       val hwDisk = rec.blockHw.values.map(_._2).sum / 1e6
@@ -220,12 +219,6 @@ object Bench {
     try spark.stop()
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] spark.stop failed: ${e.getMessage}")
-    }
-    privateStage.foreach { p =>
-      try graft.operators.Staged.wipeStore(p)
-      catch { case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[bench] could not remove private stage $p: ${e.getMessage}")
-      }
     }
     println(jsonShort)
     System.out.flush(); System.err.flush()

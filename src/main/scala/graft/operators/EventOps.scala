@@ -867,25 +867,48 @@ object EventOps {
     val edgesDf = prEdges(s, d)
     val edges = Staged.orCompute(s, d, s"pr$PrIters",
       "pr_edges", Staged.planHash(edgesDf))(edgesDf)
-    val outW = edges.groupBy($"src").agg(sum($"n").as("wout"))
-    val nodes = edges.select($"src".as("node"))
+    pagerank(edges, prNodes(edges), PrIters, None)
+      .select($"node", $"r".as("rank_ppb")).orderBy($"rank_ppb".desc, $"node")
+  }
+
+  /** Every endpoint of a (src, dst, n) edge relation. */
+  private def prNodes(edges: DataFrame): DataFrame =
+    edges.select($"src".as("node"))
       .union(edges.select($"dst".as("node"))).distinct()
+
+  /** PageRank's fixed power iteration on the integer ppb grid (q110,
+    * q254, q281): `iters` rounds, each sending ⌊r·n/wout⌋ along every
+    * (src, dst, n) edge, summing it by dst, and damping the sum by 0.85
+    * onto every node of `nodes`, plus the restart mass — spread evenly
+    * over the nodes (the 1-row node count is a broadcast), or, with a
+    * `seed`, all on that node. Starts from 10⁹ ppb restarted the same
+    * way; returns (node, r). */
+  private[graft] def pagerank(edges: DataFrame, nodes: DataFrame,
+      iters: Int, seed: Option[String]): DataFrame = {
+    val outW = edges.groupBy($"src").agg(sum($"n").as("wout"))
     val nn = nodes.agg(count(lit(1)).as("c"))
-    val r0 = nodes.crossJoin(broadcast(nn))
-      .select($"node", floor(lit(1000000000.0) / $"c").cast("long").as("r"))
-    val rFinal = (1 to PrIters).foldLeft(r0) { (rank, _) =>
+    // `mass` ppb restarted over `df`'s nodes, and the frame it reads
+    def restart(df: DataFrame, mass: Long): (DataFrame, Column) = seed match {
+      case None => (df.crossJoin(broadcast(nn)),
+        floor(lit(mass.toDouble) / $"c").cast("long"))
+      case Some(node) =>
+        (df, when($"node" === node, lit(mass)).otherwise(lit(0L)))
+    }
+    val (n0, t0) = restart(nodes, 1000000000L)
+    (1 to iters).foldLeft(n0.select($"node", t0.as("r"))) { (rank, _) =>
       val contribs = rank.join(edges, rank("node") === edges("src"))
         .join(outW, "src")
         .select($"dst",
-          floor(($"r" * $"n").cast("double") / $"wout").cast("long").as("contrib"))
+          floor(($"r" * $"n").cast("double") / $"wout").cast("long")
+            .as("contrib"))
         .groupBy($"dst").agg(sum($"contrib").as("s"))
-      nodes.join(contribs, nodes("node") === contribs("dst"), "left")
-        .crossJoin(broadcast(nn))
-        .select($"node",
-          (floor(lit(150000000.0) / $"c").cast("long") +
-            floor(coalesce($"s", lit(0L)) * 85.0 / 100.0).cast("long")).as("r"))
+      val (next, t) = restart(
+        nodes.join(contribs, nodes("node") === contribs("dst"), "left"),
+        150000000L)
+      next.select($"node",
+        (t + floor(coalesce($"s", lit(0L)) * 85.0 / 100.0).cast("long"))
+          .as("r"))
     }
-    rFinal.select($"node", $"r".as("rank_ppb")).orderBy($"rank_ppb".desc, $"node")
   }
 
   val q110PagerankSql: String = {
@@ -2467,29 +2490,10 @@ object EventOps {
   /** The seeded power iteration over a prepared (src, dst, n) edge
     * relation — split from [[q254PersonalizedPagerank]] for the
     * crafted-graph spec. */
-  private[graft] def pprRounds(edges: DataFrame): DataFrame = {
-    val outW = edges.groupBy($"src").agg(sum($"n").as("wout"))
-    val nodes = edges.select($"src".as("node"))
-      .union(edges.select($"dst".as("node"))).distinct()
-    val r0 = nodes.select($"node",
-      when($"node" === PprSeed, lit(1000000000L)).otherwise(lit(0L))
-        .as("r"))
-    val rFinal = (1 to PrIters).foldLeft(r0) { (rank, _) =>
-      val contribs = rank.join(edges, rank("node") === edges("src"))
-        .join(outW, "src")
-        .select($"dst",
-          floor(($"r" * $"n").cast("double") / $"wout").cast("long")
-            .as("contrib"))
-        .groupBy($"dst").agg(sum($"contrib").as("s"))
-      nodes.join(contribs, nodes("node") === contribs("dst"), "left")
-        .select($"node",
-          (when($"node" === PprSeed, lit(150000000L)).otherwise(lit(0L)) +
-            floor(coalesce($"s", lit(0L)) * 85.0 / 100.0).cast("long"))
-            .as("r"))
-    }
-    rFinal.select($"node", $"r".as("rank_ppb"))
+  private[graft] def pprRounds(edges: DataFrame): DataFrame =
+    pagerank(edges, prNodes(edges), PrIters, Some(PprSeed))
+      .select($"node", $"r".as("rank_ppb"))
       .orderBy($"rank_ppb".desc, $"node")
-  }
 
   val q254PersonalizedPagerankSql: String = {
     val iters = (1 to PrIters).map { i =>

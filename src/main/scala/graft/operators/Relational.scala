@@ -3446,7 +3446,7 @@ object Relational {
     * per round + a component-grain count with a running forest
     * weight. The weighted edge relation is staged once per corpus;
     * at most ~two candidate checkpoint generations coexist (the
-    * previous one is freed the moment the relabel consumes it). */
+    * previous one is freed by the census that follows the relabel). */
   def q282Boruvka(s: SparkSession, d: String): DataFrame =
     boruvkaTrace(coEdgesWeightedStaged(s, d))
 
@@ -3461,217 +3461,198 @@ object Relational {
           "bound: w="), $"w", lit(" pa="), $"pa", lit(" pb="), $"pb")))
       .otherwise($"w")
     val sc = edges0.sparkSession.sparkContext
-    // edges: SERIALIZED always — one narrow relation read at most
-    // three times (bound scan, label axis, round-1 candidates), so the
-    // ser/deser CPU is noise, while the deserialized form at 100×
-    // (~120 M × ~150 B UnsafeRow objects) is dead weight crowding the
-    // storage pool through rounds 2–3 (measured: the deserialized-
-    // edges variant ran 547 s vs 315 s at 100×, everything else equal)
-    val edges = edges0.select($"pa", $"pb", guarded.as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    // ADAPTIVE argmin key width: both packs below induce the same
-    // total order on (w, pa, pb), so the choice is invisible in the
-    // output (the mirror always packs HUGEINT) — but the BIGINT key's
-    // min aggregate measured ~1.5× faster than the decimal one at
-    // sf0.1 reps-3. One 1-row bound scan of the (already persisting)
-    // edge relation picks the narrow key whenever every id fits the
-    // 21-bit split, the wide DECIMAL(38,0) key beyond — the same
-    // "narrowest type that provably fits" call AQE makes from runtime
-    // stats, decided once per trace, never per row
-    val stats = edges
-      .agg(max(greatest($"pa", $"pb")), count(lit(1))).head()
-    val wideIds = !stats.isNullAt(0) && stats.getLong(0) >= (1L << 21)
-    // ADAPTIVE checkpoint cache level (same philosophy as the key
-    // width: the cheapest representation that provably fits, decided
-    // once per trace from the same 1-row bound scan). Deserialized
-    // UnsafeRow caching stores the 2-column candidate checkpoint at
-    // ~136 B/row (object headers dominate the 24 B of data - Probe
-    // measurement: 16.3 GB/round at 120 M candidates, 51 GB high-water
-    // + 8.3 GB spill at 100x on a 64 GB heap), while serialized blocks
-    // are ~4x smaller but pay ser/deser CPU per consumer. Measured
-    // same-host reps-3 at the decision's two sides: 10x corpus
-    // (1.6 GB/round, fits) deserialized 29.9 s vs serialized 40.8 s;
-    // 100x corpus (does not fit) serialized 315.0 s vs deserialized
-    // 374-380 s. So: serialize exactly when ~two live candidate
-    // generations would crowd the storage pool.
-    // Storage-pool bound from the unified memory manager's own knobs
-    // (spark.memory.fraction × storageFraction of the usable heap —
-    // Spark reserves 300 MB off the top), NOT a bare maxMemory/4: in
-    // local[*] the driver JVM IS the executor so Runtime.maxMemory is
-    // the right heap to fraction, but on a cluster the same fractions
-    // apply to each executor's heap against its shard of the edges —
-    // this derivation keeps the constant honest on both. The 300 B/row
-    // estimate is ~two live deserialized candidate generations (old
-    // still referenced while new materializes — Probe measured
-    // ~136 B/row each); the ÷2 on the protected region leaves headroom
-    // for the other relations sharing the pool (edges, labels, MST).
-    val conf = sc.getConf
-    val usableHeap = Runtime.getRuntime.maxMemory() - (300L << 20)
-    val storagePool =
-      (usableHeap * conf.getDouble("spark.memory.fraction", 0.6) *
-        conf.getDouble("spark.memory.storageFraction", 0.5)).toLong
-    val ckptLevel =
-      if (!stats.isNullAt(1) && stats.getLong(1) * 300L > storagePool / 2)
-        StorageLevel.MEMORY_AND_DISK_SER
-      else StorageLevel.MEMORY_AND_DISK
-    val packK: org.apache.spark.sql.Column =
-      if (wideIds)
-        ($"w" * lit(1L << 36) + $"pa").cast("decimal(38,0)") *
-          lit(1L << 36) + $"pb"
-      else $"w" * lit(1L << 42) + $"pa" * lit(1L << 21) + $"pb"
-    val decodeK: Seq[org.apache.spark.sql.Column] =
-      if (wideIds) Seq(
-        expr(s"(k div ${1L << 36}) div ${1L << 36}").as("w"),
-        expr(s"(k div ${1L << 36}) % ${1L << 36}").as("pa"),
-        expr(s"CAST(k % ${1L << 36} AS BIGINT)").as("pb"))
-      else Seq(
-        expr(s"k div ${1L << 42}").as("w"),
-        expr(s"(k div ${1L << 21}) % ${1L << 21}").as("pa"),
-        expr(s"k % ${1L << 21}").as("pb"))
-    // packed (ca, cb) label pair — the second half of the TWO-column
-    // checkpoint payload (see the loop comment below). Same adaptive
-    // width rule as packK: labels are min node ids, so the maxId scan
-    // that picked the arm bounds them identically. Both decodes are
-    // integral div/mod (IntegralDivide returns BIGINT even on the
-    // decimal arm), so every decoded column is BIGINT in both arms.
-    val packCC: org.apache.spark.sql.Column =
-      if (wideIds) $"ca".cast("decimal(38,0)") * lit(1L << 36) + $"cb"
-      else $"ca" * lit(1L << 21) + $"cb"
-    val decodeCC: Seq[org.apache.spark.sql.Column] =
-      if (wideIds) Seq(
-        expr(s"cc div ${1L << 36}").as("ca"),
-        expr(s"CAST(cc % ${1L << 36} AS BIGINT)").as("cb"))
-      else Seq(
-        expr(s"cc div ${1L << 21}").as("ca"),
-        expr(s"cc % ${1L << 21}").as("cb"))
-    // comps: the CURRENT label set at COMPONENT grain — the only
-    // cross-round label state this loop keeps. Round 15 removed the
-    // vertex-grain (p → lbl) relation entirely: labels ride ON the
-    // candidate edges (the cc column of the packed checkpoint) and are
-    // advanced by joining the COMPONENT-grain contraction map of the
-    // round just finished — lbl_r(p) = cm_r(lbl_{r-1}(p)) by
-    // construction, so relabeling the carried ca/cb through cm is the
-    // same function composition without ever materializing it per
-    // vertex. Probe had pinned the per-round vertex-grain label joins
-    // as the dominant 40–64 s jobs at 100×; they no longer exist —
-    // round 1 needs NO join at all (labels start as identity, so
-    // ca = pa, cb = pb), and rounds 2+ join the shrinking
-    // component-grain map (post-round-1 component counts collapse ~10×
-    // per round, so these joins broadcast on any real cluster).
-    var comps = edges.select(explode(array($"pa", $"pb")).as("c"))
-      .distinct().localCheckpoint(true)
-    var mst: DataFrame = null
-    var mstWeight = 0L
     val census = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    census += (("r0_components", comps.count()))
-    var prevCand: DataFrame = null
-    var relab: DataFrame = null
-    for (r <- 1 to MstRounds) {
-      // localCheckpoint (eager), not persist, MEASURED: cand feeds two
-      // consumers (the pick aggregate and the next round's relabel)
-      // and the checkpointed-RDD read beat the lazy cache at sf0.1
-      // reps-3 — 8.5 s vs 10.3–12.4 s over three runs each. The
-      // payload is packed to TWO integer columns (k = the (w, pa, pb)
-      // argmin key, cc = the (ca, cb) label pair) — 24 B/row UnsafeRow
-      // — and consumers decode with codegen'd div/mod off the blocks.
-      // Rounds after the first relabel only the PREVIOUS round's
-      // surviving candidates, never the full edge list: labels only
-      // coarsen, so an edge once intra-component can never cross
-      // components again — candidate sets shrink monotonically (the
-      // standard contraction prune).
-      val cand = (if (r == 1)
-          edges.select($"pa", $"pb", $"w",
-            $"pa".as("ca"), $"pb".as("cb"))
-        else
-          prevCand.select(decodeK ++ decodeCC: _*)
-            .join(relab.select($"c".as("ca"), $"m".as("nca")), Seq("ca"))
-            .join(relab.select($"c".as("cb"), $"m".as("ncb")), Seq("cb"))
-            .select($"pa", $"pb", $"w",
-              $"nca".as("ca"), $"ncb".as("cb")))
-        .filter($"ca" =!= $"cb")
-        .select(packK.as("k"), packCC.as("cc"))
-        .localCheckpoint(true, ckptLevel)
-      // the previous generation's checkpoint blocks were consumed by
-      // the relabel that just materialized — free them NOW, not at
-      // function exit, so at most ~two candidate generations ever
-      // coexist in the storage pool (the high-water Probe measured)
-      Blocks.release(prevCand, relab)
-      // the full edge relation is only read by the bound scan, the r0
-      // label axis and round 1's candidates — dead weight afterwards
-      if (r == 1) Blocks.release(edges)
-      prevCand = cand
-      // per-component argmin, carrying the winning edge's label pair
-      // through the aggregate as min(struct(k, cc)) — k is unique per
-      // edge and k ↦ cc is functional, so the struct min is exactly
-      // the k min and the old edge-grain "chosen" join (candidates ⋈
-      // picked edges, re-fetching ca/cb for the contraction graph) is
-      // gone. distinct on (k, cc) ≡ distinct on the decoded triple,
-      // same functional dependency. newEdges is checkpointed with the
-      // labels attached: it feeds the census aggregate, the
-      // contraction graph, and the forest anti-join axis.
-      val picks = cand
-        .select(explode(array(decodeCC: _*)).as("c"),
-          struct($"k", $"cc").as("s"))
-        .groupBy($"c").agg(min($"s").as("m"))
-        .select($"m"("k").as("k"), $"m"("cc").as("cc"))
-        .distinct()
-        .select(decodeK ++ decodeCC: _*)
-      // localCheckpoint, not persist, at every cross-round relation
-      // (the q225 BFS discipline): lineage is cut at the round
-      // boundary so plan analysis never compounds across rounds
-      val newEdges = (if (mst == null) picks
-        else picks.join(mst, Seq("pa", "pb"), "left_anti"))
-        .localCheckpoint(true)
-      val prevMst = mst
-      mst = (if (mst == null) newEdges.select($"pa", $"pb")
-        else mst.unionByName(newEdges.select($"pa", $"pb")))
-        .localCheckpoint(true)
-      // census in ONE tiny aggregate over the (already checkpointed)
-      // new edges + a running weight — round-14 verdict: the old shape
-      // ran three separate jobs per round, one of them a sum over the
-      // GROWING forest (quadratic-ish re-summing) and one a
-      // VERTEX-grain distinct count; the forest weight is the running
-      // sum of new-edge weights because the anti-join keeps the rounds
-      // (pa, pb)-disjoint, and the component count moves to comps
-      // (component grain) below.
-      val ne = newEdges
-        .agg(count(lit(1)), coalesce(sum($"w"), lit(0L))).head()
-      mstWeight += ne.getLong(1)
-      census += ((s"r${r}_new_edges", ne.getLong(0)))
-      census += ((s"r${r}_mst_weight", mstWeight))
-      // contraction graph at component grain: the chosen edges' label
-      // pairs (one row per chosen edge, symmetrized). It and every hop
-      // map are eager checkpoints, not lazy persists: each hop reads cg
-      // and the previous map twice (directly and inside msgs), and two
-      // AQE stage jobs reading an unfilled cache both compute the same
-      // partitions
-      val cg = newEdges.select($"ca".as("x"), $"cb".as("y"))
-        .unionByName(newEdges.select($"cb".as("x"), $"ca".as("y")))
-        .localCheckpoint(true)
-      val cms = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-      var cm = comps.select($"c", $"c".as("m"))
-      for (_ <- 1 to MstHops) {
-        val msgs = cg.join(cm.select($"c".as("x"), $"m"), Seq("x"))
-          .groupBy($"y").agg(min($"m").as("nm"))
-        cm = cm.join(msgs.withColumnRenamed("y", "c"), Seq("c"), "left")
-          .select($"c", least($"m", coalesce($"nm", $"m")).as("m"))
-          .localCheckpoint(true)
-        cms += cm
+    Blocks.generations { gens =>
+      // edges: SERIALIZED always — one narrow relation read at most
+      // three times (bound scan, label axis, round-1 candidates), so the
+      // ser/deser CPU is noise, while the deserialized form at 100×
+      // (~120 M × ~150 B UnsafeRow objects) is dead weight crowding the
+      // storage pool through rounds 2–3 (measured: the deserialized-
+      // edges variant ran 547 s vs 315 s at 100×, everything else equal)
+      val edges = gens.keep(edges0.select($"pa", $"pb", guarded.as("w")),
+        StorageLevel.MEMORY_AND_DISK_SER)
+      // ADAPTIVE argmin key width: both packs below induce the same
+      // total order on (w, pa, pb), so the choice is invisible in the
+      // output (the mirror always packs HUGEINT) — but the BIGINT key's
+      // min aggregate measured ~1.5× faster than the decimal one at
+      // sf0.1 reps-3. One 1-row bound scan, the action that fills the
+      // edge relation, picks the narrow key whenever every id fits the
+      // 21-bit split, the wide DECIMAL(38,0) key beyond — the same
+      // "narrowest type that provably fits" call AQE makes from runtime
+      // stats, decided once per trace, never per row
+      val stats = gens.fill("boruvkaTrace edge bounds")(edges
+        .agg(max(greatest($"pa", $"pb")), count(lit(1))).head())
+      val wideIds = !stats.isNullAt(0) && stats.getLong(0) >= (1L << 21)
+      // ADAPTIVE checkpoint cache level (same philosophy as the key
+      // width: the cheapest representation that provably fits, decided
+      // once per trace from the same 1-row bound scan). Deserialized
+      // UnsafeRow caching stores the 2-column candidate checkpoint at
+      // ~136 B/row (object headers dominate the 24 B of data - Probe
+      // measurement: 16.3 GB/round at 120 M candidates, 51 GB high-water
+      // + 8.3 GB spill at 100x on a 64 GB heap), while serialized blocks
+      // are ~4x smaller but pay ser/deser CPU per consumer. Measured
+      // same-host reps-3 at the decision's two sides: 10x corpus
+      // (1.6 GB/round, fits) deserialized 29.9 s vs serialized 40.8 s;
+      // 100x corpus (does not fit) serialized 315.0 s vs deserialized
+      // 374-380 s. So: serialize exactly when ~two live candidate
+      // generations would crowd the storage pool.
+      // Storage-pool bound from the unified memory manager's own knobs
+      // (spark.memory.fraction × storageFraction of the usable heap —
+      // Spark reserves 300 MB off the top), NOT a bare maxMemory/4: in
+      // local[*] the driver JVM IS the executor so Runtime.maxMemory is
+      // the right heap to fraction, but on a cluster the same fractions
+      // apply to each executor's heap against its shard of the edges —
+      // this derivation keeps the constant honest on both. The 300 B/row
+      // estimate is ~two live deserialized candidate generations (old
+      // still referenced while new materializes — Probe measured
+      // ~136 B/row each); the ÷2 on the protected region leaves headroom
+      // for the other relations sharing the pool (edges, labels, MST).
+      val conf = sc.getConf
+      val usableHeap = Runtime.getRuntime.maxMemory() - (300L << 20)
+      val storagePool =
+        (usableHeap * conf.getDouble("spark.memory.fraction", 0.6) *
+          conf.getDouble("spark.memory.storageFraction", 0.5)).toLong
+      val ckptLevel =
+        if (!stats.isNullAt(1) && stats.getLong(1) * 300L > storagePool / 2)
+          StorageLevel.MEMORY_AND_DISK_SER
+        else StorageLevel.MEMORY_AND_DISK
+      val packK: org.apache.spark.sql.Column =
+        if (wideIds)
+          ($"w" * lit(1L << 36) + $"pa").cast("decimal(38,0)") *
+            lit(1L << 36) + $"pb"
+        else $"w" * lit(1L << 42) + $"pa" * lit(1L << 21) + $"pb"
+      val decodeK: Seq[org.apache.spark.sql.Column] =
+        if (wideIds) Seq(
+          expr(s"(k div ${1L << 36}) div ${1L << 36}").as("w"),
+          expr(s"(k div ${1L << 36}) % ${1L << 36}").as("pa"),
+          expr(s"CAST(k % ${1L << 36} AS BIGINT)").as("pb"))
+        else Seq(
+          expr(s"k div ${1L << 42}").as("w"),
+          expr(s"(k div ${1L << 21}) % ${1L << 21}").as("pa"),
+          expr(s"k % ${1L << 21}").as("pb"))
+      // packed (ca, cb) label pair — the second half of the TWO-column
+      // checkpoint payload (see the loop comment below). Same adaptive
+      // width rule as packK: labels are min node ids, so the maxId scan
+      // that picked the arm bounds them identically. Both decodes are
+      // integral div/mod (IntegralDivide returns BIGINT even on the
+      // decimal arm), so every decoded column is BIGINT in both arms.
+      val packCC: org.apache.spark.sql.Column =
+        if (wideIds) $"ca".cast("decimal(38,0)") * lit(1L << 36) + $"cb"
+        else $"ca" * lit(1L << 21) + $"cb"
+      val decodeCC: Seq[org.apache.spark.sql.Column] =
+        if (wideIds) Seq(
+          expr(s"cc div ${1L << 36}").as("ca"),
+          expr(s"CAST(cc % ${1L << 36} AS BIGINT)").as("cb"))
+        else Seq(
+          expr(s"cc div ${1L << 21}").as("ca"),
+          expr(s"cc % ${1L << 21}").as("cb"))
+      // comps: the CURRENT label set at COMPONENT grain — the only
+      // cross-round label state this loop keeps. Round 15 removed the
+      // vertex-grain (p → lbl) relation entirely: labels ride ON the
+      // candidate edges (the cc column of the packed checkpoint) and are
+      // advanced by joining the COMPONENT-grain contraction map of the
+      // round just finished — lbl_r(p) = cm_r(lbl_{r-1}(p)) by
+      // construction, so relabeling the carried ca/cb through cm is the
+      // same function composition without ever materializing it per
+      // vertex. Probe had pinned the per-round vertex-grain label joins
+      // as the dominant 40–64 s jobs at 100×; they no longer exist —
+      // round 1 needs NO join at all (labels start as identity, so
+      // ca = pa, cb = pb), and rounds 2+ join the shrinking
+      // component-grain map (post-round-1 component counts collapse ~10×
+      // per round, so these joins broadcast on any real cluster).
+      var comps = gens.checkpoint(
+        edges.select(explode(array($"pa", $"pb")).as("c")).distinct())
+      var mst: DataFrame = null
+      var mstWeight = 0L
+      census += (("r0_components", comps.count()))
+      var cand: DataFrame = null
+      var relab: DataFrame = null
+      for (r <- 1 to MstRounds) {
+        // localCheckpoint (eager), not persist, MEASURED: cand feeds two
+        // consumers (the pick aggregate and the next round's relabel)
+        // and the checkpointed-RDD read beat the lazy cache at sf0.1
+        // reps-3 — 8.5 s vs 10.3–12.4 s over three runs each. The
+        // payload is packed to TWO integer columns (k = the (w, pa, pb)
+        // argmin key, cc = the (ca, cb) label pair) — 24 B/row UnsafeRow
+        // — and consumers decode with codegen'd div/mod off the blocks.
+        // Rounds after the first relabel only the PREVIOUS round's
+        // surviving candidates, never the full edge list: labels only
+        // coarsen, so an edge once intra-component can never cross
+        // components again — candidate sets shrink monotonically (the
+        // standard contraction prune).
+        cand = gens.checkpoint((if (r == 1)
+            edges.select($"pa", $"pb", $"w",
+              $"pa".as("ca"), $"pb".as("cb"))
+          else
+            cand.select(decodeK ++ decodeCC: _*)
+              .join(relab.select($"c".as("ca"), $"m".as("nca")), Seq("ca"))
+              .join(relab.select($"c".as("cb"), $"m".as("ncb")), Seq("cb"))
+              .select($"pa", $"pb", $"w",
+                $"nca".as("ca"), $"ncb".as("cb")))
+          .filter($"ca" =!= $"cb")
+          .select(packK.as("k"), packCC.as("cc")), ckptLevel)
+        // per-component argmin, carrying the winning edge's label pair
+        // through the aggregate as min(struct(k, cc)) — k is unique per
+        // edge and k ↦ cc is functional, so the struct min is exactly
+        // the k min and the old edge-grain "chosen" join (candidates ⋈
+        // picked edges, re-fetching ca/cb for the contraction graph) is
+        // gone. distinct on (k, cc) ≡ distinct on the decoded triple,
+        // same functional dependency. newEdges is checkpointed with the
+        // labels attached: it feeds the census aggregate, the
+        // contraction graph, and the forest anti-join axis.
+        val picks = cand
+          .select(explode(array(decodeCC: _*)).as("c"),
+            struct($"k", $"cc").as("s"))
+          .groupBy($"c").agg(min($"s").as("m"))
+          .select($"m"("k").as("k"), $"m"("cc").as("cc"))
+          .distinct()
+          .select(decodeK ++ decodeCC: _*)
+        // a checkpoint, not a persist, at every cross-round relation
+        // (the q225 BFS discipline): lineage is cut at the round
+        // boundary so plan analysis never compounds across rounds
+        val newEdges = gens.checkpoint(if (mst == null) picks
+          else picks.join(mst, Seq("pa", "pb"), "left_anti"))
+        mst = gens.checkpoint(if (mst == null) newEdges.select($"pa", $"pb")
+          else mst.unionByName(newEdges.select($"pa", $"pb")))
+        // census in ONE tiny aggregate over the (already checkpointed)
+        // new edges + a running weight — round-14 verdict: the old shape
+        // ran three separate jobs per round, one of them a sum over the
+        // GROWING forest (quadratic-ish re-summing) and one a
+        // VERTEX-grain distinct count; the forest weight is the running
+        // sum of new-edge weights because the anti-join keeps the rounds
+        // (pa, pb)-disjoint, and the component count moves to comps
+        // (component grain) below. It ends the round's generation: the
+        // previous one (its candidates, forest, round-local maps) was
+        // consumed by the relabel and the anti-join that just ran, so at
+        // most two candidate generations ever coexist in the storage pool
+        // (the high-water Probe measured); round 1 frees the edge list
+        val ne = gens.fill(s"boruvkaTrace round $r")(newEdges
+          .agg(count(lit(1)), coalesce(sum($"w"), lit(0L))).head())
+        mstWeight += ne.getLong(1)
+        census += ((s"r${r}_new_edges", ne.getLong(0)))
+        census += ((s"r${r}_mst_weight", mstWeight))
+        // contraction graph at component grain: the chosen edges' label
+        // pairs (one row per chosen edge, symmetrized). It and every hop
+        // map are eager checkpoints, not lazy persists: each hop reads cg
+        // and the previous map twice (directly and inside msgs), and two
+        // AQE stage jobs reading an unfilled cache both compute the same
+        // partitions
+        val cg = gens.checkpoint(newEdges.select($"ca".as("x"), $"cb".as("y"))
+          .unionByName(newEdges.select($"cb".as("x"), $"ca".as("y"))))
+        var cm = comps.select($"c", $"c".as("m"))
+        for (_ <- 1 to MstHops) {
+          val msgs = cg.join(cm.select($"c".as("x"), $"m"), Seq("x"))
+            .groupBy($"y").agg(min($"m").as("nm"))
+          cm = gens.checkpoint(
+            cm.join(msgs.withColumnRenamed("y", "c"), Seq("c"), "left")
+              .select($"c", least($"m", coalesce($"nm", $"m")).as("m")))
+        }
+        comps = gens.checkpoint(cm.select($"m".as("c")).distinct())
+        census += ((s"r${r}_components", comps.count()))
+        // the contraction map survives into the NEXT round's relabel
+        relab = cm
       }
-      val prevComps = comps
-      comps = cm.select($"m".as("c")).distinct().localCheckpoint(true)
-      census += ((s"r${r}_components", comps.count()))
-      // the contraction map survives into the NEXT round's relabel
-      // (released there, right after the new candidates materialize);
-      // everything else from this round, and the superseded forest
-      // and component set, is dead
-      relab = cm
-      Blocks.release(Seq(prevComps, prevMst, newEdges, cg) ++ cms.init: _*)
     }
-    // the census is collected EAGERLY per round, so nothing reads the
-    // last generation after the loop — free it before returning, so a
-    // 287-query session does not accumulate dead round relations
-    Blocks.release(prevCand, relab, mst, comps)
     censusFrame(edges0.sparkSession, census.toSeq)
   }
 

@@ -87,18 +87,6 @@ object Staged {
     * must be spliced in explicitly. */
   def combine(tokens: String*): String = md5hex(tokens.mkString("|"))
 
-  /** Remove an entire RUN-PRIVATE stage store (Bench cold runs point
-    * `graft.stage.dir` at a pid-suffixed dir and wipe it on exit). Only
-    * ever called on a store this process created for itself — the
-    * shared store is never bulk-deleted (a concurrent Verify/Bench may
-    * be mid-read there; its staleness is handled by the age-gated
-    * per-stage reaper in [[orCompute]]). */
-  def wipeStore(storeRoot: Path): Unit = synchronized {
-    require(storeRoot.getFileName.toString.startsWith("graft_stage_"),
-      s"refusing to wipe non-stage dir $storeRoot")
-    deleteRecursively(storeRoot)
-  }
-
   private def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._

@@ -547,27 +547,26 @@ object TextOps {
   private[graft] def ClusterLoopTag =
     s"cc-minlabel.rounds$ClusterMaxRounds.seed1hop.chgcol"
 
-  private[graft] def dedupClusters(edges0: DataFrame): DataFrame = {
-    // localCheckpoint, not cache: the caller may hand in a DEEP edge
-    // derivation (q221's ε-pairing subtree); a cache would re-analyze
-    // that whole logical tree in every round's plan, a per-round
-    // optimizer tax that dwarfs the actual joins on small core graphs
-    val edges = edges0.select($"d1".as("a"), $"d2".as("b"))
-      .unionByName(edges0.select($"d2".as("a"), $"d1".as("b")))
-      .distinct()
-      .localCheckpoint(true)
-    // seed labels with the 1-hop minimum (least of self and all direct
-    // neighbors) instead of self: cliques — the common near-dup cluster
-    // shape — converge immediately, saving a full propagation round
-    var labels = edges
-      .groupBy($"a".as("id"))
-      .agg(min($"b").as("nmin"))
-      .select($"id", least($"id", $"nmin").as("label"))
-    var converged = false
-    var rounds = 0
-    val MaxRounds = ClusterMaxRounds
-    var prevCached: DataFrame = null
-    try {
+  private[graft] def dedupClusters(edges0: DataFrame): DataFrame =
+    Blocks.generations { gens =>
+      // a checkpoint, not a cache: the caller may hand in a DEEP edge
+      // derivation (q221's ε-pairing subtree); a cache would re-analyze
+      // that whole logical tree in every round's plan, a per-round
+      // optimizer tax that dwarfs the actual joins on small core graphs
+      val edges = gens.pin(gens.checkpoint(
+        edges0.select($"d1".as("a"), $"d2".as("b"))
+          .unionByName(edges0.select($"d2".as("a"), $"d1".as("b")))
+          .distinct()))
+      // seed labels with the 1-hop minimum (least of self and all direct
+      // neighbors) instead of self: cliques — the common near-dup cluster
+      // shape — converge immediately, saving a full propagation round
+      var labels = edges
+        .groupBy($"a".as("id"))
+        .agg(min($"b").as("nmin"))
+        .select($"id", least($"id", $"nmin").as("label"))
+      var converged = false
+      var rounds = 0
+      val MaxRounds = ClusterMaxRounds
       while (!converged && rounds < MaxRounds) {
         val neighborMin = edges
           .join(labels, $"b" === $"id")
@@ -575,24 +574,19 @@ object TextOps {
           .agg(min($"label").as("nmin"))
         // the convergence signal rides ALONG with the label recompute (a
         // label changes iff a neighbor's label undercuts it). Each
-        // round's relation is localCheckpoint'ed, not cache()d: a cache
-        // keeps the LOGICAL tree, which references the previous round
-        // twice — the plan (and its per-action explain string) doubles
-        // per round, and a deep-lineage caller (q221 feeds this the
-        // whole ε-pairing subtree) OOMs the driver building a
-        // multi-GB plan string before any data moves. The checkpoint
-        // materializes the same blocks AND truncates lineage, keeping
-        // every round's plan constant-size (the GraphX iteration rule).
-        val next = labels
+        // round's relation is a checkpoint, not a cache: a cache keeps
+        // the LOGICAL tree, which references the previous round twice —
+        // the plan (and its per-action explain string) doubles per
+        // round, and a deep-lineage caller (q221) OOMs the driver
+        // building a multi-GB plan string before any data moves (the
+        // GraphX iteration rule)
+        val next = gens.checkpoint(labels
           .join(neighborMin, $"id" === $"a", "left")
           .select($"id",
             least($"label", coalesce($"nmin", $"label")).as("label"),
-            (coalesce($"nmin", $"label") < $"label").cast("long").as("chg"))
-          .localCheckpoint(true)
-        val changed =
-          next.agg(coalesce(sum($"chg"), lit(0L))).head().getLong(0)
-        Blocks.release(prevCached)
-        prevCached = next
+            (coalesce($"nmin", $"label") < $"label").cast("long").as("chg")))
+        val changed = gens.fill(s"dedupClusters round ${rounds + 1}")(
+          next.agg(coalesce(sum($"chg"), lit(0L))).head().getLong(0))
         labels = next.select($"id", $"label")
         converged = changed == 0
         rounds += 1
@@ -606,19 +600,13 @@ object TextOps {
         throw new IllegalStateException(
           s"dedupClusters did not converge in $MaxRounds rounds - component diameter exceeds the cap")
       val sizes = labels.groupBy($"label").agg(count(lit(1)).as("cluster_size"))
+      // the result: materialized before the loop frees the rounds it
+      // reads, and owned by the caller
       labels.join(sizes, "label")
         .select($"id".as("doc_id"), $"label".as("canonical_id"), $"cluster_size")
         .orderBy($"doc_id")
-        // materialize before the finally releases the caches the plan
-        // depends on
         .localCheckpoint(true)
-    } finally {
-      // runs on the non-convergence throw and any mid-loop failure too —
-      // a surviving session (Verify's per-query catch, the test suites)
-      // must not accumulate dead cached blocks
-      Blocks.release(prevCached, edges)
     }
-  }
 
   /** Component CTE chain (shingles → … → comp/sizes), shared by the q50
     * oracle and the q52 selection oracle. Must follow `WITH RECURSIVE`. */
@@ -8071,26 +8059,9 @@ object TextOps {
     val edges = bg.select($"v".as("src"), $"w".as("dst"), $"n")
       .unionByName(bg.select($"w".as("src"), $"v".as("dst"), $"n"))
       .groupBy($"src", $"dst").agg(sum($"n").as("n"))
-    val outW = edges.groupBy($"src").agg(sum($"n").as("wout"))
-    val nodes = edges.select($"src".as("node")).distinct()
-    val nn = nodes.agg(count(lit(1)).as("c"))
-    val r0 = nodes.crossJoin(broadcast(nn))
-      .select($"node", floor(lit(1000000000.0) / $"c").cast("long").as("r"))
-    val rFinal = (1 to TrIters).foldLeft(r0) { (rank, _) =>
-      val contribs = rank.join(edges, rank("node") === edges("src"))
-        .join(outW, "src")
-        .select($"dst",
-          floor(($"r" * $"n").cast("double") / $"wout").cast("long")
-            .as("contrib"))
-        .groupBy($"dst").agg(sum($"contrib").as("s"))
-      nodes.join(contribs, nodes("node") === contribs("dst"), "left")
-        .crossJoin(broadcast(nn))
-        .select($"node",
-          (floor(lit(150000000.0) / $"c").cast("long") +
-            floor(coalesce($"s", lit(0L)) * 85.0 / 100.0).cast("long"))
-            .as("r"))
-    }
-    rFinal.select($"node".as("word"), $"r".as("rank_ppb"))
+    EventOps.pagerank(edges, edges.select($"src".as("node")).distinct(),
+        TrIters, None)
+      .select($"node".as("word"), $"r".as("rank_ppb"))
       .orderBy($"rank_ppb".desc, $"word").limit(TrTopK)
   }
 
@@ -8240,76 +8211,68 @@ object TextOps {
     * distributed-greedy shape; lazy-greedy/stochastic-greedy variants
     * cut constant factors, same round structure); the covered set
     * grows only by picked docs' shingles (≤ rounds × doc size — tiny)
-    * and is eagerly localCheckpoint'ed per round (the q282 lineage
-    * cut); the pick is a 1-row broadcast. */
+    * and is a checkpointed generation per round (the q282 lineage
+    * cut), its size the round's census; the pick is read back as one
+    * row and filters the incidence by its doc id. */
   def q284SetCover(s: SparkSession, d: String): DataFrame =
     setCoverTrace(Tables.documents(s, d))
 
   private[graft] def setCoverTrace(docs: DataFrame): DataFrame = {
-    val ds = shingleRows(docs).distinct().persist()
-    // round 15: the 1-row universe total is referenced by the r0 row
-    // AND broadcast into every round's covered_ppm — lazily it
-    // re-ran the countDistinct over the corpus-grain incidence once
-    // per reference (Probe: four ~2 s broadcast jobs). One eager
-    // checkpoint computes it once.
-    val uTotal = ds.agg(countDistinct($"sh").as("u")).localCheckpoint(true)
-    // ADAPTIVE argmax key width (the q282 Borůvka recipe, round-13
-    // pack audit): one 1-row bound scan of the (persisted, loop-
-    // needed-anyway) incidence picks the narrow 31/32-bit BIGINT pack
-    // whenever every doc id fits 32 bits — the common case, measurably
-    // cheaper — and the DECIMAL(38,0) pack (gain·2⁶³ + (2⁶³−1−doc),
-    // both fields structurally BIGINT-bounded, so no guard can trip)
-    // beyond. Both packs induce the same (gain desc, doc_id asc)
-    // order, so the choice is output-invisible; the DuckDB mirror
-    // packs HUGEINT always.
-    val maxDoc = ds.agg(max($"doc_id")).head()
-    val wideIds = !maxDoc.isNullAt(0) && maxDoc.getLong(0) >= (1L << 32)
-    val two63 = new java.math.BigDecimal("9223372036854775808")
-    var covered: DataFrame = null
-    var out = uTotal.select(lit("r0_universe").as("metric"),
-      $"u".as("value"))
-    for (r <- 1 to ScRounds) {
-      val uncovered = if (covered == null) ds
-        else ds.join(covered, Seq("sh"), "left_anti")
-      val guarded = when(
-        $"doc_id" >= lit(1L << 32) || $"gain" >= lit(1L << 31),
-        raise_error(concat(
-          lit("setCoverTrace: (gain, doc) exceeds the 31/32-bit pack " +
-            "bound: gain="), $"gain", lit(" doc="), $"doc_id")))
-        .otherwise($"gain")
-      val gains = uncovered.groupBy($"doc_id").agg(count(lit(1)).as("gain"))
-      val pick = (if (wideIds)
-        gains.agg(max($"gain".cast("decimal(38,0)") * lit(two63) +
-            (lit(Long.MaxValue) - $"doc_id")).as("pk"))
-          .select(
-            (lit(Long.MaxValue) -
-              expr("CAST(pk % 9223372036854775808 AS BIGINT)"))
-              .as("doc_id"),
-            expr("pk div 9223372036854775808").as("gain"))
-      else
-        gains.select($"doc_id", guarded.as("gain"))
-          .agg(max($"gain" * lit(1L << 32) +
-            (lit((1L << 32) - 1) - $"doc_id")).as("pk"))
-          .select((lit((1L << 32) - 1) - $"pk" % lit(1L << 32)).as("doc_id"),
-            expr(s"pk div ${1L << 32}").as("gain")))
-        .localCheckpoint(true)
-      val pickedSh = ds
-        .join(broadcast(pick.select($"doc_id")), Seq("doc_id"), "leftsemi")
-        .select($"sh")
-      covered = (if (covered == null) pickedSh
-        else covered.unionByName(pickedSh)).distinct()
-        .localCheckpoint(true)
-      out = out
-        .unionByName(pick.select(lit(s"r${r}_doc").as("metric"),
-          coalesce($"doc_id", lit(-1L)).as("value")))
-        .unionByName(pick.select(lit(s"r${r}_gain").as("metric"),
-          coalesce($"gain", lit(0L)).as("value")))
-        .unionByName(covered.agg(count(lit(1)).as("c"))
-          .crossJoin(broadcast(uTotal))
-          .select(lit(s"r${r}_covered_ppm").as("metric"),
-            expr("(c * 1000000) div u").as("value")))
+    val census = Blocks.generations { gens =>
+      val ds = gens.pin(shingleRows(docs).distinct())
+      // one scan fills the incidence and reads both bounds: the
+      // universe total and the max doc id. ADAPTIVE argmax key width
+      // (the q282 Borůvka recipe, round-13 pack audit): the narrow
+      // 31/32-bit BIGINT pack whenever every doc id fits 32 bits — the
+      // common case, measurably cheaper — and the DECIMAL(38,0) pack
+      // (gain·2⁶³ + (2⁶³−1−doc), both fields structurally
+      // BIGINT-bounded, so no guard can trip) beyond. Both packs induce
+      // the same (gain desc, doc_id asc) order, so the choice is
+      // output-invisible; the DuckDB mirror packs HUGEINT always.
+      val bounds = gens.fill("setCoverTrace incidence")(
+        ds.agg(countDistinct($"sh"), max($"doc_id")).head())
+      val u = bounds.getLong(0)
+      val wideIds = !bounds.isNullAt(1) && bounds.getLong(1) >= (1L << 32)
+      val two63 = new java.math.BigDecimal("9223372036854775808")
+      var covered: DataFrame = null
+      val rows = scala.collection.mutable.ArrayBuffer(("r0_universe", u))
+      for (r <- 1 to ScRounds) {
+        val uncovered = if (covered == null) ds
+          else ds.join(covered, Seq("sh"), "left_anti")
+        val guarded = when(
+          $"doc_id" >= lit(1L << 32) || $"gain" >= lit(1L << 31),
+          raise_error(concat(
+            lit("setCoverTrace: (gain, doc) exceeds the 31/32-bit pack " +
+              "bound: gain="), $"gain", lit(" doc="), $"doc_id")))
+          .otherwise($"gain")
+        val gains = uncovered.groupBy($"doc_id").agg(count(lit(1)).as("gain"))
+        val pick = (if (wideIds)
+          gains.agg(max($"gain".cast("decimal(38,0)") * lit(two63) +
+              (lit(Long.MaxValue) - $"doc_id")).as("pk"))
+            .select(
+              (lit(Long.MaxValue) -
+                expr("CAST(pk % 9223372036854775808 AS BIGINT)"))
+                .as("doc_id"),
+              expr("pk div 9223372036854775808").as("gain"))
+        else
+          gains.select($"doc_id", guarded.as("gain"))
+            .agg(max($"gain" * lit(1L << 32) +
+              (lit((1L << 32) - 1) - $"doc_id")).as("pk"))
+            .select((lit((1L << 32) - 1) - $"pk" % lit(1L << 32)).as("doc_id"),
+              expr(s"pk div ${1L << 32}").as("gain")))
+          .head()
+        // an exhausted universe picks NULL, which filters no shingle in
+        val pickedSh = ds.filter($"doc_id" === pick.get(0)).select($"sh")
+        covered = gens.checkpoint((if (covered == null) pickedSh
+          else covered.unionByName(pickedSh)).distinct())
+        val c = gens.fill(s"setCoverTrace round $r")(covered.count())
+        rows += ((s"r${r}_doc", if (pick.isNullAt(0)) -1L else pick.getLong(0)))
+        rows += ((s"r${r}_gain", if (pick.isNullAt(1)) 0L else pick.getLong(1)))
+        rows += ((s"r${r}_covered_ppm", c * 1000000L / u))
+      }
+      rows.toSeq
     }
-    out.orderBy($"metric")
+    Relational.censusFrame(docs.sparkSession, census)
   }
 
   val q284SetCoverSql: String = {

@@ -1367,15 +1367,20 @@ object VectorOps {
   def q213GramMatrix(s: SparkSession, d: String): DataFrame = {
     val cells = for { i <- 0 until GramDims; j <- i until GramDims }
       yield (i, j)
-    val cellCol = explode(array(cells.map { case (i, j) =>
-      struct(lit(i).as("i"), lit(j).as("j"),
-        floor(element_at($"embedding", i + 1).cast("double") *
-          element_at($"embedding", j + 1).cast("double") *
-          1000000.0 + 0.5).cast("long").as("xy"))
-    }: _*)).as("c")
+    // one cell index per generated row, its (i, j) looked up in two
+    // literal arrays: an explode of the 136 cell structs themselves
+    // generated a method too large for Janino, and the stage ran
+    // interpreted
+    def axis(f: ((Int, Int)) => Int) =
+      element_at(typedLit(cells.map(f).toArray), $"k" + 1)
+    def x(dim: String) =
+      element_at($"embedding", col(dim) + 1).cast("double")
     Tables.embeddings(s, d).filter($"embedding".isNotNull)
-      .select(cellCol)
-      .select($"c.i".as("i"), $"c.j".as("j"), $"c.xy".as("xy"))
+      .select($"embedding",
+        explode(typedLit(cells.indices.toArray)).as("k"))
+      .select($"embedding", axis(_._1).as("i"), axis(_._2).as("j"))
+      .select($"i", $"j",
+        floor(x("i") * x("j") * 1000000.0 + 0.5).cast("long").as("xy"))
       .groupBy($"i", $"j")
       .agg(count(lit(1)).as("n"), sum($"xy").as("gram_micro"))
       .orderBy($"i", $"j")
@@ -1965,39 +1970,44 @@ object VectorOps {
       .select($"i", $"j", $"gram_micro"))
 
   private[graft] def powerIteration(gram: DataFrame): DataFrame = {
-    // round 15: ONE eager checkpoint of the gram pins the corpus scan
-    // to exactly one evaluation — the gram is a ≤ GramDims² = 256-row
-    // relation, but its LINEAGE is the full corpus scan, and the old
-    // lazy chains re-embedded it ~8x (each iteration references the
-    // previous twice: the L∞ agg + the renorm body; Probe showed ~10
-    // broadcast jobs of 0.9–1.6 s all recomputing the scan). Each
-    // iterate's raw matvec (16 rows) is checkpointed the same way, so
-    // every branch downstream reads metadata-grain LogicalRDDs —
-    // matching the operator's own 100 TB claim (corpus touched once,
-    // iterations are metadata arithmetic).
-    val g = gram.localCheckpoint(true)
-    val gF = g.unionByName(g.filter($"i" =!= $"j")
-      .select($"j".as("i"), $"i".as("j"), $"gram_micro"))
-    val v0 = g.select($"i").distinct()
-      .select($"i", lit(1000000L).as("v"))
-    val (vF, mF) = (1 to PowerIters)
-      .foldLeft((v0, v0 /*placeholder*/)) { case ((v, _), _) =>
-        val raw = gF.join(v.select($"i".as("j"), $"v"), Seq("j"))
-          .select($"i",
-            floor($"gram_micro".cast("double") * $"v" / 1000000.0)
-              .cast("long").as("c"))
-          .groupBy($"i").agg(sum($"c").as("r"))
-          .localCheckpoint(true)
-        val m = raw.agg(max(abs($"r")).as("m"))
-        val vn = raw.crossJoin(broadcast(m))
-          .select($"i",
-            floor($"r".cast("double") * 1000000.0 /
-              greatest($"m", lit(1L))).cast("long").as("v"))
-        (vn, m)
+    val rows = Blocks.generations { gens =>
+      // round 15: ONE eager checkpoint of the gram pins the corpus scan
+      // to exactly one evaluation — the gram is a ≤ GramDims² = 256-row
+      // relation, but its LINEAGE is the full corpus scan (Probe showed
+      // ~10 broadcast jobs of 0.9–1.6 s all recomputing it when the
+      // iterations read it lazily; a persisted gram measured q244
+      // 3.40 → 4.66 s at sf0.1). Each iterate's raw matvec (16 rows) is
+      // a checkpointed generation whose L∞ norm is its census, so every
+      // iteration reads metadata-grain blocks and the norm divides as a
+      // literal — matching the operator's own 100 TB claim (corpus
+      // touched once, iterations are metadata arithmetic).
+      val g = gens.pin(gens.checkpoint(gram))
+      val gF = g.unionByName(g.filter($"i" =!= $"j")
+        .select($"j".as("i"), $"i".as("j"), $"gram_micro"))
+      var v = g.select($"i").distinct()
+        .select($"i", lit(1000000L).as("v"))
+      var m = 0L
+      for (k <- 1 to PowerIters) {
+        val raw = gens.checkpoint(
+          gF.join(v.select($"i".as("j"), $"v"), Seq("j"))
+            .select($"i",
+              floor($"gram_micro".cast("double") * $"v" / 1000000.0)
+                .cast("long").as("c"))
+            .groupBy($"i").agg(sum($"c").as("r")))
+        m = gens.fill(s"powerIteration iterate $k")(
+          raw.agg(max(abs($"r"))).head().getLong(0))
+        v = raw.select($"i",
+          floor($"r".cast("double") * 1000000.0 / math.max(m, 1L))
+            .cast("long").as("v"))
       }
-    vF.select($"i".cast("long").as("dim"), $"v".as("value"))
-      .unionByName(mF.select(lit(-1L).as("dim"), $"m".as("value")))
-      .orderBy($"dim")
+      // one row per gram dimension: a metadata-sized read
+      val dims = v.select($"i".cast("long"), $"v").take(GramDims + 1)
+      require(dims.length <= GramDims,
+        s"powerIteration: the gram has more than $GramDims dimensions")
+      dims.map(r => (r.getLong(0), r.getLong(1))) :+ ((-1L, m))
+    }
+    gram.sparkSession.createDataFrame(rows.sortBy(_._1).toSeq)
+      .toDF("dim", "value")
   }
 
   val q244PowerIterationSql: String = {

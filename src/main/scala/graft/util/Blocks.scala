@@ -2,6 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** The one way to free a frame's cached blocks.
   *
@@ -15,8 +16,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object Blocks {
 
-  /** Free each frame's blocks; `null` entries (a loop generation not
-    * yet assigned) are skipped. */
+  /** Free each frame's blocks; `null` entries are skipped. */
   def release(frames: DataFrame*): Unit = frames.foreach {
     case null => ()
     case df => df.queryExecution.analyzed match {
@@ -26,7 +26,8 @@ object Blocks {
   }
 
   /** Run an iterative operator's rounds over one [[Generations]] and
-    * free every frame persisted there on exit, also when `body` throws. */
+    * free every frame persisted or checkpointed there on exit, also
+    * when `body` throws. */
   def generations[T](body: Generations => T): T = {
     val gens = new Generations
     try body(gens) finally gens.close()
@@ -38,19 +39,42 @@ object Blocks {
     * scan (two scans of an unfilled cache in one action may compute a
     * partition twice). Only then is the superseded generation freed:
     * the CacheManager re-plans every dependent cache not yet filled.
-    * [[pin]] persists a loop-invariant frame until the loop exits.
-    * Frames are freed as persisted, never through a projection. */
+    * [[pin]] holds a loop-invariant frame until the loop exits.
+    * Frames are freed as persisted, never through a projection.
+    *
+    * A generation truncates where a round relation's lineage would
+    * otherwise grow with the round count: [[checkpoint]] materializes
+    * the frame eagerly and cuts its lineage, and is otherwise freed like
+    * a kept frame. A kept frame's logical plan embeds the previous
+    * round's, so a loop of up to 20 rounds whose input is itself a deep
+    * derivation doubles its plan per round (q221's ε-pair graph into
+    * `dedupClusters` ran the driver out of memory building one plan
+    * string), and a relation two consumers read per round is read
+    * faster off checkpoint blocks (Borůvka's candidates at sf0.1:
+    * 8.5 s against 10.3–12.4 s with lazy caches). */
   final class Generations private[Blocks] () {
     private var pinned = Vector.empty[DataFrame]
     private var live = Vector.empty[DataFrame]
     private var kept = Vector.empty[DataFrame]
 
-    def keep(df: DataFrame): DataFrame = {
-      val p = df.persist(); kept :+= p; p
+    def keep(df: DataFrame,
+        level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      val p = df.persist(level); kept :+= p; p
     }
 
+    /** Eager `localCheckpoint` at `level`: the returned frame is
+      * filled already and belongs to the current generation. */
+    def checkpoint(df: DataFrame,
+        level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+      val c = df.localCheckpoint(true, level); kept :+= c; c
+    }
+
+    /** Hold `df` until the loop exits: persisted, or, if it is this
+      * loop's own [[checkpoint]], moved out of its generation. */
     def pin(df: DataFrame): DataFrame = {
-      val p = df.persist(); pinned :+= p; p
+      val own = kept.exists(_ eq df)
+      val p = if (own) df else df.persist()
+      kept = kept.filterNot(_ eq df); pinned :+= p; p
     }
 
     /** Run `census` (job description `what`) as the action that fills

@@ -1,11 +1,12 @@
 package graft.util
 
 /** Per-JVM scratch directories: the only owner of run-private paths
-  * under /tmp. Two kinds of caller claim them: the write→read-back sink
-  * oracles (q171 audit trail, q193/q198/q267 layout round trips,
-  * q271/q272/q273 sink round trips), keyed by purpose + pid + a
-  * sanitized corpus tag, and the stream stores (drainToParquet, the
-  * upsert and heavy-hitter stores), one unique directory per call. A
+  * under /tmp. Three kinds of caller claim them: the write→read-back
+  * sink oracles (q171 audit trail, q193/q198/q267 layout round trips,
+  * q271/q272/q273 sink round trips) and Bench's private stage store,
+  * keyed by purpose + pid + a sanitized corpus tag, and the stream
+  * stores (drainToParquet, the upsert and heavy-hitter stores), one
+  * unique directory per call. A
   * corpus-keyed path means two corpora probed in one JVM never share a
   * directory (a lazily held DataFrame from the first call would
   * silently read the second corpus's files), and the pid means two

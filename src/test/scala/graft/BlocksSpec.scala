@@ -201,6 +201,17 @@ class BlocksSpec extends AnyFunSuite {
       Seq((1L, 0L), (2L, 0L), (3L, 0L), (4L, 1L), (5L, 1L), (6L, 7L))
         .toDF("vec_id", "tl"))
   }
+  // EngineSpec's set-cover corpus: doc 10 covers 5 shingles, doc 20's
+  // 3 are a subset of them, doc 30 adds the 2 that round 2 picks
+  private lazy val coverDocs = Seq(
+    (10L, "s1 s2 s3 s4 s5 s6 s7"), (20L, "s1 s2 s3 s4 s5"),
+    (30L, "t1 t2 t3 t4"), (40L, "u1 u2 u3"), (50L, "v1 v2 v3"))
+    .toDF("doc_id", "text")
+  // a 3×3 upper-triangular gram whose coupled dims 0/1 dominate: dim 0
+  // leads every iterate, so it normalizes to 10⁶ ppm
+  private lazy val gram = Seq((0, 0, 4000000L), (0, 1, 1000000L),
+    (0, 2, 0L), (1, 1, 3000000L), (1, 2, 0L), (2, 2, 1000000L))
+    .toDF("i", "j", "gram_micro")
   // a hand-solved 5-node graph; `boruvka` replays it with every id
   // past the 21-bit narrow-pack ceiling
   private lazy val mstGraph = Seq(
@@ -241,6 +252,11 @@ class BlocksSpec extends AnyFunSuite {
       ("labelPropRounds", () => VectorOps.labelPropRounds(lpAdj, lpTruth,
           Seq((1L, 0L), (4L, 1L)).toDF("vec_id", "lab")).collect(),
         rows => assert(metric(rows, "r2_correct") === 1L)),
+      ("setCoverTrace", () => TextOps.setCoverTrace(coverDocs).collect(),
+        rows => assert(metric(rows, "r2_doc") === 30L)),
+      ("powerIteration", () => VectorOps.powerIteration(gram).collect(),
+        rows => assert(rows.find(_.getLong(0) == 0L).get.getLong(1) ===
+          1000000L)),
       ("q221DensityClusters", query(VectorOps.q221DensityClusters),
         rows => assert(rows.nonEmpty)),
       ("q243LabelProp", query(VectorOps.q243LabelProp),

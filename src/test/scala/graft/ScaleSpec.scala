@@ -537,7 +537,9 @@ class ScaleSpec extends AnyFunSuite {
       // cut and the (ta, tc) contingency totals
       // +1 round 12: q286's 1-row transition-total broadcast onto the
       // 1-row entropy-rate readout
-      "operators/EventOps.scala" -> 13,
+      // (-1: q110's two node-count broadcasts are the one uniform
+      // restart of the shared pagerank step)
+      "operators/EventOps.scala" -> 12,
       // +1 round 10: q204's 1-row digit-total broadcast
       // +1 round 10: q211's 1-row exact-count broadcast beside the
       // 1-row estimate
@@ -581,20 +583,19 @@ class ScaleSpec extends AnyFunSuite {
       // aggregate (the delta/index boundary as a scalar join)
       // +1 round 12: q278's 1-row bigram-type-total broadcast onto the
       // bigram-type-grain KN relation
-      // +2 round 12: q281's 1-row node-count broadcast — the q110
-      // teleport constant, one site in r0 and one inside the fold
+      // (q281's two node-count broadcasts moved into EventOps.pagerank)
       // +4 round 12: q283's broadcasts — 1-row vocab + 1-row train
       // total onto the |langs| model spine, the |langs|-row spine onto
       // the test docs, and the hazard twin's 1-row vocab
-      // +1 round 12: q284's 1-row universe total onto the per-round
-      // coverage census
-      "operators/TextOps.scala" -> 39,
+      // (q284's universe total is a census literal of its generation
+      // loop)
+      "operators/TextOps.scala" -> 36,
       // +1 round 10: q220's NumCells-row centroid broadcast
-      // +1 round 10: q244's per-iteration 1-row L∞-norm broadcast
-      // (one source site inside the fold)
+      // (q244's per-iteration L∞ norm is a census literal of its
+      // generation loop)
       // +1 round 10: q248's per-round 1-row newest-center broadcast
       // (one source site inside the fold)
-      "operators/VectorOps.scala" -> 8)
+      "operators/VectorOps.scala" -> 7)
     assert(countSites("crossJoin") === crossJoinBudget,
       s"crossJoin sites drifted (found ${countSites("crossJoin")}): " +
         "argue the new site is broadcast metadata-sized, then register it")
@@ -625,22 +626,29 @@ class ScaleSpec extends AnyFunSuite {
     val persistBudget = Map(
       "util/Blocks.scala" -> 2,
       // q243's cell-capped points (filled by the truth checkpoint's one
-      // scan), q191's word symbols (bpeTrainFromWords) x2, q284's
-      // distinct incidence; boruvkaTrace's serialized edge list
+      // scan), q191's word symbols (bpeTrainFromWords) x2
       "operators/VectorOps.scala" -> 1,
-      "operators/TextOps.scala" -> 3,
-      "operators/Relational.scala" -> 1)
+      "operators/TextOps.scala" -> 2)
     assert(countSites("\\.persist\\(") === persistBudget,
       s"persist sites drifted (found ${countSites("\\.persist\\(")}): " +
         "persist round relations through Blocks.generations")
     val checkpointBudget = Map(
-      "operators/Relational.scala" -> 10,
-      "operators/TextOps.scala" -> 16,
-      "operators/VectorOps.scala" -> 10)
+      // the generation helper's checkpoint verb
+      "util/Blocks.scala" -> 1,
+      "operators/Relational.scala" -> 3,
+      "operators/TextOps.scala" -> 11,
+      "operators/VectorOps.scala" -> 8)
     assert(countSites("localCheckpoint\\(true") === checkpointBudget,
       s"eager checkpoint sites drifted (found " +
         s"${countSites("localCheckpoint\\(true")}): persist round " +
         "relations through Blocks.generations")
+    // an operator frees its round relations through its generations
+    // loop, never by hand
+    assert(countSites("Blocks\\.release\\(").keySet
+        .filter(_.startsWith("operators/")).isEmpty,
+      s"Blocks.release sites in operators (found " +
+        s"${countSites("Blocks\\.release\\(")}): free round relations " +
+        "through Blocks.generations")
     // memory sinks materialize their whole output table ON THE DRIVER —
     // the round-8 q165 escape route around the collect() ratchet. Only
     // streams whose output is a bounded-cardinality AGGREGATE may use
@@ -696,9 +704,8 @@ class ScaleSpec extends AnyFunSuite {
       "operators/Staged.scala" -> (1,
         "default stage-store root (graft.stage.dir), shared across runs"),
       "Harness.scala" -> (1, "the session's warehouse dir"),
-      "Bench.scala" -> (3,
-        "the contract's JSON output (canonical and sf-tagged) and its " +
-          "private per-run stage store"),
+      "Bench.scala" -> (2,
+        "the contract's JSON output (canonical and sf-tagged)"),
       "Pipeline.scala" -> (1, "default output dir (argument override)"),
       "streaming/EventStream.scala" -> (1,
         "ckptDir's default base (SPARK_GRAFT_CKPT_BASE override)"))
